@@ -125,8 +125,14 @@ object Upsert {
     val exists = fs.exists(fsPath)
 
     if (!exists) {
+      // Created like a swap: staged whole at `__new`, then renamed in. A
+      // write cancelled in place would leave an empty `path` that every
+      // later call takes for a table without a schema.
+      val newP = new org.apache.hadoop.fs.Path(path + "__new")
       val w = delta.write.mode(SaveMode.Overwrite)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(newP.toString)
+      if (!fs.rename(newP, fsPath))
+        throw new java.io.IOException(s"create failed: $newP -> $fsPath")
       return
     }
 

@@ -29,66 +29,130 @@ final class SquarePipelines(
 
   private def table(name: String): String = s"$warehouseDir/$name"
 
+  private def upsert(spark: SparkSession, name: String, rows: DataFrame, keys: String*): Unit =
+    Upsert.upsertParquet(spark, table(name), rows, keys)
+
+  private def windowedPayments(spark: SparkSession, window: Option[TimeWindow]): DataFrame =
+    window.fold(source.payments(spark))(w => w.filter(source.payments(spark), "created_at"))
+
+  // The write steps: each lands one table and returns nothing, so
+  // `runAll` pays for no read-back of what it just wrote.
+
+  private def writePayments(spark: SparkSession, window: Option[TimeWindow]): Unit =
+    upsert(spark, "pos_payments", SquareOps.payments(windowedPayments(spark, window), tenant),
+      "tenant_id", "provider", "payment_id")
+
+  private def writeOrderItems(spark: SparkSession, window: Option[TimeWindow]): Unit = {
+    val payRows = SquareOps.payments(windowedPayments(spark, window), tenant)
+    upsert(spark, "pos_order_items", SquareOps.orderItems(source.orders(spark), payRows, tenant),
+      "tenant_id", "provider", "order_id", "line_item_uid")
+  }
+
+  private def writeCatalog(spark: SparkSession): Unit =
+    upsert(spark, "pos_catalog", SquareOps.catalogRows(source.catalogObjects(spark), tenant),
+      "tenant_id", "provider", "provider_account_id", "catalog_object_id")
+
+  private def writeInventory(spark: SparkSession): Unit =
+    upsert(spark, "pos_inventory",
+      SquareOps.inventoryRows(source.inventoryCounts(spark), tenant)
+        .withColumn("updated_at", current_timestamp()),
+      "tenant_id", "provider", "provider_account_id", "catalog_object_id", "location_id", "state")
+
+  private def writeCategories(spark: SparkSession): Unit =
+    upsert(spark, "pos_categories",
+      SquareOps.categoryRows(source.categories(spark), tenant)
+        .withColumn("updated_at", current_timestamp()),
+      "tenant_id", "provider", "provider_account_id", "category_id")
+
+  private def writeLocations(spark: SparkSession): Unit =
+    upsert(spark, "pos_locations",
+      SquareOps.locationRows(source.locations(spark), tenant)
+        .withColumn("updated_at", current_timestamp()),
+      "tenant_id", "provider", "provider_account_id", "location_id")
+
   def runPayments(spark: SparkSession, window: Option[TimeWindow] = None): DataFrame = {
-    val src = window.fold(source.payments(spark))(w => w.filter(source.payments(spark), "created_at"))
-    val rows = SquareOps.payments(src, tenant)
-    Upsert.upsertParquet(spark, table("pos_payments"), rows,
-      Seq("tenant_id", "provider", "payment_id"))
+    writePayments(spark, window)
     spark.read.parquet(table("pos_payments"))
   }
 
   def runOrderItems(spark: SparkSession, window: Option[TimeWindow] = None): DataFrame = {
-    val pay = window.fold(source.payments(spark))(w => w.filter(source.payments(spark), "created_at"))
-    val payRows = SquareOps.payments(pay, tenant)
-    val rows = SquareOps.orderItems(source.orders(spark), payRows, tenant)
-    Upsert.upsertParquet(spark, table("pos_order_items"), rows,
-      Seq("tenant_id", "provider", "order_id", "line_item_uid"))
+    writeOrderItems(spark, window)
     spark.read.parquet(table("pos_order_items"))
   }
 
   def runCatalog(spark: SparkSession): DataFrame = {
-    val rows = SquareOps.catalogRows(source.catalogObjects(spark), tenant)
-    Upsert.upsertParquet(spark, table("pos_catalog"), rows,
-      Seq("tenant_id", "provider", "provider_account_id", "catalog_object_id"))
+    writeCatalog(spark)
     spark.read.parquet(table("pos_catalog"))
   }
 
   def runInventory(spark: SparkSession): DataFrame = {
-    val rows = SquareOps.inventoryRows(source.inventoryCounts(spark), tenant)
-      .withColumn("updated_at", current_timestamp())
-    Upsert.upsertParquet(spark, table("pos_inventory"), rows,
-      Seq("tenant_id", "provider", "provider_account_id",
-        "catalog_object_id", "location_id", "state"))
+    writeInventory(spark)
     spark.read.parquet(table("pos_inventory"))
   }
 
   def runCategories(spark: SparkSession): DataFrame = {
-    val rows = SquareOps.categoryRows(source.categories(spark), tenant)
-      .withColumn("updated_at", current_timestamp())
-    Upsert.upsertParquet(spark, table("pos_categories"), rows,
-      Seq("tenant_id", "provider", "provider_account_id", "category_id"))
+    writeCategories(spark)
     spark.read.parquet(table("pos_categories"))
   }
 
   def runLocations(spark: SparkSession): DataFrame = {
-    val rows = SquareOps.locationRows(source.locations(spark), tenant)
-      .withColumn("updated_at", current_timestamp())
-    Upsert.upsertParquet(spark, table("pos_locations"), rows,
-      Seq("tenant_id", "provider", "provider_account_id", "location_id"))
+    writeLocations(spark)
     spark.read.parquet(table("pos_locations"))
   }
 
-  /** The full hourly run, in an order that (unlike the reference's
-    * workflow, SURVEY.md §3 trace note) lands catalog before order items
-    * so the sku join could be satisfied.
+  /** The full hourly run: all six pipelines at once. The reference runs
+    * them one after another (SURVEY.md §3 trace note), but they share
+    * nothing, so their order cannot change a result:
+    *   - each writes only its own table under `warehouseDir`, and the
+    *     upsert's staged rewrite, swap and recovery touch only that
+    *     table's `path`, `path__new`, `path__old` and `path__stage`;
+    *   - each reads only the source — order items derive their payments
+    *     from the source, not from `pos_payments`, and join no catalog.
+    * Run together, the small dimension pipelines fill the slots the fact
+    * pipelines leave idle, on one box or on a cluster.
+    *
+    * Job group: the caller's Spark local properties (job group, job tags,
+    * scheduler pool) reach every pipeline's jobs, so a caller's
+    * `cancelJobGroup` cancels the whole run. Returns or throws only after
+    * every pipeline has finished, since the next run writes the same
+    * tables; a failure is the first error, with the others suppressed.
     */
-  def runAll(spark: SparkSession, window: Option[TimeWindow] = None): Unit = {
-    runPayments(spark, window)
-    runCatalog(spark)
-    runOrderItems(spark, window)
-    runInventory(spark)
-    runCategories(spark)
-    runLocations(spark)
+  def runAll(spark: SparkSession, window: Option[TimeWindow] = None): Unit =
+    SquarePipelines.runConcurrently(Seq(
+      "pos_payments" -> (() => writePayments(spark, window)),
+      "pos_order_items" -> (() => writeOrderItems(spark, window)),
+      "pos_catalog" -> (() => writeCatalog(spark)),
+      "pos_inventory" -> (() => writeInventory(spark)),
+      "pos_categories" -> (() => writeCategories(spark)),
+      "pos_locations" -> (() => writeLocations(spark))))
+}
+
+object SquarePipelines {
+
+  /** Runs each step on a thread of its own and waits for all of them.
+    * The threads are made here, per call, by the calling thread: Spark
+    * keeps local properties in an `InheritableThreadLocal` that a new
+    * thread copies from the thread that creates it, so a pooled thread
+    * made earlier would miss the caller's job group. An interrupt of the
+    * caller does not cut the wait short (a step may still be writing);
+    * it is restored once every step is done.
+    */
+  private def runConcurrently(steps: Seq[(String, () => Unit)]): Unit = {
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = steps.map { case (name, step) =>
+      val t = new Thread(() => try step() catch { case e: Throwable => errors.add(e) }, s"graft-$name")
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    Option(errors.poll()).foreach { first =>
+      errors.forEach(e => first.addSuppressed(e))
+      throw first
+    }
   }
 }
 

@@ -1,12 +1,18 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
-import org.apache.spark.sql.Row
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+import org.apache.spark.graftspec.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tenant
 import graft.operators.SquareOps
 import graft.pipeline.{SquarePipelines, TimeWindow}
-import graft.sources.JsonlSquareSource
+import graft.sources.{JsonlSquareSource, SquareSource}
 
 /** Golden/edge-case coverage of the six Square pipelines over the JSONL
   * fixtures (FIXTURES.md). Each assertion cites the reference behavior
@@ -155,5 +161,105 @@ class SquarePipelineSpec extends SparkSpec {
     val tbl = spark.read.parquet(s"${p.warehouseDir}/pos_payments")
     assert(tbl.count() === 5)
     assert(tbl.select("payment_id").distinct().count() === 5)
+  }
+
+  // ---- the concurrent hourly run --------------------------------------
+
+  private val tables = Seq("pos_payments", "pos_order_items", "pos_catalog",
+    "pos_inventory", "pos_categories", "pos_locations")
+
+  /** Per table, the sorted row hashes over every column but the
+    * write-time `updated_at` stamp. */
+  private def content(p: SquarePipelines, names: Seq[String] = tables): Map[String, Seq[Long]] =
+    names.map { n =>
+      val t = spark.read.parquet(s"${p.warehouseDir}/$n").drop("updated_at")
+      n -> t.select(xxhash64(t.columns.toIndexedSeq.map(col): _*)).collect().map(_.getLong(0)).sorted.toSeq
+    }.toMap
+
+  /** Staging directories of an upsert that did not finish. */
+  private def leftovers(p: SquarePipelines): Seq[String] =
+    new File(p.warehouseDir).list().toSeq.filter(_.matches(".*__(new|old|stage)"))
+
+  private def noActiveJobs(): Boolean = {
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.statusTracker.getActiveJobIds.isEmpty
+  }
+
+  test("runAll lands the same tables as the six pipelines run one by one") {
+    // pay-1, pay-2 and pay-5 fall in the window; pay-3 and pay-6 before it
+    val window = Some(TimeWindow("2024-03-01T09:45:00Z", "2024-03-02T00:00:00Z"))
+    val together = freshPipelines()
+    together.runAll(spark, window)
+    val oneByOne = freshPipelines()
+    oneByOne.runPayments(spark, window)
+    oneByOne.runCatalog(spark)
+    oneByOne.runOrderItems(spark, window)
+    oneByOne.runInventory(spark)
+    oneByOne.runCategories(spark)
+    oneByOne.runLocations(spark)
+    val got = content(together)
+    assert(got("pos_payments").size === 3)
+    assert(got === content(oneByOne))
+  }
+
+  test("a caller's cancelJobGroup reaches every pipeline; a rerun converges") {
+    val sc = spark.sparkContext
+    val expected = freshPipelines()
+    expected.runAll(spark)
+    val p = freshPipelines()
+    // first while runAll creates the tables, then while it merges into them
+    Seq("create", "merge").foreach { phase =>
+      val group = s"square-spec-cancel-$phase"
+      val groups = new ConcurrentLinkedQueue[String]()
+      val started = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+          started.countDown()
+        }
+      }
+      sc.addSparkListener(listener)
+      @volatile var outcome: Try[Unit] = null
+      val caller = new Thread(() => {
+        sc.setJobGroup(group, "SquarePipelineSpec cancel", interruptOnCancel = true)
+        outcome = Try(p.runAll(spark))
+      })
+      try {
+        caller.start()
+        assert(started.await(60, TimeUnit.SECONDS), s"$phase: no job started")
+        // like the watchdogs: cancel repeatedly, so no between-jobs gap escapes
+        while (caller.isAlive) { sc.cancelJobGroup(group); caller.join(10) }
+        assert(outcome.isFailure, s"$phase: runAll must throw when its group is cancelled")
+        assert(noActiveJobs(), s"$phase: a pipeline job outlived runAll")
+        assert(groups.asScala.toSet === Set(group), s"$phase: every job runs in the caller's group")
+      } finally sc.removeSparkListener(listener)
+      p.runAll(spark)
+      assert(content(p) === content(expected), s"$phase: the rerun must converge")
+      assert(leftovers(p).isEmpty)
+    }
+  }
+
+  test("one failing pipeline: runAll rethrows its error after the other five commit") {
+    val planted = new IllegalStateException("planted: locations feed unavailable")
+    val failing = new SquareSource {
+      def payments(s: SparkSession): DataFrame = source.payments(s)
+      def orders(s: SparkSession): DataFrame = source.orders(s)
+      def catalogObjects(s: SparkSession): DataFrame = source.catalogObjects(s)
+      def inventoryCounts(s: SparkSession): DataFrame = source.inventoryCounts(s)
+      // starts well after locations has failed: runAll must still wait for it
+      def categories(s: SparkSession): DataFrame = { Thread.sleep(500); source.categories(s) }
+      def locations(s: SparkSession): DataFrame = throw planted
+    }
+    val p = new SquarePipelines(failing, Files.createTempDirectory("graft-sq").toString, tenant)
+    val thrown = intercept[IllegalStateException](p.runAll(spark))
+    assert(thrown eq planted)
+    val committed = tables.filterNot(_ == "pos_locations")
+    committed.foreach(n => assert(new File(s"${p.warehouseDir}/$n/_SUCCESS").exists, s"$n not committed"))
+    assert(!new File(s"${p.warehouseDir}/pos_locations").exists)
+    assert(leftovers(p).isEmpty)
+    assert(noActiveJobs())
+    val expected = freshPipelines()
+    expected.runAll(spark)
+    assert(content(p, committed) === content(expected, committed))
   }
 }
