@@ -8,20 +8,25 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.functions.{col, unix_micros, when}
 import org.apache.spark.sql.graftbridge
 
-/** Native as-of join: the full custom-operator tier (SURVEY.md §7.4 /
-  * extension ladder step (c)) — a LogicalPlan node, a planner Strategy,
-  * and a physical BinaryExecNode, injectable via SparkSessionExtensions.
+/** As-of (point-in-time) join: the full custom-operator tier (SURVEY.md
+  * §7.4 / extension ladder step (c)) — a LogicalPlan node, a planner
+  * Strategy, and a physical BinaryExecNode, injectable via
+  * SparkSessionExtensions. graft's only as-of join.
   *
-  * Why a physical operator when graft.operators.AsOfJoin already
-  * composes one from built-ins: the composed form unions both sides
-  * (padding every row with the other side's nulls) and runs a window
-  * over the union — 2× the shuffled bytes and a running-`last` state per
-  * carried column. This operator hash-partitions each side by its own
-  * key, sorts by (key, ts), and does ONE streaming merge pass per
-  * partition: for every left row, the most recent right row with
-  * rightTs <= leftTs (inclusive ties, same rule as DuckDB ASOF).
+  * Why a physical operator: Spark has no as-of join, and composing one
+  * from built-ins means unioning both sides (padding every row with the
+  * other side's nulls) and carrying the latest right row forward with a
+  * window over the union. This operator instead hash-partitions each
+  * side by its own key, sorts by (key, ts), and does ONE streaming merge
+  * pass per partition: for every left row, the most recent right row
+  * with rightTs <= leftTs (inclusive ties, same rule as DuckDB ASOF), or
+  * with `forward` the earliest with rightTs >= leftTs. The whole matched
+  * right row is emitted, so a NULL field of it stays NULL. Like DuckDB,
+  * a NULL key or timestamp never matches: such right rows are skipped
+  * and such left rows get a NULL right side.
   *
   * The planner contract does the heavy lifting: requiredChildDistribution
   * + requiredChildOrdering make EnsureRequirements insert exactly the
@@ -75,20 +80,18 @@ case class AsOfJoinExec(
     Seq(SortOrder(leftKey, Ascending), SortOrder(leftTs, Ascending))
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val lKeyExpr = leftKey
-    val rKeyExpr = rightKey
-    val lTsExpr = leftTs
-    val rTsExpr = rightTs
+    val lKeyTs = Seq(leftKey, leftTs)
+    val rKeyTs = Seq(rightKey, rightTs)
+    val keyType = leftKey.dataType
+    val tsType = leftTs.dataType
     val lOut = left.output
     val rOut = right.output
-    val keyOrdering = TypeUtils.getInterpretedOrdering(leftKey.dataType)
-    val tsOrdering = TypeUtils.getInterpretedOrdering(leftTs.dataType)
+    val keyOrdering = TypeUtils.getInterpretedOrdering(keyType)
+    val tsOrdering = TypeUtils.getInterpretedOrdering(tsType)
 
     left.execute().zipPartitions(right.execute()) { (lIt, rIt) =>
-      val lKey = UnsafeProjection.create(Seq(lKeyExpr), lOut)
-      val rKey = UnsafeProjection.create(Seq(rKeyExpr), rOut)
-      val lTs = UnsafeProjection.create(Seq(lTsExpr), lOut)
-      val rTs = UnsafeProjection.create(Seq(rTsExpr), rOut)
+      val lProj = UnsafeProjection.create(lKeyTs, lOut)
+      val rProj = UnsafeProjection.create(rKeyTs, rOut)
       val nullRight = new GenericInternalRow(rOut.length)
       val joined = new JoinedRow
       // Bind right attributes nullable: unmatched left rows project
@@ -107,16 +110,25 @@ case class AsOfJoinExec(
         private var matched: InternalRow = _        // last right row taken for current key
         private var matchedKey: Any = _
 
-        private def advanceRight(): Unit =
-          if (rIt.hasNext) {
-            rHead = rIt.next().copy()
-            // UnsafeProjection reuses its buffer: for non-primitive key
-            // types .get() returns a view into it, which the next
-            // advanceRight() overwrites — copy the values out so
-            // matchedKey stays valid across iterations.
-            rHeadKey = InternalRow.copyValue(rKey(rHead).get(0, rKeyExpr.dataType))
-            rHeadTs = InternalRow.copyValue(rTs(rHead).get(0, rTsExpr.dataType))
-          } else rHead = null
+        // Right rows with a NULL key or ts can never match, so they are
+        // skipped here (the orderings would read a NULL long as 0 and
+        // throw on a NULL string).
+        private def advanceRight(): Unit = {
+          rHead = null
+          while (rHead == null && rIt.hasNext) {
+            val r = rIt.next()
+            val kt = rProj(r)
+            if (!kt.anyNull) {
+              rHead = r.copy()
+              // UnsafeProjection reuses its buffer: for non-primitive key
+              // types .get() returns a view into it, which the next
+              // advanceRight() overwrites — copy the values out so
+              // matchedKey stays valid across iterations.
+              rHeadKey = InternalRow.copyValue(kt.get(0, keyType))
+              rHeadTs = InternalRow.copyValue(kt.get(1, tsType))
+            }
+          }
+        }
 
         advanceRight()
 
@@ -124,10 +136,12 @@ case class AsOfJoinExec(
 
         override def next(): InternalRow = {
           val l = lIt.next()
-          val k = lKey(l).get(0, lKeyExpr.dataType)
-          val t = lTs(l).get(0, lTsExpr.dataType)
+          val kt = lProj(l)
+          val k = kt.get(0, keyType)
+          val t = kt.get(1, tsType)
           val rightSide =
-            if (forward) {
+            if (kt.anyNull) nullRight
+            else if (forward) {
               // FORWARD direction: earliest right with rts >= lts.
               // Consume right rows strictly behind the current left
               // (rkey < k, or rkey == k && rts < t) — left ts ascends, so
@@ -186,12 +200,11 @@ object AsOfJoinNative {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
 
-  /** Native as-of join; same semantics as graft.operators.AsOfJoin
-    * (latest right with rightTs <= leftTs per key, inclusive ties,
-    * left-preserving). With `forward = true` the direction flips:
-    * EARLIEST right with rightTs >= leftTs (DuckDB's `l.ts <= r.ts`
-    * ASOF shape) — the "next event after" point-in-time lookup.
-    * Right's key/ts columns are kept in the output. */
+  /** As-of join: for every left row, the latest right row with the same
+    * key and rightTs <= leftTs (inclusive ties, left-preserving). With
+    * `forward = true` the direction flips: EARLIEST right with rightTs >=
+    * leftTs (DuckDB's `l.ts <= r.ts` ASOF shape) — the "next event after"
+    * point-in-time lookup. Right's key/ts columns are kept in the output. */
   def asofJoin(
       left: DataFrame,
       right: DataFrame,
@@ -211,6 +224,27 @@ object AsOfJoinNative {
       lPlan, rPlan,
       resolve(lPlan, leftKey), resolve(rPlan, rightKey),
       resolve(lPlan, leftTs), resolve(rPlan, rightTs), forward))
+  }
+
+  /** [[asofJoin]] with a MATCH TOLERANCE: the latest right row at most
+    * `toleranceSeconds` old still matches; anything staler is treated as
+    * no match — the market-data/feature-freshness rule ("use the last
+    * quote, unless it's gone stale"). One projection over the join nulls
+    * every right column (key and ts included) of a stale or missing
+    * match: no second join, no extra shuffle. Selects by name, so right
+    * column names must differ from left's. */
+  def asofJoinTolerance(
+      left: DataFrame,
+      right: DataFrame,
+      leftKey: String,
+      rightKey: String,
+      leftTs: String,
+      rightTs: String,
+      toleranceSeconds: Long): DataFrame = {
+    val fresh =
+      unix_micros(col(leftTs)) - unix_micros(col(rightTs)) <= toleranceSeconds * 1000000L
+    asofJoin(left, right, leftKey, rightKey, leftTs, rightTs)
+      .select(left.columns.map(col) ++ right.columns.map(c => when(fresh, col(c)).as(c)): _*)
   }
 }
 

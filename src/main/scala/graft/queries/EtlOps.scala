@@ -465,10 +465,10 @@ object EtlOps {
   // feature table strictly completed before the label's timestamp (the
   // feature-store discipline that keeps future signal out of training
   // rows; snapshots stamp day_end, so a label can only see days that
-  // closed before it). Two as-of joins chain over AsOfJoin (e4's
-  // operator: co-partitioned sort + one last(ignoreNulls) pass carrying
-  // the whole snapshot row as a struct); feature snapshots are built by
-  // per-user cumulative windows over partial-aggregated daily rows.
+  // closed before it). Two as-of joins chain over AsOfJoinExec (e4's
+  // operator: co-partitioned sort + one merge pass emitting the whole
+  // matched snapshot row); feature snapshots are built by per-user
+  // cumulative windows over partial-aggregated daily rows.
   // Earliest-day labels correctly surface NULL features. The oracle runs
   // DuckDB's native chained ASOF LEFT JOINs. Scale: snapshot tables are
   // days × users (not events), each as-of is one hash partition on
@@ -493,7 +493,7 @@ object EtlOps {
       |FROM lbl l
       |ASOF LEFT JOIN sp ON l.user_id = sp.user_id AND l.lts >= sp.snap_a
       |ASOF LEFT JOIN ck ON l.user_id = ck.user_id AND l.lts >= ck.snap_b""".stripMargin) { (s, d) =>
-    import graft.operators.AsOfJoin
+    import graft.plans.AsOfJoinNative
     import org.apache.spark.sql.expressions.Window
     val ev = T.events(s, d)
     val wCum = Window.partitionBy(col("user_id")).orderBy(col("day"))
@@ -501,17 +501,17 @@ object EtlOps {
     val sp = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
       .agg(sum((col("value").cast("decimal(14,2)") * 100).cast("long")).as("dv"))
-      .select(col("user_id"), (col("day") + expr("INTERVAL 1 DAY")).as("snap_a"),
+      .select(col("user_id").as("sp_user"), (col("day") + expr("INTERVAL 1 DAY")).as("snap_a"),
         sum(col("dv")).over(wCum).cast("long").as("spend_cents"))
     val ck = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("dc"))
-      .select(col("user_id"), (col("day") + expr("INTERVAL 1 DAY")).as("snap_b"),
+      .select(col("user_id").as("ck_user"), (col("day") + expr("INTERVAL 1 DAY")).as("snap_b"),
         sum(col("dc")).over(wCum).cast("long").as("clicks"))
     val lbl = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts").as("lts"))
-    val withSpend = AsOfJoin.asofJoin(lbl, sp, "user_id", "lts", "snap_a")
-    AsOfJoin.asofJoin(withSpend, ck, "user_id", "lts", "snap_b")
+    val withSpend = AsOfJoinNative.asofJoin(lbl, sp, "user_id", "sp_user", "lts", "snap_a")
+    AsOfJoinNative.asofJoin(withSpend, ck, "user_id", "ck_user", "lts", "snap_b")
       .select(col("event_id"), col("user_id"), col("spend_cents"), col("clicks"))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables => T}
-import graft.operators.AsOfJoin
+import graft.plans.AsOfJoinNative
 
 /** Event-stream analytics in their batch form — the same logical
   * transforms graft.streaming.EventStreams runs incrementally with
@@ -168,10 +168,11 @@ object Events {
   }
 
   // --- e4_asof_join: point-in-time join — each purchase matched to the
-  // most recent signup (same user, signup_ts <= purchase_ts). Spark side
-  // is the composed single-shuffle AsOfJoin operator; DuckDB states it
-  // natively with ASOF LEFT JOIN. Timestamps compared at µs (Spark's
-  // native precision; the oracle casts ns→µs, which floors identically).
+  // most recent signup (same user, signup_ts <= purchase_ts) by the
+  // AsOfJoinExec merge pass over co-partitioned sorted children; DuckDB
+  // states it natively with ASOF LEFT JOIN. Timestamps compared at µs
+  // (Spark's native precision; the oracle casts ns→µs, which floors
+  // identically). ---
   val e4AsofJoin = QueryDef.sql(
     "e4_asof_join",
     """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
@@ -184,8 +185,8 @@ object Events {
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("pts"))
     val signups = ev.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("ts").as("sts"), col("event_id").as("signup_id"))
-    AsOfJoin.asofJoin(purchases, signups, "user_id", "pts", "sts")
+      .select(col("user_id").as("s_user"), col("ts").as("sts"), col("event_id").as("signup_id"))
+    AsOfJoinNative.asofJoin(purchases, signups, "user_id", "s_user", "pts", "sts")
       .select(col("purchase_id"), col("user_id"), col("signup_id"))
   }
 
@@ -193,11 +194,10 @@ object Events {
   // attribute each purchase to the user's latest signup ONLY if it is
   // at most 72 h old (staler matches are no-matches: the market-data /
   // feature-staleness rule e4's unbounded lookback can't express).
-  // Same single-shuffle union+window plan; the tolerance is one
-  // post-filter on the carried match timestamp. Oracle: DuckDB's
-  // native ASOF finds the greatest match, then the identical staleness
-  // CASE nulls it — so the gate pins both the match choice AND the
-  // freshness cut. ---
+  // Same merge pass as e4; the tolerance is one projection over the
+  // matched timestamp. Oracle: DuckDB's native ASOF finds the greatest
+  // match, then the identical staleness CASE nulls it — so the gate pins
+  // both the match choice AND the freshness cut. ---
   val e4eAsofTolerance = QueryDef.sql(
     "e4e_asof_tolerance",
     """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
@@ -217,39 +217,21 @@ object Events {
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("pts"))
     val signups = ev.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("ts").as("sts"), col("event_id").as("signup_id"))
-    AsOfJoin.asofJoinTolerance(purchases, signups, "user_id", "pts", "sts",
+      .select(col("user_id").as("s_user"), col("ts").as("sts"), col("event_id").as("signup_id"))
+    AsOfJoinNative.asofJoinTolerance(purchases, signups, "user_id", "s_user", "pts", "sts",
         toleranceSeconds = 72 * 3600)
       .select(col("purchase_id"), col("user_id"), col("signup_id"),
         col("signup_id").isNotNull.as("fresh"))
   }
 
-  // --- e4b_asof_native: the same point-in-time join through the custom
-  // LogicalPlan + Strategy + AsOfJoinExec physical operator (single
-  // merge pass over co-partitioned sorted children). Shares e4's native
-  // DuckDB ASOF oracle: the custom operator must match bit-for-bit. ---
-  val e4bAsofNative = QueryDef.sql(
-    "e4b_asof_native",
-    """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-      |           FROM events WHERE event_type = 'purchase'),
-      |s AS (SELECT event_id AS signup_id, user_id, CAST(ts AS TIMESTAMP) AS sts
-      |      FROM events WHERE event_type = 'signup')
-      |SELECT p.purchase_id, p.user_id, s.signup_id
-      |FROM p ASOF LEFT JOIN s ON p.user_id = s.user_id AND p.pts >= s.sts""".stripMargin) { (sp, d) =>
-    val ev = T.events(sp, d)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("pts"))
-    val signups = ev.filter(col("event_type") === "signup")
-      .select(col("user_id").as("s_user"), col("ts").as("sts"), col("event_id").as("signup_id"))
-    graft.plans.AsOfJoinNative
-      .asofJoin(purchases, signups, "user_id", "s_user", "pts", "sts")
-      .select(col("purchase_id"), col("user_id"), col("signup_id"))
-  }
+  // --- e4b_asof_native: e4 under its own registry name (same operator,
+  // same oracle). ---
+  val e4bAsofNative = e4AsofJoin.copy(name = "e4b_asof_native")
 
   // --- e4c_asof_forward: the FORWARD as-of direction through the same
   // native operator — for each error event, the user's NEXT purchase
   // (error→recovery lookup; DuckDB's `l.ts <= r.ts` ASOF shape). Same
-  // single merge pass over co-partitioned sorted children as e4b, but
+  // single merge pass over co-partitioned sorted children as e4, but
   // the surviving right head is shared, not consumed, on match — one
   // future row answers every left row in its gap. Gap arithmetic is the
   // µs-exact recipe: epoch_us (DuckDB) vs unix_micros (Spark) on the
@@ -269,7 +251,7 @@ object Events {
       .select(col("event_id").as("error_id"), col("user_id"), col("ts").as("ets"))
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("pts"), col("event_id").as("purchase_id"))
-    graft.plans.AsOfJoinNative
+    AsOfJoinNative
       .asofJoin(errors, purchases, "user_id", "p_user", "ets", "pts", forward = true)
       .select(col("error_id"), col("user_id"), col("purchase_id"),
         (unix_micros(col("pts")) - unix_micros(col("ets"))).as("gap_us"))

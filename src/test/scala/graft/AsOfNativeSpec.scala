@@ -1,34 +1,41 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.AsOfJoin
 import graft.plans.AsOfJoinNative
 
-/** Native (LogicalPlan+Strategy+Exec) as-of join must agree exactly with
-  * the composed union+window operator, and plan as one merge with two
-  * exchanges.
+/** The as-of join (LogicalPlan+Strategy+Exec): both directions against
+  * hand-built edge cases and a plain left-outer-join reference on real
+  * events, NULL semantics, the tolerance wrapper, and the planned shape
+  * (one merge with two exchanges).
   */
 class AsOfNativeSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
 
-  test("native == composed on hand-built edge cases") {
+  test("backward direction: latest right at-or-before each left row, per key") {
     val left = Seq(
       (1L, ts(10), "L-a"), (1L, ts(30), "L-b"), (1L, ts(5), "L-early"),
-      (2L, ts(20), "L-c"), (3L, ts(50), "L-nokey"))
+      (2L, ts(20), "L-c"), (3L, ts(50), "L-nokey"), (4L, ts(30), "L-carry"))
       .toDF("k", "lts", "lval")
     val right = Seq(
-      (1L, ts(10), "R1"), (1L, ts(25), "R2"), (2L, ts(5), "R3"), (9L, ts(1), "R-unused"))
-      .toDF("rk", "rts", "rval")
+      (1L, ts(10), Option("R1"), 1L), (1L, ts(25), Option("R2"), 2L),
+      (2L, ts(5), Option("R3"), 3L), (9L, ts(1), Option("R-unused"), 9L),
+      (4L, ts(10), Option("R4"), 5L), (4L, ts(25), None, 7L)) // L-carry's match; rval NULL
+      .toDF("rk", "rts", "rval", "rx")
     val native = AsOfJoinNative.asofJoin(left, right, "k", "rk", "lts", "rts")
-      .select("lval", "rval").as[(String, String)].collect().toMap
-    assert(native("L-a") === "R1")      // inclusive tie
-    assert(native("L-b") === "R2")
-    assert(native("L-early") === null)
-    assert(native("L-c") === "R3")
-    assert(native("L-nokey") === null)
+      .select("lval", "rval", "rx").as[(String, String, Option[Long])].collect()
+      .map { case (l, r, x) => l -> (r, x) }.toMap
+    assert(native("L-a") === ("R1", Some(1L)))      // inclusive tie
+    assert(native("L-b") === ("R2", Some(2L)))
+    assert(native("L-early") === (null, None))
+    assert(native("L-c") === ("R3", Some(3L)))
+    assert(native("L-nokey") === (null, None))
+    // whole-row carry: a NULL field of the matched right row stays NULL
+    // instead of taking the prior row's value
+    assert(native("L-carry") === (null, Some(7L)))
   }
 
   test("forward direction: earliest right at-or-after each left row, per key") {
@@ -69,7 +76,7 @@ class AsOfNativeSpec extends SparkSpec {
     assert(native.exceptAll(ref).isEmpty && ref.exceptAll(native).isEmpty)
   }
 
-  test("native == composed on real events at sf0.001 (20k-scale at sf0.1 covered by drive)") {
+  test("backward agrees with the batch latest-past-row formulation on real events") {
     val ev = Tables.events(spark, sfDir)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("pts"))
@@ -77,13 +84,62 @@ class AsOfNativeSpec extends SparkSpec {
       .select(col("user_id").as("s_user"), col("ts").as("sts"), col("event_id").as("signup_id"))
     val native = AsOfJoinNative.asofJoin(p, sgn, "user_id", "s_user", "pts", "sts")
       .select(col("purchase_id"), col("signup_id"))
-    val composedRight = ev.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("ts").as("sts"), col("event_id").as("signup_id"))
-    val composed = AsOfJoin.asofJoin(p, composedRight, "user_id", "pts", "sts")
-      .select(col("purchase_id"), col("signup_id"))
+    // reference: max (sts, signup_id) struct over past rows per left
+    val ref = p.join(sgn, col("user_id") === col("s_user") && col("sts") <= col("pts"), "left_outer")
+      .groupBy(col("purchase_id"))
+      .agg(max(when(col("signup_id").isNotNull, struct(col("sts"), col("signup_id")))).as("m"))
+      .select(col("purchase_id"), col("m.signup_id").as("signup_id"))
     assert(native.count() === p.count()) // left-preserving
-    assert(native.exceptAll(composed).count() === 0)
-    assert(composed.exceptAll(native).count() === 0)
+    assert(native.exceptAll(ref).isEmpty && ref.exceptAll(native).isEmpty)
+  }
+
+  test("NULL keys and NULL timestamps never match, in either direction") {
+    val before1970 = Some(new Timestamp(-86400000L * 3650))
+    def run(l: DataFrame, r: DataFrame, forward: Boolean): Map[String, String] =
+      AsOfJoinNative.asofJoin(l, r, "k", "rk", "lts", "rts", forward)
+        .select("lval", "rval").as[(String, String)].collect().toMap
+    // A NULL long key must not pass for key 0, nor a NULL ts for 1970:
+    // k2's only right row has a NULL rts (it would be everyone's backward
+    // match); k3's left row predates 1970 (a NULL rts would be its
+    // forward match); L-nullts would match R1 forward and R1-old backward.
+    val left = Seq[(Option[Long], Option[Timestamp], String)](
+      (None, Some(ts(10)), "L-nullkey"), (Some(0L), Some(ts(10)), "L-zero"),
+      (Some(1L), None, "L-nullts"), (Some(2L), Some(ts(10)), "L-k2"),
+      (Some(3L), before1970, "L-k3"))
+      .toDF("k", "lts", "lval")
+    val right = Seq[(Option[Long], Option[Timestamp], String)](
+      (None, Some(ts(5)), "R-nullkey"), (Some(0L), Some(ts(5)), "R0"),
+      (Some(0L), Some(ts(20)), "R0-next"), (Some(1L), before1970, "R1-old"),
+      (Some(1L), Some(ts(5)), "R1"), (Some(2L), None, "R2-nullts"),
+      (Some(3L), None, "R3-nullts"))
+      .toDF("rk", "rts", "rval")
+    val unmatched = Map[String, String](
+      "L-nullkey" -> null, "L-nullts" -> null, "L-k2" -> null, "L-k3" -> null)
+    assert(run(left, right, forward = false) === unmatched + ("L-zero" -> "R0"))
+    assert(run(left, right, forward = true) === unmatched + ("L-zero" -> "R0-next"))
+
+    // a NULL string key on either side used to throw inside the ordering
+    val sLeft = Seq[(Option[String], Timestamp, String)](
+      (None, ts(10), "L-nullkey"), (Some("a"), ts(10), "L-a"))
+      .toDF("k", "lts", "lval")
+    val sRight = Seq[(Option[String], Timestamp, String)](
+      (None, ts(5), "R-nullkey"), (Some("a"), ts(5), "Ra"), (Some("a"), ts(20), "Ra-next"))
+      .toDF("rk", "rts", "rval")
+    assert(run(sLeft, sRight, forward = false) === Map("L-nullkey" -> null, "L-a" -> "Ra"))
+    assert(run(sLeft, sRight, forward = true) === Map("L-nullkey" -> null, "L-a" -> "Ra-next"))
+  }
+
+  test("tolerance: stale matches become no-matches, fresh ones keep the row") {
+    val left = Seq((1L, ts(100), "L1"), (1L, ts(200), "L2"), (2L, ts(50), "L3"))
+      .toDF("k", "lts", "lval")
+    val right = Seq((1L, ts(95), "R-fresh"), (1L, ts(0), "R-old"), (2L, ts(49), "R-ok"))
+      .toDF("rk", "rts", "rval")
+    // tolerance 10 minutes: L1 matches R-fresh (5 min old); L2's best
+    // match is still R-fresh but 105 min stale -> nulled; L3 matches R-ok
+    val got = AsOfJoinNative.asofJoinTolerance(left, right, "k", "rk", "lts", "rts", 600L)
+      .select("lval", "rval").as[(String, Option[String])].collect().toMap
+    assert(got === Map(
+      "L1" -> Some("R-fresh"), "L2" -> None, "L3" -> Some("R-ok")))
   }
 
   test("string keys: matchedKey survives buffer reuse across advanceRight") {

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.window.WindowExec
+import graft.plans.AsOfJoinExec
 
 /** Physical-plan regression guards: the perf-critical plan properties
   * (pushdown, pruning, broadcast strategy, partial aggregation) are
@@ -391,6 +394,24 @@ class PlanSpec extends SparkSpec {
     Seq("g7_neighborhood_jaccard", "v13_ivfpq").foreach { q =>
       val p = planOf(q)
       assert(!p.contains("CartesianProduct"), s"$q must not plan a cartesian:\n$p")
+    }
+  }
+
+  test("e4/e4e/j11: every as-of join is an AsOfJoinExec — no union, no window over the join") {
+    // the nodes outside the as-of joins' right (lookup-side) inputs:
+    // j11 builds its feature snapshots with cumulative windows there
+    def spine(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => spine(a.executedPlan)
+      case j: AsOfJoinExec => j +: spine(j.left)
+      case _ => p +: p.children.flatMap(spine)
+    }
+    Seq("e4_asof_join" -> 1, "e4e_asof_tolerance" -> 1, "j11_pit_features" -> 2).foreach {
+      case (q, joins) =>
+        val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
+        val nodes = spine(plan)
+        assert(nodes.count(_.isInstanceOf[AsOfJoinExec]) === joins, s"$q:\n$plan")
+        assert(!nodes.exists(n => n.isInstanceOf[UnionExec] || n.isInstanceOf[WindowExec]),
+          s"$q must not carry matches with a union + window:\n$plan")
     }
   }
 }
