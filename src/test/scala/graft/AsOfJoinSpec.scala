@@ -1,8 +1,12 @@
 package graft
 
 import java.sql.Timestamp
-import graft.operators.AsOfJoin
+import graft.plans.AsOfJoinNative
 
+/** Backward as-of semantics of the as-of join (`AsOfJoinExec`, reached
+  * through `AsOfJoinNative.asofJoin`): the match per key, whole-row carry
+  * of the matched right row, and independence from input partitioning.
+  */
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,8 +19,8 @@ class AsOfJoinSpec extends SparkSpec {
       .toDF("k", "lts", "lval")
     val right = Seq(
       (1L, ts(10), "R1"), (1L, ts(25), "R2"), (2L, ts(5), "R3"))
-      .toDF("k", "rts", "rval")
-    val out = AsOfJoin.asofJoin(left, right, "k", "lts", "rts")
+      .toDF("rk", "rts", "rval")
+    val out = AsOfJoinNative.asofJoin(left, right, "k", "rk", "lts", "rts")
       .select("lval", "rval").as[(String, String)].collect().toMap
     assert(out("L-a") === "R1")       // equal ts matches (inclusive)
     assert(out("L-b") === "R2")       // latest of the two priors
@@ -26,15 +30,15 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("whole-row carry: NULL field of the matching right row stays NULL") {
-    // Regression: carrying each right column with its own
-    // last(ignoreNulls) let a NULL in the true matching row leak the
-    // previous row's value (and mix columns across right rows).
+    // Carrying each right column on its own (a running last(ignoreNulls))
+    // would let a NULL in the true matching row leak the previous row's
+    // value and mix columns across right rows.
     val left = Seq((1L, ts(30), "L")).toDF("k", "lts", "lval")
     val right = Seq(
       (1L, ts(10), Option("R1"), Option(5L)),
       (1L, ts(25), Option.empty[String], Option(7L))) // the true match; rval NULL
-      .toDF("k", "rts", "rval", "rx")
-    val row = AsOfJoin.asofJoin(left, right, "k", "lts", "rts")
+      .toDF("rk", "rts", "rval", "rx")
+    val row = AsOfJoinNative.asofJoin(left, right, "k", "rk", "lts", "rts")
       .select("rval", "rx").collect().head
     assert(row.isNullAt(0), "NULL field of matched row must not leak the prior row's value")
     assert(row.getLong(1) === 7L)
@@ -42,23 +46,11 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("asof join is repartition-stable") {
     val left = (1 to 500).map(i => (i % 7L, ts(i), s"L$i")).toDF("k", "lts", "lval")
-    val right = (1 to 100).map(i => (i % 7L, ts(i * 3), s"R$i")).toDF("k", "rts", "rval")
-    val a = AsOfJoin.asofJoin(left.repartition(13), right.repartition(3), "k", "lts", "rts")
-    val b = AsOfJoin.asofJoin(left.coalesce(1), right.coalesce(1), "k", "lts", "rts")
+    val right = (1 to 100).map(i => (i % 7L, ts(i * 3), s"R$i")).toDF("rk", "rts", "rval")
+    val a = AsOfJoinNative.asofJoin(left.repartition(13), right.repartition(3), "k", "rk", "lts", "rts")
+    val b = AsOfJoinNative.asofJoin(left.coalesce(1), right.coalesce(1), "k", "rk", "lts", "rts")
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
     assert(a.count() === 500) // every left row exactly once
-  }
-test("tolerance: stale matches become no-matches, fresh ones keep the row") {
-    val left = Seq((1L, ts(100), "L1"), (1L, ts(200), "L2"), (2L, ts(50), "L3"))
-      .toDF("k", "lts", "lval")
-    val right = Seq((1L, ts(95), "R-fresh"), (1L, ts(0), "R-old"), (2L, ts(49), "R-ok"))
-      .toDF("k", "rts", "rval")
-    // tolerance 10 minutes: L1 matches R-fresh (5 min old); L2's best
-    // match is still R-fresh but 105 min stale -> nulled; L3 matches R-ok
-    val got = AsOfJoin.asofJoinTolerance(left, right, "k", "lts", "rts", 600L)
-      .select("lval", "rval").as[(String, Option[String])].collect().toMap
-    assert(got === Map(
-      "L1" -> Some("R-fresh"), "L2" -> None, "L3" -> Some("R-ok")))
   }
 }

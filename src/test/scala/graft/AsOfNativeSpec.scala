@@ -6,16 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.plans.AsOfJoinNative
 
 /** The as-of join (LogicalPlan+Strategy+Exec): both directions against
-  * hand-built edge cases and a plain left-outer-join reference on real
-  * events, NULL semantics, the tolerance wrapper, and the planned shape
-  * (one merge with two exchanges).
+  * hand-built edge cases and against the same join composed from stock
+  * operators (left outer join, then max/min of a (ts, row) struct per left
+  * row), NULL semantics, the tolerance wrapper, and the planned shape (one
+  * merge with two exchanges).
   */
 class AsOfNativeSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
 
-  test("backward direction: latest right at-or-before each left row, per key") {
+  test("native == composed on hand-built edge cases") {
     val left = Seq(
       (1L, ts(10), "L-a"), (1L, ts(30), "L-b"), (1L, ts(5), "L-early"),
       (2L, ts(20), "L-c"), (3L, ts(50), "L-nokey"), (4L, ts(30), "L-carry"))
@@ -36,6 +37,15 @@ class AsOfNativeSpec extends SparkSpec {
     // whole-row carry: a NULL field of the matched right row stays NULL
     // instead of taking the prior row's value
     assert(native("L-carry") === (null, Some(7L)))
+
+    // the composed reference: max (rts, row) struct over past rows per left
+    val composed = left.join(right, $"k" === $"rk" && $"rts" <= $"lts", "left_outer")
+      .groupBy($"lval")
+      .agg(max(when($"rk".isNotNull, struct($"rts", $"rval", $"rx"))).as("m"))
+      .select($"lval", $"m.rval".as("rval"), $"m.rx".as("rx"))
+      .as[(String, String, Option[Long])].collect()
+      .map { case (l, r, x) => l -> (r, x) }.toMap
+    assert(native === composed)
   }
 
   test("forward direction: earliest right at-or-after each left row, per key") {
