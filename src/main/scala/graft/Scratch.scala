@@ -280,6 +280,25 @@ object Scratch {
     }
   }
 
+  /** Stage `df` once ([[stageFrame]]), run `body` over the staged frame,
+    * then free exactly what this call staged, whether `body` returns or
+    * throws: the leaf's own checkpointed RDD in `local` mode (never
+    * [[releaseRunState]], which would drop other queries' state), the
+    * staged directory in `parquet` mode. No scratch directory is made in
+    * `local` mode. `body` must finish every use of the staged frame
+    * before it returns — e.g. a write that has committed. */
+  private[graft] def withStaged[T](spark: SparkSession, df: org.apache.spark.sql.DataFrame,
+      tag: String)(body: org.apache.spark.sql.DataFrame => T): T =
+    if (stageMode(spark) == "local") {
+      val staged = stageFrame(spark, df, tag)
+      try body(staged)
+      finally org.apache.spark.sql.graftbridge.releaseLeaf(staged)
+    } else {
+      val d = dir(spark, tag)
+      try body(stageFrame(spark, df, d))
+      finally cleanup(spark, d)
+    }
+
   /** Eager round-staging for iterative operators: round k supersedes
     * round k−`window`, which is freed as soon as the new round has
     * landed. Bounds scratch growth to `window` round tables per chain

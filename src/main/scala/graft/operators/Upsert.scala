@@ -11,21 +11,30 @@ import org.apache.spark.sql.expressions.Window
   * Contract: at-least-once input + keyed upsert ⇒ effectively-once table
   * (SURVEY.md §2.7). `upsert(t); upsert(t)` ≡ `upsert(t)`.
   *
-  * Scale design: the merge is a single shuffle on the upsert key
-  * (left_anti join); with a partitioned table only the partitions touched
-  * by the delta are rewritten (dynamic partition overwrite), so cost is
-  * O(delta ∪ affected partitions), not O(table) — the property that makes
-  * hourly incremental runs viable at 100 TB.
+  * Scale design: [[upsertParquet]] evaluates the delta once — it is
+  * staged ([[graft.Scratch.stageFrame]]) before the merge reads it, so
+  * the source scan and transform behind it run once, not once per use,
+  * and the staged copy carries its real size into planning. The merge
+  * is a left_anti join of the base against the delta's keys: a small
+  * delta's keys are broadcast and the base streams through without a
+  * shuffle; a large delta gets one sort-merge shuffle on the upsert
+  * key. With a partitioned table only the partitions touched by the
+  * delta are rewritten (dynamic partition overwrite), so cost is
+  * O(delta ∪ affected partitions), not O(table) — the property that
+  * makes hourly incremental runs viable at 100 TB.
   */
 object Upsert {
 
   /** Pure merge: rows of `delta` replace rows of `base` sharing the same
     * key; all other base rows pass through. Exactly ON CONFLICT DO UPDATE
-    * semantics when `delta` is key-unique.
+    * semantics when `delta` is key-unique. The key side of the anti
+    * join needs no `distinct`: a left anti join keeps the same base rows
+    * whether or not the delta repeats a key, and NULL key parts never
+    * match.
     */
   def merge(base: DataFrame, delta: DataFrame, keys: Seq[String]): DataFrame = {
     val d = delta.select(base.columns.map(col).toIndexedSeq: _*)
-    d.unionByName(base.join(d.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, "left_anti"))
+    d.unionByName(base.join(d.select(keys.map(col).toIndexedSeq: _*), keys, "left_anti"))
   }
 
   /** Schema-evolving merge: the result schema is the union of base and
@@ -34,8 +43,7 @@ object Upsert {
     * fields over time). Delta still wins on key conflicts.
     */
   def mergeEvolve(base: DataFrame, delta: DataFrame, keys: Seq[String]): DataFrame = {
-    val baseKeep = base.join(
-      delta.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, "left_anti")
+    val baseKeep = base.join(delta.select(keys.map(col).toIndexedSeq: _*), keys, "left_anti")
     delta.unionByName(baseKeep, allowMissingColumns = true)
   }
 
@@ -111,6 +119,10 @@ object Upsert {
     * copy of those partitions and is rolled FORWARD, never deleted
     * first. A crash before either apply leaves the old table intact and
     * the job retryable — and the keyed upsert makes retries idempotent.
+    *
+    * A merge into an existing table reads the delta from one staged copy
+    * ([[graft.Scratch.withStaged]]), released once the write has
+    * committed or failed.
     */
   def upsertParquet(
       spark: SparkSession,
@@ -136,19 +148,21 @@ object Upsert {
       return
     }
 
-    if (partitionBy.nonEmpty) {
-      // Only touch partitions the delta lands in. The merge is staged to
-      // disk first (not localCheckpoint: disk-backed, sized by the
-      // affected partitions only), then read back for the dynamic
-      // overwrite so the table is never read and rewritten in one job.
-      val affected = delta.select(partitionBy.map(col).toIndexedSeq: _*).distinct()
-      val base = spark.read.parquet(path).join(broadcast(affected), partitionBy, "left_semi")
-      val stage = new org.apache.hadoop.fs.Path(path + "__stage")
-      fs.delete(stage, true)
-      merge(base, delta, keys).write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      applyPartitionedStage(spark, path, partitionBy)
-    } else {
-      stagedRewrite(spark, path) { base => merge(base, delta, keys) }
+    graft.Scratch.withStaged(spark, delta, "upsert-delta") { d =>
+      if (partitionBy.nonEmpty) {
+        // Only touch partitions the delta lands in. The merge is staged
+        // to disk first (not localCheckpoint: disk-backed, sized by the
+        // affected partitions only), then read back for the dynamic
+        // overwrite so the table is never read and rewritten in one job.
+        val affected = d.select(partitionBy.map(col).toIndexedSeq: _*).distinct()
+        val base = spark.read.parquet(path).join(broadcast(affected), partitionBy, "left_semi")
+        val stage = new org.apache.hadoop.fs.Path(path + "__stage")
+        fs.delete(stage, true)
+        merge(base, d, keys).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+        applyPartitionedStage(spark, path, partitionBy)
+      } else {
+        stagedRewrite(spark, path) { base => merge(base, d, keys) }
+      }
     }
   }
 

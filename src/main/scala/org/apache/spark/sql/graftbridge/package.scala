@@ -75,4 +75,12 @@ package object graftbridge {
       case _ => ds.toDF()
     }
   }
+
+  /** Unpersist the checkpointed RDD under a [[materializedLeaf]] frame —
+    * that leaf's own blocks, nothing else the session has persisted. */
+  def releaseLeaf(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

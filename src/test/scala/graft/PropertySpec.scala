@@ -57,6 +57,44 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("merge/mergeEvolve without distinct == the distinct-key form; NULL keys never match") {
+    def keyed(seed: Long, n: Int): List[(Option[Int], Option[String], Int)] =
+      Gen.listOfN(n, Gen.zip(
+        Gen.option(Gen.choose(0, 4)), Gen.option(Gen.oneOf("a", "b")), Gen.choose(0, 1000)))
+        .pureApply(params, Seed(seed))
+    val keys = Seq("k1", "k2")
+    for (seed <- 1L to 8L) {
+      val baseRows = keyed(seed, 30)
+      val deltaRows = keyed(seed + 500, 15) // NULL key parts and repeated keys
+      val base = baseRows.toDF("k1", "k2", "v")
+      val delta = deltaRows.toDF("k1", "k2", "v")
+      // the form with a distinct key side
+      val want = delta.unionByName(
+        base.join(delta.select(keys.map(col): _*).distinct(), keys, "left_anti"))
+      val got = Upsert.merge(base, delta, keys)
+      assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0,
+        s"seed=$seed merge diverges from the distinct-key form")
+      // the same rows from first principles: every delta row, plus every
+      // base row whose key is not a delta key — a NULL part never matches
+      val deltaKeys = deltaRows.collect { case (Some(a), Some(b), _) => (a, b) }.toSet
+      val kept = baseRows.filter {
+        case (Some(a), Some(b), _) => !deltaKeys((a, b))
+        case _ => true
+      }
+      val expected = (deltaRows ++ kept).sortBy(_.toString)
+      assert(got.as[(Option[Int], Option[String], Int)].collect().toList.sortBy(_.toString) === expected, s"seed=$seed")
+
+      val wider = delta.withColumn("extra", $"v" + 1)
+      val wantEvolve = wider.unionByName(
+        base.join(wider.select(keys.map(col): _*).distinct(), keys, "left_anti"),
+        allowMissingColumns = true)
+      val gotEvolve = Upsert.mergeEvolve(base, wider, keys)
+      assert(gotEvolve.exceptAll(wantEvolve).count() === 0 &&
+        wantEvolve.exceptAll(gotEvolve).count() === 0,
+        s"seed=$seed mergeEvolve diverges from the distinct-key form")
+    }
+  }
+
   test("explode conserves rows: output count == sum of array sizes") {
     for (seed <- 1L to 8L) {
       val arrays = Gen.listOfN(25, Gen.listOf(Gen.alphaStr))

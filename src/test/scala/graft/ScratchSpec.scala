@@ -20,16 +20,6 @@ class ScratchSpec extends SparkSpec {
     }
   }
 
-  private def withStageMode[A](mode: String)(body: => A): A = {
-    val prev = spark.conf.getOption(Scratch.StageModeKey)
-    spark.conf.set(Scratch.StageModeKey, mode)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(Scratch.StageModeKey, v)
-      case None => spark.conf.unset(Scratch.StageModeKey)
-    }
-  }
-
   test("allocations are unique, run-scoped, and under the configured root") {
     val root = Files.createTempDirectory("scratch-root").toString
     withRoot(root) {

@@ -210,6 +210,64 @@ class UpsertSpec extends SparkSpec {
     assert(readTable(path) === Seq((1, 1), (2, 2)))
   }
 
+  /** Staged-delta directories under this run's scratch root. */
+  private def stagedDeltaDirs(): Seq[String] = {
+    val root = Scratch.runRoot(spark)
+    val rfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!rfs.exists(root)) Nil
+    else rfs.listStatus(root).map(_.getPath.getName).filter(_.startsWith("upsert-delta")).toSeq
+  }
+
+  test("upsert into an existing table evaluates the delta once, in both stage modes") {
+    for (mode <- Seq("local", "parquet")) withStageMode(mode) {
+      // the filter runs once per evaluated delta row; a filter is never
+      // pruned away, whichever columns a use of the delta reads
+      val evaluated = spark.sparkContext.longAccumulator(s"upsert-delta-rows-$mode")
+      val seen = udf { (_: Int) => evaluated.add(1); true }
+      def delta(cols: org.apache.spark.sql.Column*) = spark.range(0, 3)
+        .select((col("id").cast("int").as("k") +: cols).toIndexedSeq: _*)
+        .filter(seen(col("k")))
+
+      val flat = tempDir()
+      Upsert.upsertParquet(spark, flat, Seq((1, 1), (5, 1)).toDF("k", "v"), Seq("k"))
+      Upsert.upsertParquet(spark, flat, delta(lit(9).as("v")), Seq("k"))
+      assert(evaluated.value === 3L, s"$mode: unpartitioned merge evaluated the delta more than once")
+      assert(readTable(flat) === Seq((0, 9), (1, 9), (2, 9), (5, 1)))
+
+      evaluated.reset()
+      val parted = tempDir()
+      Upsert.upsertParquet(spark, parted,
+        Seq((1, "p1", 1), (5, "p1", 1)).toDF("k", "part", "v"), Seq("k"), partitionBy = Seq("part"))
+      Upsert.upsertParquet(spark, parted,
+        delta(concat(lit("p"), (col("id") % 2).cast("string")).as("part"), lit(9).as("v")),
+        Seq("k"), partitionBy = Seq("part"))
+      assert(evaluated.value === 3L, s"$mode: partitioned merge evaluated the delta more than once")
+      assert(readPartitioned(parted) === Seq((0, "p0", 9), (1, "p1", 9), (2, "p0", 9), (5, "p1", 1)))
+      assert(stagedDeltaDirs().isEmpty, s"$mode: a staged delta directory was left behind")
+    }
+  }
+
+  test("upsert releases only what it staged: the caller's persisted state survives") {
+    val path = tempDir()
+    Upsert.upsertParquet(spark, path, Seq((1, 1), (2, 1)).toDF("k", "v"), Seq("k"))
+    val callerRdd = spark.sparkContext.parallelize(1 to 10).persist()
+    callerRdd.count()
+    val cached = Seq((2, 7), (3, 7)).toDF("k", "v").persist()
+    cached.count()
+    try {
+      Upsert.upsertParquet(spark, path, cached, Seq("k"))
+      assert(spark.sparkContext.getPersistentRDDs.contains(callerRdd.id),
+        "upsert unpersisted an RDD the caller had persisted")
+      assert(cached.storageLevel.useMemory || cached.storageLevel.useDisk,
+        "upsert dropped a frame the caller had cached")
+      assert(readTable(path) === Seq((1, 1), (2, 7), (3, 7)))
+      assert(stagedDeltaDirs().isEmpty, "a staged delta directory was left behind")
+    } finally {
+      callerRdd.unpersist()
+      cached.unpersist()
+    }
+  }
+
   test("mergeEvolve: additive schema evolution, nulls for the missing side") {
     val base = Seq((1, "a"), (2, "b")).toDF("k", "name")
     val delta = Seq((2, "b2", "new"), (3, "c", "x")).toDF("k", "name", "extra")
