@@ -230,7 +230,7 @@ object Bench {
       spark.range(0L, 1000000L, 1L, 8)
         .selectExpr("id", "md5(cast(id as string)) as pad")
         .write.mode("overwrite").parquet(ioSentDir)
-      spark.read.parquet(ioSentDir).selectExpr("sum(length(pad)) as s")
+      Tables.parquet(spark, ioSentDir).selectExpr("sum(length(pad)) as s")
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }

@@ -28,7 +28,7 @@ object Fee {
     var i = 0
     time("parquet write 100 rows") { i += 1; tiny.write.mode("overwrite").parquet(s"$dir/w$i") }
     time("parquet read+noop") {
-      spark.read.parquet(s"$dir/w1").write.format("noop").mode("overwrite").save()
+      Tables.parquet(spark, s"$dir/w1").write.format("noop").mode("overwrite").save()
     }
     val shuf = tiny.groupBy(col("s")).agg(count(lit(1)).as("n"))
     time("1-shuffle noop, AQE on")(shuf.write.format("noop").mode("overwrite").save())
@@ -44,7 +44,7 @@ object Fee {
       var cur = tiny
       (1 to 8).foreach { r =>
         cur.write.mode("overwrite").parquet(s"$dir/chain$r")
-        cur = spark.read.parquet(s"$dir/chain$r")
+        cur = Tables.parquet(spark, s"$dir/chain$r")
           .withColumn("id", col("id") + 1)
       }
       cur.write.format("noop").mode("overwrite").save()
@@ -69,7 +69,7 @@ object Fee {
       cur.write.format("noop").mode("overwrite").save()
     }
     time("read 6 dirs union+window+noop") {
-      val seen = spark.read.parquet((1 to 6).map(n => s"$dir/w$n"): _*)
+      val seen = Tables.parquet(spark, (1 to 6).map(n => s"$dir/w$n"))
       seen.withColumn("rk", org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("id") % 5)
             .orderBy(col("s"))))

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftbridge.drainListenerBus
 
 /** Dev measurement main (guide §1: measure first): runs the named
   * queries through the same noop-sink materialization as Bench and
@@ -92,14 +93,14 @@ object Profile {
         println(s"[profile] set $k=$v")
       } else {
         // settle listener counters from the previous query's async events
-        Thread.sleep(300)
+        drainListenerBus(spark)
         val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
         val w0 = System.nanoTime()
         try {
           SparkEntry.queries(n)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           val secs = (System.nanoTime() - w0) / 1e9
-          Thread.sleep(300)
+          drainListenerBus(spark)
           println(f"$n%-28s $secs%8.2f ${jobs.get - j0}%6d ${stages.get - s0}%7d ${tasks.get - t0}%7d")
           if (perJob) {
             import scala.jdk.CollectionConverters._

@@ -94,7 +94,9 @@ object Scratch {
     * keys so regenerated fixture data at the SAME path misses the
     * cache and rebuilds instead of serving a stale artifact into a
     * confusing oracle-hash failure. Missing paths fingerprint as
-    * "absent" (the build itself will fail loudly, not the probe). */
+    * "absent" (the build itself will fail loudly, not the probe). The
+    * key is a SHA-256 digest: two input sets that share a 32-bit hash
+    * would otherwise share an artifact. */
   def fingerprint(spark: SparkSession, inputs: Seq[String]): String = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val sig = inputs.map { in =>
@@ -106,7 +108,9 @@ object Scratch {
           .sorted.mkString(",")
       } catch { case _: java.io.IOException => "absent" }
     }.mkString("|")
-    Integer.toHexString((inputs.mkString(";") + "#" + sig).hashCode)
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest((inputs.mkString(";") + "#" + sig).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
   }
 
   /** Cross-run CACHED ARTIFACT — the shared-fixture discipline the k54/
@@ -276,7 +280,7 @@ object Scratch {
           s"stage($path) declared boundedRows=$boundedRows but wrote $n rows — " +
             "the single-task fold this bound was meant to cap is unbounded")
       }
-      spark.read.parquet(path)
+      Tables.parquet(spark, path)
     }
   }
 

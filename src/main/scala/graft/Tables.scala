@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooter
 
-/** Readers for the driver-provided parquet fixture tables (TESTDATA.md).
+/** Parquet table reads: [[parquet]], which every parquet read in the
+  * engine goes through, and readers for the driver-provided fixture
+  * tables (TESTDATA.md).
   *
   * All reads are plain parquet scans so Catalyst's column pruning and
   * predicate pushdown reach the file scan (verify via
@@ -10,7 +13,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The parquet table at `path`, read with exactly the schema
+    * `spark.read.parquet(path)` infers — names, types, nullability and
+    * order — but with that schema resolved on the driver
+    * ([[GraftFooter.dataSchema]]): Spark's inference ships one footer
+    * read to a one-task job, a fee paid on every table read. Scale
+    * design: the read costs one listing plus one footer read on the
+    * driver, and no Spark job. Partition columns are discovered by
+    * Spark as before. A path with no data file is left to
+    * `spark.read.parquet`, so it fails with Spark's own error. */
+  def parquet(spark: SparkSession, path: String): DataFrame = parquet(spark, Seq(path))
+
+  /** [[parquet]] over several directories, files or glob patterns, as
+    * `spark.read.parquet(paths: _*)`, with Spark's `basePath` option
+    * when given. */
+  def parquet(spark: SparkSession, paths: Seq[String], basePath: Option[String] = None): DataFrame = {
+    val options = basePath.map("basePath" -> _).toMap
+    val reader = spark.read.options(options)
+    GraftFooter.dataSchema(spark, paths, options)
+      .fold(reader.parquet(paths: _*))(reader.schema(_).parquet(paths: _*))
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = read(s, d, "nation")

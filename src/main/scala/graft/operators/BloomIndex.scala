@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** File-level BLOOM index over a parquet table — the point-lookup
   * complement to [[ZoneMap]]'s range index. A zone map only prunes when
@@ -53,7 +54,7 @@ object BloomIndex {
       indexPath: String,
       bits: Int = DefaultBits): Unit = {
     val pos = positions(col(keyCol), bits)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .select(input_file_name().as("file"),
         explode(array(pos: _*)).as("p"))
       .groupBy(col("file"))
@@ -73,7 +74,7 @@ object BloomIndex {
     import spark.implicits._
     val probes = keys.toDF("k")
       .select(array(positions(col("k"), bits): _*).as("ps"))
-    spark.read.parquet(indexPath)
+    Tables.parquet(spark, indexPath)
       .crossJoin(broadcast(probes))
       .filter(expr("forall(ps, p -> array_contains(bloom, p))"))
       .select(col("file")).distinct()
@@ -91,8 +92,8 @@ object BloomIndex {
       keys: Seq[Long],
       bits: Int = DefaultBits): DataFrame = {
     val files = candidateFiles(spark, indexPath, keys, bits)
-    val base = spark.read.parquet(path)
-    val src = if (files.isEmpty) base.limit(0) else spark.read.parquet(files: _*)
+    val base = Tables.parquet(spark, path)
+    val src = if (files.isEmpty) base.limit(0) else Tables.parquet(spark, files)
     src.filter(col(keyCol).isin(keys: _*))
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Tables
 
 /** Mergeable Count-Min sketch — the frequency twin of [[HllSketch]]:
   * per-(row, bucket) counter tables estimate how often any value occurs
@@ -82,7 +83,7 @@ object CountMin {
         if (!fs.exists(fsPath))
           ReplayGuard.stamp(sketch(batch, value), run, batchId)
             .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(s.read.parquet(path), run, batchId))
+        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
           Upsert.stagedRewrite(s, path)(base =>
             ReplayGuard.stamp(
               merge(ReplayGuard.strip(base), sketch(batch, value)),

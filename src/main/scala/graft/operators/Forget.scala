@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Keyed hard-delete ("right to be forgotten") over landed parquet
   * tables, with an audit report.
@@ -48,7 +49,7 @@ object Forget {
     if (partitionBy.nonEmpty) Upsert.recoverPartitionedStage(spark, path, partitionBy)
 
     val keys = broadcast(forgetKeys.select(keyCols.map(col).toIndexedSeq: _*).distinct())
-    val base = spark.read.parquet(path)
+    val base = Tables.parquet(spark, path)
 
     // counts taken BEFORE any mutation: the base frame is lazy and would
     // re-list the rewritten files afterwards
@@ -167,9 +168,7 @@ object Forget {
     val keys = broadcast(graft.Scratch.stageFrame(spark,
       forgetKeys.select(keyCols.map(col).toIndexedSeq: _*).distinct(),
       s"${graft.Scratch.dir(spark, "scrub-keys")}/keys"))
-    val union = spark.read
-      .option("basePath", Versioned.genRoot(path))
-      .parquet(liveDirs: _*)
+    val union = Tables.parquet(spark, liveDirs, basePath = Some(Versioned.genRoot(path)))
     // ONE job: per-directory total AND matched counts off the same scan
     // (a left-outer probe against the broadcast key set — an Observation
     // riding a semi join would be pruned with the empty-result subtree
@@ -190,8 +189,8 @@ object Forget {
           row.getAs[Long]("__n"))
       }
     if (dirs.isEmpty) return Report(0L, total)
-    spark.read.option("basePath", Versioned.genRoot(path))
-      .parquet(dirs.map { case (p, g, _) => Versioned.partDir(path, p, g) }: _*)
+    Tables.parquet(spark, dirs.map { case (p, g, _) => Versioned.partDir(path, p, g) },
+        basePath = Some(Versioned.genRoot(path)))
       .join(keys, keyCols, "left_anti")
       .write.mode(SaveMode.Overwrite).partitionBy("__gen", "__p")
       .parquet(stagedRoot.toString)
@@ -255,13 +254,13 @@ object Forget {
         // heal any interrupted prior scrub of this table directory first
         if (!st.getPath.getName.endsWith("__new") && !st.getPath.getName.endsWith("__old")) {
           Upsert.recoverSwap(fs, tbl)
-          val df = spark.read.parquet(tbl)
+          val df = Tables.parquet(spark, tbl)
           if (keyCols.forall(df.columns.contains)) {
             val m = df.join(keys, keyCols, "left_semi").count()
             if (m > 0) {
               Upsert.stagedRewrite(spark, tbl)(b => b.join(keys, keyCols, "left_anti"))
               removed += m
-              remaining += spark.read.parquet(tbl).count()
+              remaining += Tables.parquet(spark, tbl).count()
             } else remaining += df.count()
           } else remaining += df.count()
         }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Tables
 
 /** Mergeable HyperLogLog distinct-count state — the sketch counterpart
   * of IncrementalAgg: per-group register tables that merge by max, so a
@@ -118,7 +119,7 @@ object HllSketch {
         if (!fs.exists(fsPath))
           ReplayGuard.stamp(registers(batch, group, value), run, batchId)
             .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(s.read.parquet(path), run, batchId))
+        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
           Upsert.stagedRewrite(s, path)(base =>
             ReplayGuard.stamp(
               merge(ReplayGuard.strip(base), registers(batch, group, value), group),

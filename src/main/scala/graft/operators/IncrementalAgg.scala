@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Tables
 
 /** Incremental materialized-aggregate maintenance: keep per-key
   * mergeable partials (count / exact decimal sum / min / max) as a
@@ -85,7 +86,7 @@ object IncrementalAgg {
         if (!fs.exists(fsPath))
           ReplayGuard.stamp(partials(batch, key, value), run, batchId)
             .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(s.read.parquet(path), run, batchId))
+        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
           Upsert.stagedRewrite(s, path)(base =>
             ReplayGuard.stamp(
               merge(ReplayGuard.strip(base), partials(batch, key, value), key),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Table maintenance for incrementally-upserted parquet tables. Hourly
   * keyed upserts (the reference's cadence) accrete one small file set
@@ -176,8 +177,7 @@ object Maintenance {
       // (basePath keeps the partition columns), hash-repartition on the
       // partition columns so each partition lands in one task → one
       // file, stage, then dynamic-overwrite only those partitions.
-      val df = spark.read.option("basePath", path)
-        .parquet(fragmented.map(_.toString): _*)
+      val df = Tables.parquet(spark, fragmented.map(_.toString), basePath = Some(path))
       val stage = new org.apache.hadoop.fs.Path(path + "__stage")
       fs.delete(stage, true)
       df.repartition(fragmented.size, partitionBy.map(col): _*)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.Tables
 
 /** Atomic MULTI-TABLE publish: a run's table snapshots become visible
   * together or not at all — the parquet analog of the reference's
@@ -150,7 +151,7 @@ object Publish {
       audit: Map[String, DataFrame] => Boolean): Option[Long] = {
     val run = stageRun(spark, root, tables)
     val staged = tables.keys.map { n =>
-      n -> spark.read.parquet(s"${runDir(root, run)}/$n")
+      n -> Tables.parquet(spark, s"${runDir(root, run)}/$n")
     }.toMap
     if (audit(staged)) { commitRun(spark, root, run); Some(run) } else None
   }
@@ -161,7 +162,7 @@ object Publish {
       spark: SparkSession, root: String, table: String, run: Long = -1L): DataFrame = {
     val r = if (run > 0) run else latestCommitted(spark, root)
     require(r > 0, s"no committed run under $root")
-    spark.read.parquet(s"${runDir(root, r)}/$table")
+    Tables.parquet(spark, s"${runDir(root, r)}/$table")
   }
 
   /** Drop runs older than `keepLast` committed runs (markers last, so a

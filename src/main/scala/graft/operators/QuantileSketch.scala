@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Tables
 
 /** Mergeable DETERMINISTIC quantile summary — the rank-sketch
   * counterpart of [[HllSketch]]: per-group weighted sample tables with
@@ -119,7 +120,7 @@ object QuantileSketch {
         if (!fs.exists(fsPath))
           ReplayGuard.stamp(bounded(summ), run, batchId)
             .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(s.read.parquet(path), run, batchId))
+        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
           Upsert.stagedRewrite(s, path)(base =>
             ReplayGuard.stamp(
               bounded(merge(ReplayGuard.strip(base), summ)), run, batchId))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Source↔target table reconciliation — the validation pass behind every
   * migration, backfill, and replication pipeline: classify every key as
@@ -69,7 +70,7 @@ object Reconcile {
   def schemaDiff(spark: SparkSession, sourcePath: String, targetPath: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     def types(p: String): Map[String, String] =
-      spark.read.parquet(p).schema.fields
+      Tables.parquet(spark, p).schema.fields
         .map(f => f.name -> f.dataType.simpleString).toMap
     val a = types(sourcePath)
     val b = types(targetPath)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Tables
 
 /** Slowly-changing-dimension Type-2 history maintenance — the warehouse
   * counterpart of the reference's keyed upserts (SURVEY §2.2): instead
@@ -121,7 +122,7 @@ object Scd2 {
           ReplayGuard.stamp(
             fromChangeLog(batch, key, order, attrs, validCol), run, batchId)
             .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(s.read.parquet(path), run, batchId))
+        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
           Upsert.stagedRewrite(s, path)(base =>
             ReplayGuard.stamp(
               applyDelta(ReplayGuard.strip(base), batch, key, order, attrs, validCol),

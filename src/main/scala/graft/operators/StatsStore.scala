@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Incremental per-PARTITION table statistics — the ANALYZE that scales:
   * a 100 TB table's stats must refresh in O(changed partitions), never
@@ -75,7 +76,7 @@ object StatsStore {
       statsPath: String,
       partCol: String,
       cols: Seq[String]): Unit =
-    statsRows(spark.read.parquet(tablePath), partCol, cols)
+    statsRows(Tables.parquet(spark, tablePath), partCol, cols)
       .write.mode(SaveMode.Overwrite).partitionBy(partCol)
       .parquet(statsPath)
 
@@ -95,7 +96,7 @@ object StatsStore {
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
-      val slice = spark.read.parquet(tablePath)
+      val slice = Tables.parquet(spark, tablePath)
         .filter(col(partCol).isin(changed: _*)) // partition-pruned scan
       statsRows(slice, partCol, cols)
         .write.mode(SaveMode.Overwrite).partitionBy(partCol)
@@ -110,7 +111,7 @@ object StatsStore {
     // rebuild contract after deletes/scrubs. Diff the changed set
     // against the values actually present (k-value column-pruned probe)
     // and drop the stale stats subdirectories explicitly.
-    val present = spark.read.parquet(tablePath)
+    val present = Tables.parquet(spark, tablePath)
       .filter(col(partCol).isin(changed: _*))
       .select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSet
@@ -128,7 +129,7 @@ object StatsStore {
 
   /** The current stats table (one row per partition). */
   def read(spark: SparkSession, statsPath: String): DataFrame =
-    spark.read.parquet(statsPath)
+    Tables.parquet(spark, statsPath)
 
   /** Per-partition NDV estimates for `c` from the stored registers:
     * (partCol, nz, ndv_est). Partitions whose column is entirely null

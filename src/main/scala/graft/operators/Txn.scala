@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 
 /** CROSS-TABLE atomic transactions over [[Versioned]] tables — the
   * multi-table guarantee single-table manifest formats punt on (Delta
@@ -232,7 +233,7 @@ object Txn {
         // always completes.
         val cur = Versioned.latestVersion(spark, w.table)
         if (cur > 0) {
-          val rm = spark.read.parquet(dp)
+          val rm = Tables.parquet(spark, dp)
             .select(w.keys.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
             .distinct()
           val survives = Versioned
@@ -420,7 +421,7 @@ object Txn {
         // wedge that would void the commit guarantee). Readers of the
         // empty version get zero rows; a later commit repopulates.
         if (in.op == "delete")
-          Versioned.deleteKeysAt(spark, in.table, spark.read.parquet(in.delta),
+          Versioned.deleteKeysAt(spark, in.table, Tables.parquet(spark, in.delta),
             in.keys, in.stamp, in.version, prior, mintIfEmpty = true,
             allowEmptyTable = true)
         else {
@@ -430,10 +431,10 @@ object Txn {
           val hint = in.affected
           if (in.op == "replace")
             Versioned.replacePartitionsAt(spark, in.table,
-              spark.read.parquet(in.delta), in.partCol, in.stamp, in.version,
+              Tables.parquet(spark, in.delta), in.partCol, in.stamp, in.version,
               prior, affectedHint = hint)
           else
-            Versioned.commitAt(spark, in.table, spark.read.parquet(in.delta),
+            Versioned.commitAt(spark, in.table, Tables.parquet(spark, in.delta),
               in.partCol, in.keys, in.stamp, in.version, prior,
               affectedHint = hint)
         }

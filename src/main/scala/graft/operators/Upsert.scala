@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Tables
 
 /** Keyed idempotent upsert — the Spark re-expression of the reference's
   * `INSERT ... ON CONFLICT (keys) DO UPDATE` sinks (K1-K6,
@@ -155,7 +156,7 @@ object Upsert {
         // affected partitions only), then read back for the dynamic
         // overwrite so the table is never read and rewritten in one job.
         val affected = d.select(partitionBy.map(col).toIndexedSeq: _*).distinct()
-        val base = spark.read.parquet(path).join(broadcast(affected), partitionBy, "left_semi")
+        val base = Tables.parquet(spark, path).join(broadcast(affected), partitionBy, "left_semi")
         val stage = new org.apache.hadoop.fs.Path(path + "__stage")
         fs.delete(stage, true)
         merge(base, d, keys).write.mode(SaveMode.Overwrite).parquet(stage.toString)
@@ -177,7 +178,7 @@ object Upsert {
       spark: SparkSession, path: String, partitionBy: Seq[String]): Unit = {
     val stage = new org.apache.hadoop.fs.Path(path + "__stage")
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(stage.toString).write
+    Tables.parquet(spark, stage.toString).write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*)
@@ -221,7 +222,7 @@ object Upsert {
     fs.delete(newP, true)
     fs.delete(oldP, true)
     // Stage the full result durably BEFORE touching the live table.
-    val staged = rewrite(spark.read.parquet(path)).write.mode(SaveMode.Overwrite)
+    val staged = rewrite(Tables.parquet(spark, path)).write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) staged.partitionBy(partitionBy: _*) else staged)
       .parquet(newP.toString)
     // Swap. Directory renames are atomic on HDFS-like filesystems.

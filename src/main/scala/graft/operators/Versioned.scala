@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Versioned snapshot table with time-travel reads — the table-format
   * layer the reference's overwrite-style sinks lack: every commit
@@ -174,7 +175,7 @@ object Versioned {
       }
       .groupBy(_._1).map { case (r, ds) => r -> ds.map(_._2) }
     byRoot.toSeq.sortBy(_._1).map { case (root, dirs) =>
-      spark.read.option("basePath", root).parquet(dirs: _*)
+      Tables.parquet(spark, dirs, basePath = Some(root))
         .drop("__gen")
         .withColumn("__p", col("__p").cast("string"))
     }.reduce(_ unionByName _)
@@ -650,9 +651,7 @@ object Versioned {
     }
     import spark.implicits._
     val nextDf = nextRows.toDF("__pe", "__ge", "__nx")
-    val feed = spark.read
-      .option("basePath", genRoot(path))
-      .parquet(s"${genRoot(path)}/*/*")
+    val feed = Tables.parquet(spark, Seq(s"${genRoot(path)}/*/*"), basePath = Some(genRoot(path)))
       .withColumn("__p", col("__p").cast("string"))
       .withColumn("__gen", col("__gen").cast("long"))
       .join(broadcast(nextDf),
@@ -1285,12 +1284,12 @@ object Versioned {
     // partition-directory inference would type a numeric-looking __p as
     // IntegerType, drifting the meta schema from Versioned's string-pval
     // convention — pin it back to string before fingerprinting
-    val copied = spark.read.parquet(s"$dest/data")
+    val copied = Tables.parquet(spark, s"$dest/data")
       .withColumn("__p", col("__p").cast("string"))
     val meta = partFingerprints(copied, "__p")
       .withColumn("src_version", lit(v))
     meta.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dest/meta")
-    val total = spark.read.parquet(s"$dest/meta")
+    val total = Tables.parquet(spark, s"$dest/meta")
       .agg(sum(col("rows"))).collect()(0).getLong(0) // 1 row — driver-sized
     (v, total)
   }
@@ -1310,12 +1309,12 @@ object Versioned {
     // cast __p on BOTH sides: older bundles' meta may carry an inferred
     // numeric __p, and the data read re-infers from the directory names —
     // string is Versioned's pval convention everywhere else
-    val expected = spark.read.parquet(s"$src/meta")
+    val expected = Tables.parquet(spark, s"$src/meta")
       .select(col("__p").cast("string"), col("rows"), col("xh"))
       .collect() // k rows: one per partition — driver-sized by design
       .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
     val actual = partFingerprints(
-        spark.read.parquet(s"$src/data")
+        Tables.parquet(spark, s"$src/data")
           .withColumn("__p", col("__p").cast("string")), "__p")
       .collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** File-level zone maps (min/max indexes) over a parquet table — the
   * coarse-grained secondary index that makes selective scans on a
@@ -38,7 +39,7 @@ object ZoneMap {
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
         count(when(col(c).isNull, 1)).as(s"nulls_$c"))
     } :+ count(lit(1)).as("rows")
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .write.mode(SaveMode.Overwrite).parquet(indexPath)
@@ -51,7 +52,7 @@ object ZoneMap {
     * every scan already materializes on the driver. */
   def candidateFiles(spark: SparkSession, indexPath: String, keep: Column): Seq[String] = {
     import spark.implicits._
-    spark.read.parquet(indexPath).filter(keep).select(col("file")).as[String]
+    Tables.parquet(spark, indexPath).filter(keep).select(col("file")).as[String]
       .collect().toIndexedSeq
   }
 
@@ -62,13 +63,13 @@ object ZoneMap {
     * table's schema when every file prunes. */
   def readPruned(spark: SparkSession, path: String, indexPath: String, keep: Column): DataFrame = {
     val files = candidateFiles(spark, indexPath, keep)
-    if (files.isEmpty) spark.read.parquet(path).limit(0)
-    else spark.read.parquet(files: _*)
+    if (files.isEmpty) Tables.parquet(spark, path).limit(0)
+    else Tables.parquet(spark, files)
   }
 
   /** Pruning evidence for audits/tests: (files kept, files total). */
   def pruningStats(spark: SparkSession, indexPath: String, keep: Column): (Long, Long) = {
-    val idx = spark.read.parquet(indexPath)
+    val idx = Tables.parquet(spark, indexPath)
     (idx.filter(keep).count(), idx.count())
   }
 }

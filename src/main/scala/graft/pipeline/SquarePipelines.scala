@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Tenant
 import graft.operators.{SquareOps, Upsert}
 import graft.sources.SquareSource
+import graft.Tables
 
 /** The six pipelines (SURVEY.md §3), each `scan → transform → keyed
   * upsert`. Transform stages are pure (graft.operators.SquareOps) and
@@ -72,32 +73,32 @@ final class SquarePipelines(
 
   def runPayments(spark: SparkSession, window: Option[TimeWindow] = None): DataFrame = {
     writePayments(spark, window)
-    spark.read.parquet(table("pos_payments"))
+    Tables.parquet(spark, table("pos_payments"))
   }
 
   def runOrderItems(spark: SparkSession, window: Option[TimeWindow] = None): DataFrame = {
     writeOrderItems(spark, window)
-    spark.read.parquet(table("pos_order_items"))
+    Tables.parquet(spark, table("pos_order_items"))
   }
 
   def runCatalog(spark: SparkSession): DataFrame = {
     writeCatalog(spark)
-    spark.read.parquet(table("pos_catalog"))
+    Tables.parquet(spark, table("pos_catalog"))
   }
 
   def runInventory(spark: SparkSession): DataFrame = {
     writeInventory(spark)
-    spark.read.parquet(table("pos_inventory"))
+    Tables.parquet(spark, table("pos_inventory"))
   }
 
   def runCategories(spark: SparkSession): DataFrame = {
     writeCategories(spark)
-    spark.read.parquet(table("pos_categories"))
+    Tables.parquet(spark, table("pos_categories"))
   }
 
   def runLocations(spark: SparkSession): DataFrame = {
     writeLocations(spark)
-    spark.read.parquet(table("pos_locations"))
+    Tables.parquet(spark, table("pos_locations"))
   }
 
   /** The full hourly run: all six pipelines at once. The reference runs

@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.DataType
+import graft.Tables
 
 /** Optimizer rule: answer an aggregate over a base table from a stored
   * MATERIALIZED VIEW of partial aggregates instead of the raw scan.
@@ -83,7 +84,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def rewrite(agg: Aggregate, mv: MvDef): Option[LogicalPlan] = {
     // Fresh scan of the MV (fresh exprIds every firing, so repeated
     // rewrites in one session can't collide).
-    val mvPlan = spark.read.parquet(mv.mvPath).queryExecution.analyzed
+    val mvPlan = Tables.parquet(spark, mv.mvPath).queryExecution.analyzed
     def mvAttr(name: String): Option[Attribute] = mvPlan.output.find(_.name == name)
 
     val groupOk = agg.groupingExpressions.forall {

@@ -151,7 +151,7 @@ object Clustering {
   def assignWithModel(spark: SparkSession, path: String, emb0: DataFrame): DataFrame =
     assign(
       emb0.select(col("vec_id"), Similarity.quantize("embedding").as("q")),
-      spark.read.parquet(path))
+      T.parquet(spark, path))
 
   /** The dataset's k-means model (2 Lloyd rounds, the c1 configuration)
     * as a MATERIALIZED artifact: trained once per dataset under a
@@ -376,7 +376,7 @@ object Clustering {
        |FROM sil GROUP BY cell""".stripMargin) { (s, d) =>
     val emb = T.embeddings(s, d)
     val embq = emb.select(col("vec_id"), Similarity.quantize("embedding").as("q"))
-    val cents = s.read.parquet(sharedModel(s, d))
+    val cents = T.parquet(s, sharedModel(s, d))
     val pairs = embq.withColumn("nx", Similarity.dotQ("q", "q"))
       .crossJoin(broadcast(cents.withColumn("ny", Similarity.dotQ("ceq", "ceq"))))
       .withColumn("dot", Similarity.dotQ("q", "ceq"))

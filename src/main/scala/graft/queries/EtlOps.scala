@@ -544,7 +544,7 @@ object EtlOps {
           edges, stagePath = Some(s"$tmp/labels"))
         .write.mode("overwrite").parquet(stage)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   val er1EntityClusters = QueryDef.sql(
@@ -817,7 +817,7 @@ object EtlOps {
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("o_year").parquet(stage)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   // --- k12_time_travel: versioned snapshots + time travel
@@ -970,7 +970,7 @@ object EtlOps {
     val tbl = graft.Scratch.dir("k16-compact") + "/orders"
     T.orders(s, d).repartition(64).write.mode("overwrite").parquet(tbl)
     graft.operators.Maintenance.compact(s, tbl)
-    s.read.parquet(tbl)
+    T.parquet(s, tbl)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(col("o_totalprice").cast("decimal(14,2)")).cast("double").as("total"))
@@ -1002,7 +1002,7 @@ object EtlOps {
       .write.partitionBy("event_type").mode("overwrite").parquet(tbl)
     graft.operators.Maintenance.evolvePartitioning(s, tbl, Seq("day"),
       df => df.withColumn("day", date_format(col("ts"), "yyyy-MM-dd")))
-    s.read.parquet(tbl)
+    T.parquet(s, tbl)
       .filter(col("day") >= "2024-01-10" && col("day") <= "2024-01-17")
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("users"),
@@ -1074,7 +1074,7 @@ object EtlOps {
     val delta = orders.filter(col("o_orderkey") % 11 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * 2) // exponent-only
     Upsert.upsertParquet(s, tbl, delta, Seq("o_orderkey"))
-    val merged = s.read.parquet(tbl)
+    val merged = T.parquet(s, tbl)
     val expected = orders.count()
     val run = Publish.publishAudited(s, pub, Map("orders" -> merged)) { staged =>
       val t = staged("orders")
@@ -1425,7 +1425,7 @@ object EtlOps {
     val (_, _, _, _, _, cSt) = statsTrioFixture(s, d)
     // keyed upsert rewrites ONE partition's key column; the incremental
     // refresh recomputes registers for exactly that partition
-    val delta = s.read.parquet(oTbl)
+    val delta = T.parquet(s, oTbl)
       .filter(col("st") === "O" && col("o_orderkey") % 13 === 0)
       .withColumn("k", col("k") + lit(1000000L))
     Upsert.upsertParquet(s, oTbl, delta, Seq("o_orderkey"), partitionBy = Seq("st"))
@@ -1642,8 +1642,8 @@ object EtlOps {
     import JoinAdvisor.Rel
     val (_, _, oTbl, oSt, cTbl, cSt) = statsTrioFixture(s, d)
     val (joined, side) = JoinAdvisor.advisedJoin(s,
-      s.read.parquet(oTbl).select(col("st"), col("ck")), Rel("O", oSt),
-      s.read.parquet(cTbl), Rel("C", cSt),
+      T.parquet(s, oTbl).select(col("st"), col("ck")), Rel("O", oSt),
+      T.parquet(s, cTbl), Rel("C", cSt),
       col("ck") === col("cck"), maxBroadcastRows = 100000L)
     val (_, lr, rr) = JoinAdvisor.broadcastSide(
       s, Rel("O", oSt), Rel("C", cSt), 100000L)
@@ -1683,9 +1683,9 @@ object EtlOps {
     import graft.plans.{JoinReorderRule, PlanMetrics}
     val (lTbl, lSt, oTbl, oSt, cTbl, cSt) = statsTrioFixture(s, d)
     // the chain AS THE USER WROTE IT: lineitem joins first
-    def chain = s.read.parquet(lTbl)
-      .join(s.read.parquet(oTbl), col("lok") === col("ok"))
-      .join(s.read.parquet(cTbl), col("ck") === col("cck"))
+    def chain = T.parquet(s, lTbl)
+      .join(T.parquet(s, oTbl), col("lok") === col("ok"))
+      .join(T.parquet(s, cTbl), col("ck") === col("cck"))
       .select(col("lok"), col("ck"), col("cck"))
     def firstJoinRows(df: DataFrame): (Long, Long) = {
       val m = PlanMetrics.actualRows(df)
@@ -1736,9 +1736,9 @@ object EtlOps {
     import graft.plans.{JoinReorderRule, PlanMetrics}
     val (lTbl, lSt, oTbl, oSt, cTbl, cSt) = statsTrioFixture(s, d)
     val custCount = T.customer(s, d).count()
-    def chain = s.read.parquet(lTbl)
-      .join(s.read.parquet(oTbl), col("lok") === col("ok"))
-      .join(s.read.parquet(cTbl), col("ck") === col("cck"))
+    def chain = T.parquet(s, lTbl)
+      .join(T.parquet(s, oTbl), col("lok") === col("ok"))
+      .join(T.parquet(s, cTbl), col("ck") === col("cck"))
       .select(col("lok"), col("ck"), col("cck"))
     val prevThresh = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -2655,7 +2655,7 @@ object EtlOps {
       graft.operators.Maintenance.zorderBy(s, s"$root/lineitem",
         Seq("l_partkey", "l_suppkey"), targetBytesPerFile = 1L << 20)
     } + "/lineitem"
-    s.read.parquet(tbl)
+    T.parquet(s, tbl)
       .filter(col("l_partkey").between(100, 300) && col("l_suppkey").between(10, 40))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
@@ -2768,7 +2768,7 @@ object EtlOps {
         .select(col("user_id")).distinct()
       Forget.scrub(s, t, forget, Seq("user_id"), Seq("event_type"))
     } + "/events_t"
-    val remaining = s.read.parquet(tbl)
+    val remaining = T.parquet(s, tbl)
       .groupBy(col("event_type")).agg(count(lit(1)).as("rem"))
     val orig = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n0"))
     orig.join(remaining, Seq("event_type"), "left")
@@ -2907,7 +2907,7 @@ object EtlOps {
     } + "/table"
     // partition-column type inference reads dt back as DATE; restore the
     // string form the oracle emits
-    s.read.parquet(tbl)
+    T.parquet(s, tbl)
       .groupBy(date_format(col("dt").cast("date"), "yyyy-MM-dd").as("dt"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(14,2)")).cast("double").as("total"))
@@ -2968,12 +2968,21 @@ object EtlOps {
           sum(col("l_extendedprice").cast("decimal(14,2)")).cast("double").as("sum_price"),
           min(col("l_shipdate")).as("min_ship"),
           max(col("l_shipdate")).as("max_ship"))
-      // the physical plan prints scan locations (the logical one doesn't)
-      val phys = q.queryExecution.executedPlan.toString
-      require(phys.contains(mvDir) && !phys.contains("lineitem.parquet"),
-        s"MV rewrite did not fire — plan still scans the base table:\n$phys")
+      // the scanned root paths, read off the optimized plan: a scan
+      // node's printed location is cut at 100 characters, so a string
+      // match on the plan depends on how long the scratch path is
+      val plan = q.queryExecution.optimizedPlan
+      val scanned = plan.collect {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+      }.flatMap {
+        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          fs.location.rootPaths.map(_.toString)
+        case _ => Nil
+      }
+      require(scanned.contains(mvDir) && !scanned.exists(_.contains("lineitem.parquet")),
+        s"MV rewrite did not fire — plan still scans the base table:\n$plan")
       q.write.parquet(outDir)
-      s.read.parquet(outDir)
+      T.parquet(s, outDir)
     } finally {
       MvRewriteRule.disable(s)
       MvRewriteRule.unregister(base)

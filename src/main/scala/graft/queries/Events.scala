@@ -544,7 +544,7 @@ object Events {
       }
       .start()
     q.awaitTermination()
-    s.read.parquet(state).select(col("window_start"), col("event_type"), col("n"))
+    T.parquet(s, state).select(col("window_start"), col("event_type"), col("n"))
     }
   }
 
@@ -601,7 +601,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(out).select(col("click_id"), col("purchase_id"), col("user_id"))
+    T.parquet(s, out).select(col("click_id"), col("purchase_id"), col("user_id"))
     }
   }
 
@@ -730,7 +730,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(out)
+    T.parquet(s, out)
       .select(col("event_id"), col("user_id"), col("event_type"), col("tss"))
     }
   }
@@ -865,7 +865,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(baseSeg).unionByName(s.read.parquet(incSeg))
+    T.parquet(s, baseSeg).unionByName(T.parquet(s, incSeg))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(col("l_extendedprice").cast("decimal(12,2)")).cast("double").as("total"))
@@ -932,7 +932,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(out)
+    T.parquet(s, out)
       .filter(col("sess_start") < lit(sentinelTs))
       .select(col("user_id"), col("sess_start"), col("sess_end"), col("n_events"))
     }
@@ -995,7 +995,7 @@ object Events {
     drain()
     ev.filter(col("event_id") % 7 === 0).coalesce(4).write.mode("append").parquet(feed)
     drain()
-    s.read.parquet(state).select(col("window_start"), col("event_type"), col("n"))
+    T.parquet(s, state).select(col("window_start"), col("event_type"), col("n"))
     }
   }
 
@@ -1076,7 +1076,7 @@ object Events {
     drain()
     sentinel(20).coalesce(1).write.mode("append").parquet(feed)
     drain()
-    s.read.parquet(out)
+    T.parquet(s, out)
       .filter(col("user_id") >= 0)
       .select(col("click_id"), col("purchase_id"), col("user_id"))
     }
@@ -1157,7 +1157,7 @@ object Events {
     drain()
     sentinel(20).coalesce(1).write.mode("append").parquet(feed)
     drain()
-    s.read.parquet(out)
+    T.parquet(s, out)
       .filter(col("user_id") >= 0)
       .select(col("click_id"), col("purchase_id"), col("user_id"))
     }
@@ -1219,7 +1219,7 @@ object Events {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(out)
+      T.parquet(s, out)
         .select(col("user_id"), col("event_id"), col("cum_cents"), col("milestone"))
     } finally s.conf.set(providerKey, prevProvider)
     }
@@ -1272,7 +1272,7 @@ object Events {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(out)
+      T.parquet(s, out)
         .select(col("user_id"), col("event_id"), col("event_type"), col("n"))
     } finally s.conf.set(providerKey, prevProvider)
     }
@@ -1328,7 +1328,7 @@ object Events {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(out)
+      T.parquet(s, out)
         .select(col("user_id"), col("event_id"), col("cents"),
           col("sum3"), col("n3"))
     } finally s.conf.set(providerKey, prevProvider)
@@ -1424,7 +1424,7 @@ object Events {
     drain()
     sentinel(18).coalesce(1).write.mode("append").parquet(feed)
     drain()
-    s.read.parquet(out)
+    T.parquet(s, out)
       .filter(col("week_us") <= lit(maxWeekUs))
       .select(col("week_us"), col("n"), col("cents"))
     }
@@ -1508,7 +1508,7 @@ object Events {
     drain()
     sentinel(18).coalesce(1).write.mode("append").parquet(feed)
     drain()
-    s.read.parquet(out)
+    T.parquet(s, out)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("start_us"), col("end_us"), col("n"), col("cents"))
     }
@@ -1668,7 +1668,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(out)
+    T.parquet(s, out)
       .select(col("event_id"), col("user_id"), col("segment"), col("amount"))
     }
   }
@@ -1727,7 +1727,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(out).select(col("click_id"), col("user_id"))
+    T.parquet(s, out).select(col("click_id"), col("user_id"))
     }
   }
 
@@ -1848,7 +1848,7 @@ object Events {
     val live = Versioned
       .manifestRefs(s, tbl, Versioned.latestVersion(s, tbl))
       .toDF("__p", "__gen")
-    s.read.parquet(out)
+    T.parquet(s, out)
       .join(broadcast(live), Seq("__p", "__gen"))
       .groupBy(col("st"))
       .agg(count(lit(1)).as("n"), sum(col("p")).cast("double").as("total"))
@@ -2011,7 +2011,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.option("basePath", out).parquet(s"$out/batch=*")
+    T.parquet(s, Seq(s"$out/batch=*"), basePath = Some(out))
       .groupBy(col("asset_id"))
       .agg(count(lit(1)).as("n_frames"),
         count_distinct(col("ahash")).as("n_distinct"),
@@ -2063,7 +2063,7 @@ object Events {
     q.processAllAvailable()
     q.stop()
     val est = HllSketch.estimate(
-      ReplayGuard.strip(s.read.parquet(regs)), Seq("event_type"))
+      ReplayGuard.strip(T.parquet(s, regs)), Seq("event_type"))
     val exact = T.events(s, d).groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("exact_n"))
     est.join(exact, Seq("event_type"))
@@ -2112,7 +2112,7 @@ object Events {
       .coalesce(2).write.mode("append").parquet(feed)
     q.processAllAvailable()
     q.stop()
-    val sketch = ReplayGuard.strip(s.read.parquet(cms))
+    val sketch = ReplayGuard.strip(T.parquet(s, cms))
     val cnt = T.events(s, d).groupBy(col("user_id"))
       .agg(count(lit(1)).as("exact_n"))
     val top = cnt.orderBy(col("exact_n").desc, col("user_id")).limit(20)
@@ -2197,7 +2197,7 @@ object Events {
       .coalesce(1).write.mode("append").parquet(feed)
     q.processAllAvailable()
     q.stop()
-    val landed = ReplayGuard.strip(s.read.parquet(summ))
+    val landed = ReplayGuard.strip(T.parquet(s, summ))
       .select(col("event_type"), col("v"), col("wt"))
     val qs = Seq(0.25, 0.5, 0.75, 0.9)
     val ests = QuantileSketch.quantiles(landed, Seq("event_type"), qs)

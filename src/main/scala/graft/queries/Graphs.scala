@@ -36,7 +36,7 @@ object Graphs {
       e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"), col("w")))
         .write.mode("overwrite").parquet(stage)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   /** Degree-ORIENTED co-purchase edges (src = lower-(degree,id)
@@ -63,7 +63,7 @@ object Graphs {
           when(fwd, col("v")).otherwise(col("u")).as("dst"))
         .write.mode("overwrite").parquet(stage)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   /** Loud HUB guard for the `collect_list` adjacency builds of the
@@ -110,7 +110,7 @@ object Graphs {
         .agg(count(lit(1)).as("w"))
         .write.mode("overwrite").parquet(stage)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   // --- g1_pagerank: weighted PageRank over the event-type transition

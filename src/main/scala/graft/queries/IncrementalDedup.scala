@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{MinHash16, TextFns}
+import graft.Tables
 
 /** Incremental deduplication — the production shape of the d1/d3
   * operators: a 100 TB corpus is not re-deduped per run; each INCREMENT
@@ -63,7 +64,7 @@ object IncrementalDedup {
         batchFirsts.limit(0).select(col("doc_id"),
           col("doc_id").as("matched_doc_id"), lit("exact-index").as("reason"))
       else {
-        val idx = spark.read.parquet(fpTable)
+        val idx = Tables.parquet(spark, fpTable)
           .select(col("fp"), col("doc_id").as("matched_doc_id"))
         batchFirsts.join(idx, Seq("fp"))
           .filter(col("doc_id") =!= col("matched_doc_id")) // replay-safe
@@ -106,7 +107,7 @@ object IncrementalDedup {
 
     val indexSigs =
       if (emptyState(spark, sigTable)) newSigs.limit(0)
-      else spark.read.parquet(sigTable)
+      else Tables.parquet(spark, sigTable)
 
     // candidate PAIRS from band collisions (slim: ids only); distinct
     // collapses multi-band collisions before any shingle array moves
@@ -127,7 +128,7 @@ object IncrementalDedup {
     // candidate partner ids — replayed appends deduped at candidate size
     val allShs = withShs.unionByName(
       if (emptyState(spark, shsTable)) withShs.limit(0)
-      else spark.read.parquet(shsTable))
+      else Tables.parquet(spark, shsTable))
     val partnerShs = allShs
       .join(pairs.select(col("matched_doc_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")

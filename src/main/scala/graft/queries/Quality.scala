@@ -653,7 +653,7 @@ object Quality {
           lit(null).cast("double")).otherwise(col("value")).as("value"),
         col("props"))
       .write.parquet(tbl)
-    val e = s.read.parquet(tbl).withColumn("cur", col("ts") >= cut)
+    val e = T.parquet(s, tbl).withColumn("cur", col("ts") >= cut)
     val agg = e.agg(
       count(when(!col("cur"), 1)).as("base_n"),
       count(when(col("cur"), 1)).as("cur_n"),

@@ -379,8 +379,8 @@ object Similarity {
   def queryIvfIndex(
       spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nprobe: Int = 3): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val cells = spark.read.parquet(s"$path/cells")
+    val cents = T.parquet(spark, s"$path/centroids")
+    val cells = T.parquet(spark, s"$path/cells")
     val q = queries.select(col("qid"), quantize("embedding").as("qeq"))
     val probes = rankAgainstCentroids(q, cents)
       .filter(col("rank") <= nprobe)
@@ -441,9 +441,9 @@ object Similarity {
   private def liveIndex(spark: SparkSession, path: String): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tombstonePath(path))
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idx = spark.read.parquet(path)
+    val idx = T.parquet(spark, path)
     if (!fs.exists(tp)) idx
-    else idx.join(broadcast(spark.read.parquet(tp.toString).distinct()),
+    else idx.join(broadcast(T.parquet(spark, tp.toString).distinct()),
       Seq("vec_id"), "left_anti")
   }
 
@@ -462,7 +462,7 @@ object Similarity {
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.operators.Upsert.recoverSwap(fs, path)
     if (fs.exists(tp)) {
-      val tomb = spark.read.parquet(tp.toString).distinct()
+      val tomb = T.parquet(spark, tp.toString).distinct()
       graft.operators.Upsert.stagedRewrite(spark, path)(
         _.join(broadcast(tomb), Seq("vec_id"), "left_anti"))
       fs.delete(tp, true)
@@ -488,7 +488,7 @@ object Similarity {
   def queryIndex(
       spark: SparkSession, path: String, queries: DataFrame, k: Int,
       nT: Int = nTables, tp: Int = tablePlanes): DataFrame =
-    queryFrom(spark.read.parquet(path), queries, k, nT, tp)
+    queryFrom(T.parquet(spark, path), queries, k, nT, tp)
 
   // --- v6_random_projection: Johnson-Lindenstrauss dimensionality
   // reduction, 64 → 16 dims against the deterministic ±1 hyperplane
@@ -1943,7 +1943,7 @@ object Similarity {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.option("basePath", out).parquet(s"$out/batch=*")
+    T.parquet(s, Seq(s"$out/batch=*"), basePath = Some(out))
       .select(col("qid"), col("cid"), col("cosine"), col("rank"))
   }
 

@@ -278,7 +278,7 @@ object TextDedup {
       s, s"d3pairs-v1-${Integer.toHexString(d.hashCode)}")
     if (!landed)
       d3MinhashLsh.run(s, d).write.mode("overwrite").parquet(stage)
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   // --- d6_dedup_clusters: connected components over the d3 near-dup

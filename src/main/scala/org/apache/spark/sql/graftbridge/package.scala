@@ -83,4 +83,10 @@ package object graftbridge {
       case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ =>
     }
+
+  /** Block until every listener (the status store included) has seen
+    * every event posted so far — `listenerBus` is `private[spark]`.
+    * Listener counters read after this are settled, with no sleep. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
 }

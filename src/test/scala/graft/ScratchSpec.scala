@@ -44,6 +44,15 @@ class ScratchSpec extends SparkSpec {
     }
   }
 
+  test("fingerprint: inputs whose names share a 32-bit String.hashCode get different keys") {
+    val root = Files.createTempDirectory("scratch-fp").toString
+    assert("Aa".hashCode === "BB".hashCode)
+    val a = Scratch.fingerprint(spark, Seq(s"$root/Aa"))
+    val b = Scratch.fingerprint(spark, Seq(s"$root/BB"))
+    assert(a !== b, "two absent inputs must not share a cache key")
+    assert(a === Scratch.fingerprint(spark, Seq(s"$root/Aa")), "the key is deterministic")
+  }
+
   test("local master falls back to java.io.tmpdir when no root configured") {
     val prev = spark.conf.getOption(Scratch.RootKey)
     spark.conf.unset(Scratch.RootKey)

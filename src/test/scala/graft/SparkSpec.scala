@@ -1,6 +1,11 @@
 package graft
 
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.drainListenerBus
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
@@ -45,4 +50,25 @@ abstract class SparkSpec extends AnyFunSuite {
       case None => spark.conf.unset(Scratch.StageModeKey)
     }
   }
+
+  /** The properties of every Spark job `body` starts, read after a
+    * listener-bus drain on both sides, so no earlier job is counted and
+    * no job of `body` is missed. */
+  protected def jobsOf(body: => Any): Seq[Properties] = {
+    val seen = new ConcurrentLinkedQueue[Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new Properties()))
+    }
+    drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drainListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  /** How many of `body`'s jobs run outside a SQL execution: jobs no
+    * query plan accounts for, such as Spark's parquet schema inference. */
+  protected def jobsOutsideSql(body: => Any): Int =
+    jobsOf(body).count(_.getProperty("spark.sql.execution.id") == null)
 }

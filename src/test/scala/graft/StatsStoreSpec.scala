@@ -39,6 +39,21 @@ class StatsStoreSpec extends SparkSpec {
     assert(incr === full)
   }
 
+  test("a partitioned upsert and its stats refresh start no job outside a SQL execution") {
+    val root = Files.createTempDirectory("graft-stats-jobs").toString
+    val tbl = s"$root/t"; val st = s"$root/stats"
+    Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0))
+      .toDF("id", "part", "v").write.partitionBy("part").parquet(tbl)
+    StatsStore.rebuild(spark, tbl, st, "part", Seq("v"))
+    val delta = Seq((1L, "a", 99.0)).toDF("id", "part", "v")
+    assert(jobsOutsideSql {
+      graft.operators.Upsert.upsertParquet(spark, tbl, delta, Seq("id"), partitionBy = Seq("part"))
+      StatsStore.refreshPartitions(spark, tbl, st, "part", Seq("v"), Seq("a"))
+    } === 0)
+    assert(StatsStore.read(spark, st).filter(col("part") === "a")
+      .select(col("rows"), col("max_v")).as[(Long, Double)].collect().head === ((2L, 99.0)))
+  }
+
   test("a changed partition that becomes empty loses its stats row") {
     // dynamic overwrite cannot express "now empty": without the
     // explicit stale-dir drop, a deleted partition's old stats row
