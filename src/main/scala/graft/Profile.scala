@@ -30,6 +30,8 @@ object Profile {
     // the attribution view for gates whose wall is job-count x fee
     val perJob = sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    // stageId → the site of the job that submitted it
+    val stageSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val siteAgg = new java.util.concurrent.ConcurrentHashMap[String, (Int, Double)]()
     // SQL-execution attribution: executionId → action call site (the
     // description of SparkListenerSQLExecutionStart), joined to jobs via
@@ -52,6 +54,7 @@ object Profile {
               .orElse(Option(p.getProperty("callSite.short")))
           }.getOrElse("?")
           jobStart.put(j.jobId, (System.nanoTime(), site))
+          if (site != "?") j.stageIds.foreach(stageSite.put(_, site))
         }
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = if (perJob) {
@@ -64,13 +67,16 @@ object Profile {
         stages.incrementAndGet()
         tasks.addAndGet(s.stageInfo.numTasks.toLong)
         if (perJob) {
-          // local-mode jobs rarely carry callSite.short in their
-          // properties, but every STAGE is named for its creation site
-          // ("parquet at Versioned.scala:118") — aggregate those
+          // each stage is charged to its job's site: a stage's own name
+          // is its creation site, which under AQE is a Spark-internal
+          // frame (CompletableFuture.java) for most stages — the name is
+          // the fallback only when no job site is known
           val wall = (for {
             t0 <- s.stageInfo.submissionTime; t1 <- s.stageInfo.completionTime
           } yield (t1 - t0) / 1e3).getOrElse(0.0)
-          siteAgg.merge(s.stageInfo.name, (1, wall),
+          val site = Option(stageSite.remove(s.stageInfo.stageId))
+            .getOrElse(s.stageInfo.name)
+          siteAgg.merge(site, (1, wall),
             (a, b) => (a._1 + b._1, a._2 + b._2))
         }
       }
@@ -83,6 +89,10 @@ object Profile {
       .write.format("noop").mode("overwrite").save()
     catch { case e: Throwable => System.err.println(s"[profile] warmup: $e") }
     Scratch.releaseRunState(spark)
+    // the per-site view reports measured queries only
+    drainListenerBus(spark)
+    siteAgg.clear()
+    stageSite.clear()
     println(f"${"query"}%-28s ${"secs"}%8s ${"jobs"}%6s ${"stages"}%7s ${"tasks"}%7s")
     names.foreach { n =>
       // inline conf pokes for in-process A/B: "set:key=value" args apply
@@ -108,6 +118,7 @@ object Profile {
               case (site, (c, w)) => println(f"[site] $c%4dx $w%8.3f s  $site")
             }
             siteAgg.clear()
+            stageSite.clear()
           }
         } catch {
           case e: Throwable =>

@@ -32,30 +32,31 @@ object JoinAdvisor {
   final case class Candidate(label: String,
       left: Rel, leftKey: String, right: Rel, rightKey: String)
 
-  /** Total row count from a stats store, GUARDED: an empty or missing
-    * stats table folds `sum(rows)` to NULL, and advice computed off a
-    * bare NPE-or-zero is worse than no advice — require a positive
-    * count with the stats path named, so "rebuild the stats" is the
-    * error message, not a stack trace. */
-  private def statsRowCount(spark: SparkSession, r: Rel): Long = {
-    val row = StatsStore.read(spark, r.statsPath)
-      .agg(org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.col("rows")))
-      .collect()(0)
-    require(!row.isNullAt(0),
+  /** Total row count plus one [[StatsStore.summary]] fold of the
+    * register columns `r` tracks among `cols`, GUARDED: an empty stats
+    * table sums `rows` to nothing, and advice computed off a bare
+    * NPE-or-zero is worse than no advice — require a positive count
+    * with the stats path named, so "rebuild the stats" is the error
+    * message, not a stack trace. */
+  private def guardedFold(
+      spark: SparkSession, r: Rel, cols: Seq[String]): (Long, StatsStore.Summary) = {
+    val st = StatsStore.read(spark, r.statsPath)
+    val s = StatsStore.summary(st, cols.filter(c => st.columns.contains(s"ndv_regs_$c")))
+    require(s.rows.isDefined,
       s"stats store at ${r.statsPath} (rel '${r.name}') is empty — " +
         "rebuild it (StatsStore.rebuild) before asking for join advice")
-    val n = row.getLong(0)
+    val n = s.rows.get
     require(n > 0,
       s"stats store at ${r.statsPath} (rel '${r.name}') reports $n total " +
         "rows — join advice needs a positive row count; rebuild the stats")
-    n
+    (n, s)
   }
 
   /** Rank candidates by estimated output rows, ascending — the advisor
-    * picks `ranked.head`. Driver-sized: two stats folds per candidate,
-    * no data-table I/O. Returns (label, estRows) pairs sorted by
-    * (estRows, label) so ties break deterministically. */
+    * picks `ranked.head`. Driver-sized: two stats folds (one collect
+    * of k stats rows each) per candidate, no data-table I/O. Returns
+    * (label, estRows) pairs sorted by (estRows, label) so ties break
+    * deterministically. */
   def rank(spark: SparkSession, cands: Seq[Candidate]): Seq[(String, Double)] =
     cands.map { c =>
       c.label -> StatsStore.estimateJoinRows(
@@ -78,7 +79,7 @@ object JoinAdvisor {
       spark: SparkSession,
       left: Rel, right: Rel,
       maxBroadcastRows: Long): (String, Long, Long) = {
-    val (lr, rr) = (statsRowCount(spark, left), statsRowCount(spark, right))
+    val (lr, rr) = (guardedFold(spark, left, Nil)._1, guardedFold(spark, right, Nil)._1)
     val side =
       if (lr <= rr && lr <= maxBroadcastRows) "left"
       else if (rr < lr && rr <= maxBroadcastRows) "right"
@@ -146,19 +147,20 @@ object JoinAdvisor {
       spark: SparkSession, rels: Seq[Rel], edges: Seq[Edge]): Seq[Step] = {
     require(rels.size >= 2 && edges.nonEmpty, "need a joinable graph")
     val byName = rels.map(r => r.name -> r).toMap
-    // one stats fold per (rel, col) actually referenced by an edge
+    // one stats fold per rel an edge references, over the columns its
+    // edges join on; every row count is checked before any NDV
     val needed: Seq[(String, String)] = edges
       .flatMap(e => Seq(e.left -> e.leftCol, e.right -> e.rightCol)).distinct
-    val rowsOf: Map[String, Double] = needed.map(_._1).distinct.map { r =>
-      r -> statsRowCount(spark, byName(r)).toDouble
+    val folds: Map[String, (Long, StatsStore.Summary)] = needed.map(_._1).distinct.map { r =>
+      r -> guardedFold(spark, byName(r), needed.collect { case (`r`, c) => c })
     }.toMap
+    val rowsOf: Map[String, Double] = folds.map { case (r, (n, _)) => r -> n.toDouble }
     val ndvOf: Map[(String, String), Double] = needed.map { case (r, c) =>
-      val row = StatsStore.ndvGlobal(
-        StatsStore.read(spark, byName(r).statsPath), c).collect()(0)
-      require(!row.isNullAt(1) && row.getDouble(1) > 0.0,
+      val est = folds(r)._2.ndv.get(c).map(_.est).getOrElse(0.0)
+      require(est > 0.0,
         s"stats store at ${byName(r).statsPath} (rel '$r') has no NDV " +
           s"registers for column '$c' — rebuild the stats tracking it")
-      (r, c) -> row.getDouble(1)
+      (r, c) -> est
     }.toMap
 
     def est(insideRows: Double, insideNdv: Double, outside: String, outsideCol: String): Double = {

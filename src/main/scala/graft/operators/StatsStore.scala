@@ -23,7 +23,7 @@ import graft.Tables
   * register array per tracked column (`ndv_regs_<c>`) — registers are
   * md5-derived and max-merged, so they are as deterministic as the
   * min/max columns (incremental ≡ rebuild holds bit-for-bit) and
-  * MERGEABLE: the whole-table distinct count ([[ndvGlobal]]) folds the
+  * MERGEABLE: the whole-table distinct count ([[summary]]) folds the
   * per-partition registers with an element-wise max instead of
   * rescanning anything, and a refresh recomputes registers only for
   * the changed partitions. [[estimateJoinRows]] is the CBO consumer:
@@ -93,28 +93,28 @@ object StatsStore {
       cols: Seq[String],
       changed: Seq[Any]): Unit = {
     if (changed.isEmpty) return
+    // Dynamic overwrite cannot express "now empty": a changed partition
+    // whose recomputed slice has ZERO rows emits no file, so its stale
+    // stats row would ride along and break the incremental-equals-
+    // rebuild contract after deletes/scrubs. The values actually present
+    // ride the stats write as an Observation (one stats row per present
+    // value, so the set holds at most |changed| values); the stale stats
+    // subdirectories are then dropped explicitly.
+    val obs = org.apache.spark.sql.Observation()
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
       val slice = Tables.parquet(spark, tablePath)
         .filter(col(partCol).isin(changed: _*)) // partition-pruned scan
       statsRows(slice, partCol, cols)
+        .observe(obs, collect_set(col(partCol).cast("string")).as("present"))
         .write.mode(SaveMode.Overwrite).partitionBy(partCol)
         .parquet(statsPath)
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
-    // Dynamic overwrite cannot express "now empty": a changed partition
-    // whose recomputed slice has ZERO rows emits no file, so its stale
-    // stats row would ride along and break the incremental-equals-
-    // rebuild contract after deletes/scrubs. Diff the changed set
-    // against the values actually present (k-value column-pruned probe)
-    // and drop the stale stats subdirectories explicitly.
-    val present = Tables.parquet(spark, tablePath)
-      .filter(col(partCol).isin(changed: _*))
-      .select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
+    val present = obs.get("present").asInstanceOf[scala.collection.Seq[String]].toSet
     val gone = changed.map(String.valueOf).filterNot(present.contains)
     if (gone.nonEmpty) {
       import org.apache.hadoop.fs.Path
@@ -145,35 +145,67 @@ object StatsStore {
           .otherwise(expr(s"${HllSketch.alphaNum} / CAST(isum AS DOUBLE)")))
       .drop("isum")
 
-  /** Whole-table NDV for `c` by MERGING the per-partition registers
-    * (element-wise max) — the refresh-free path: no rescan of any
-    * partition, just a k×256-row fold of the stats rows. Returns
-    * (nz, ndv_est), one row. */
-  def ndvGlobal(stats: DataFrame, c: String): DataFrame =
-    stats.select(posexplode(col(s"ndv_regs_$c")).as(Seq("bkt", "mr")))
-      .groupBy(col("bkt")).agg(max(col("mr")).as("mr"))
-      .agg(count(when(col("mr") > 0, 1)).as("nz"),
-        sum(expr("CAST(pow(2, 40 - mr) AS BIGINT)")).as("isum"))
-      .select(col("nz"),
-        when(col("nz") === 0, lit(0.0))
-          .otherwise(expr(s"${HllSketch.alphaNum} / CAST(isum AS DOUBLE)"))
-          .as("ndv_est"))
+  /** Merged NDV of one tracked column: `nz` non-zero registers and the
+    * raw HLL estimate (0 when no register is set). */
+  final case class Ndv(nz: Long, est: Double)
+
+  /** A stats store's totals: `rows` summed over its stats rows (None
+    * when the store holds no row, as SQL's `sum` reads NULL) and the
+    * merged [[Ndv]] of each requested column. */
+  final case class Summary(rows: Option[Long], ndv: Map[String, Ndv])
+
+  /** The one way to read a stats store's totals: ONE collect of the k
+    * stats rows (`rows` plus only the requested `ndv_regs_<c>` arrays;
+    * one job inside a SQL execution, no shuffle), then the register
+    * max-merge and the harmonic estimate on the driver: element-wise
+    * max with NULL arrays skipped, isum = Σ trunc(2^(40−mr)) in 64-bit
+    * integers, ndv = alpha / isum — the oracle SQL's arithmetic
+    * ([[HllSketch.sqlEstimate]]), bit for bit.
+    *
+    * Driver-sized by contract: the driver receives k rows × 256 longs
+    * per requested column, k being the store's row count (one row per
+    * partition) — ~20 MB for one column of a 10,000-partition table. */
+  def summary(stats: DataFrame, cols: Seq[String]): Summary = {
+    val picked = stats.select(
+      (col("rows").cast("long") +: cols.map(c => col(s"ndv_regs_$c"))): _*)
+      .collect()
+    val rows =
+      if (picked.isEmpty) None
+      else Some(picked.iterator.map(r => if (r.isNullAt(0)) 0L else r.getLong(0)).sum)
+    val ndv = cols.zipWithIndex.map { case (c, i) =>
+      val merged = new Array[Long](256)
+      picked.foreach { r =>
+        if (!r.isNullAt(i + 1)) {
+          val a = r.getSeq[Long](i + 1)
+          var b = 0
+          while (b < 256) { if (a(b) > merged(b)) merged(b) = a(b); b += 1 }
+        }
+      }
+      var isum = 0L
+      var nz = 0L
+      merged.foreach { mr =>
+        if (mr > 0L) nz += 1
+        isum += math.pow(2.0, (40L - mr).toDouble).toLong
+      }
+      c -> Ndv(nz, if (nz == 0) 0.0 else HllSketch.alphaNumValue / isum.toDouble)
+    }.toMap
+    Summary(rows, ndv)
+  }
 
   /** CBO consumer: equi-join output-size estimate |A ⋈ B| ≈
     * |A|·|B| / max(ndv_A, ndv_B) straight off two stats stores — the
     * estimate a join planner reads BEFORE touching either table.
-    * Driver-sized: two 1-row aggregates over k stats rows each. */
+    * Driver-sized: one [[summary]] fold (one collect of k stats rows)
+    * per store. */
   def estimateJoinRows(
       spark: SparkSession,
       statsPathA: String, colA: String,
       statsPathB: String, colB: String): Double = {
     def side(path: String, c: String): (Long, Double) = {
-      val st = read(spark, path)
-      val rowsRow = st.agg(sum(col("rows"))).collect()(0)
-      require(!rowsRow.isNullAt(0),
+      val s = summary(read(spark, path), Seq(c))
+      require(s.rows.isDefined,
         s"stats store at $path is empty — rebuild it before estimating")
-      val ndv = ndvGlobal(st, c).collect()(0).getDouble(1)
-      (rowsRow.getLong(0), ndv)
+      (s.rows.get, s.ndv(c).est)
     }
     val (ra, na) = side(statsPathA, colA)
     val (rb, nb) = side(statsPathB, colB)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * partition value as string — [[VersionedZone]]'s key discipline),
   * carrying the exact row count plus one 256-slot md5-deterministic HLL
   * register array per tracked column (`ndv_regs_<col>` —
-  * [[StatsStore]]'s exact shape, so [[StatsStore.ndvGlobal]] folds it
+  * [[StatsStore]]'s exact shape, so [[StatsStore.summary]] folds it
   * unchanged), and `tv`, the table version the row describes.
   *
   * Scale: a commit's stats delta recomputes ONLY the affected
@@ -84,30 +84,16 @@ object VersionedStats {
   def read(spark: SparkSession, statsPath: String): DataFrame =
     Versioned.readAsOf(spark, statsPath)
 
-  /** Exact total rows of the described table, off stats rows alone. */
-  def totalRows(stats: DataFrame): Long = {
-    val r = stats.agg(sum(col("rows"))).collect()(0)
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  /** Whole-table NDV for `c` by max-merging the per-partition register
-    * arrays ([[StatsStore.ndvGlobal]] on the versioned rows) — the RAW
-    * HLL estimate, bit-identical to the SQL replay
-    * ([[HllSketch.sqlEstimate]]), so it can ride a hash gate. */
-  def ndvGlobal(stats: DataFrame, c: String): Double =
-    StatsStore.ndvGlobal(stats, c).collect()(0).getDouble(1)
-
-  /** SMALL-RANGE-CORRECTED NDV: the raw HLL estimator overestimates
-    * badly when n ≪ m (empty registers dominate the harmonic sum — a
-    * 44-distinct column reads as ~200); below Flajolet's 2.5·m switch
-    * point with free registers, linear counting m·ln(m/(m−nz)) is the
-    * right estimator. Scala-side decision consumer ONLY: `ln` is not
+  /** SMALL-RANGE-CORRECTED NDV of `c` off a [[StatsStore.summary]] of
+    * the stats rows: the raw HLL estimator overestimates badly when
+    * n ≪ m (empty registers dominate the harmonic sum — a 44-distinct
+    * column reads as ~200); below Flajolet's 2.5·m switch point with
+    * free registers, linear counting m·ln(m/(m−nz)) is the right
+    * estimator. Scala-side decision consumer ONLY: `ln` is not
     * correctly-rounded, so it is not cross-engine bit-identical —
-    * oracle-replayed surfaces keep [[ndvGlobal]]'s raw formula. */
-  def ndvGlobalCorrected(stats: DataFrame, c: String): Double = {
-    val row = StatsStore.ndvGlobal(stats, c).collect()(0)
-    val nz = row.getLong(0)
-    val raw = row.getDouble(1)
+    * oracle-replayed surfaces keep the summary's raw estimate. */
+  def ndvGlobalCorrected(s: StatsStore.Summary, c: String): Double = {
+    val StatsStore.Ndv(nz, raw) = s.ndv(c)
     val m = 256.0
     if (raw <= 2.5 * m && nz < 256) m * math.log(m / (m - nz)) else raw
   }
@@ -115,6 +101,6 @@ object VersionedStats {
   /** k50's physical-strategy refusal off LIVE stats: 'broadcast' iff
     * the described table currently fits the row budget, else 'shuffle'.
     * Exact counts, so the advice is deterministic and replayable. */
-  def broadcastAdvice(stats: DataFrame, maxBroadcastRows: Long): String =
-    if (totalRows(stats) <= maxBroadcastRows) "broadcast" else "shuffle"
+  def broadcastAdvice(s: StatsStore.Summary, maxBroadcastRows: Long): String =
+    if (s.rows.getOrElse(0L) <= maxBroadcastRows) "broadcast" else "shuffle"
 }

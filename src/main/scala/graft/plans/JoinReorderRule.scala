@@ -83,12 +83,9 @@ case class JoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * bumps the table version, which changes the memo key, so the very
     * next query plans against the new cardinalities with no re-enable
     * (the k59 gate's flip). Each fold is ONE collect of the k stats
-    * rows (driver-sized by design); the register max-merge and the
-    * harmonic estimate run in the driver with arithmetic bit-identical
-    * to [[StatsStore.ndvGlobal]]'s SQL (same pow/truncate/alpha), so
-    * the rule's decisions are unchanged. The loads themselves compile
-    * queries — the ThreadLocal re-entrancy latch keeps this rule out of
-    * its own stats plans. */
+    * rows ([[StatsStore.summary]], driver-sized by design). The loads
+    * themselves compile queries — the ThreadLocal re-entrancy latch
+    * keeps this rule out of its own stats plans. */
   private def loadStats(conf: String): Seq[RelStats] = {
     loading.set(true)
     try {
@@ -110,41 +107,17 @@ case class JoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] {
     } finally loading.set(false)
   }
 
-  /** One collect of the stats rows → (total rows, per-column merged
-    * NDV). Register fold replicates ndvGlobal exactly: dense 256-slot
-    * arrays, element-wise max across partitions, isum = Σ trunc(2^(40−
-    * mr)), ndv = alpha / isum (0 when no register is set). */
+  /** One [[StatsStore.summary]] fold of every tracked column →
+    * (total rows, per-column merged NDV). */
   private def foldStats(path: String, v: Long): (Long, Map[String, Double]) = {
-    import org.apache.spark.sql.functions.col
     val st =
       if (v > 0) graft.operators.Versioned.readAsOf(spark, path)
       else StatsStore.read(spark, path)
     val tracked = st.schema.fieldNames.collect {
       case f if f.startsWith("ndv_regs_") => f.stripPrefix("ndv_regs_")
     }.toSeq
-    val picked = st.select(
-      (col("rows").cast("long") +: tracked.map(c => col(s"ndv_regs_$c"))): _*)
-      .collect()
-    val rows = picked.iterator.map(r => if (r.isNullAt(0)) 0L else r.getLong(0)).sum
-    val ndv = tracked.zipWithIndex.map { case (c, i) =>
-      val merged = new Array[Long](256)
-      picked.foreach { r =>
-        if (!r.isNullAt(i + 1)) {
-          val a = r.getSeq[Long](i + 1)
-          var b = 0
-          while (b < 256) { if (a(b) > merged(b)) merged(b) = a(b); b += 1 }
-        }
-      }
-      var isum = 0L
-      var nz = 0
-      merged.foreach { mr =>
-        if (mr > 0L) nz += 1
-        isum += math.pow(2.0, (40L - mr).toDouble).toLong
-      }
-      c -> (if (nz == 0) 0.0
-            else graft.operators.HllSketch.alphaNumValue / isum.toDouble)
-    }.toMap
-    (rows, ndv)
+    val s = StatsStore.summary(st, tracked)
+    (s.rows.getOrElse(0L), s.ndv.map { case (c, n) => c -> n.est })
   }
 
   /** Flatten an inner hint-free join chain, looking through the

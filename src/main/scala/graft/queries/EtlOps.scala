@@ -804,6 +804,19 @@ object EtlOps {
         sum(col("o_totalprice").cast("decimal(14,2)")).cast("double").as("total"))
   }
 
+  /** The root paths `df`'s file scans read, off its optimized plan. A
+    * gate that proves which tables a plan reads checks these, not the
+    * plan string: a scan node's printed location is cut at 100
+    * characters, so a string match depends on how long the path is. */
+  private def scannedRoots(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+    }.flatMap {
+      case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        fs.location.rootPaths.map(_.toString)
+      case _ => Nil
+    }
+
   /** Orders in a year-partitioned parquet layout, staged once per
     * (sfDir, session) under a deterministic temp path so repeated reads
     * (bench, tests) reuse the layout. Library users call
@@ -1433,12 +1446,13 @@ object EtlOps {
     val st = StatsStore.read(s, oSt)
     val per = StatsStore.ndvPerPartition(st, "st", "k")
       .select(col("st").as("part"), col("nz").cast("long").as("nz"), col("ndv_est"))
-    val glob = StatsStore.ndvGlobal(st, "k")
-      .select(lit("__all__").as("part"), col("nz").cast("long").as("nz"), col("ndv_est"))
+    // the whole-table and join-size rows are driver folds of the stats
+    // rows, landed as one local frame
+    val glob = StatsStore.summary(st, Seq("k")).ndv("k")
     val joinEst = StatsStore.estimateJoinRows(s, oSt, "k", cSt, "cck")
-    val joinRow = s.range(1).select(lit("__join_est__").as("part"),
-      lit(0L).as("nz"), lit(joinEst).as("ndv_est"))
-    per.unionByName(glob).unionByName(joinRow)
+    import s.implicits._
+    per.unionByName(Seq(("__all__", glob.nz, glob.est), ("__join_est__", 0L, joinEst))
+      .toDF("part", "nz", "ndv_est"))
   }
 
   // --- k46_join_advisor: STATS-DRIVEN join ordering — the planning
@@ -2968,19 +2982,10 @@ object EtlOps {
           sum(col("l_extendedprice").cast("decimal(14,2)")).cast("double").as("sum_price"),
           min(col("l_shipdate")).as("min_ship"),
           max(col("l_shipdate")).as("max_ship"))
-      // the scanned root paths, read off the optimized plan: a scan
-      // node's printed location is cut at 100 characters, so a string
-      // match on the plan depends on how long the scratch path is
-      val plan = q.queryExecution.optimizedPlan
-      val scanned = plan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
-      }.flatMap {
-        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          fs.location.rootPaths.map(_.toString)
-        case _ => Nil
-      }
+      val scanned = scannedRoots(q)
       require(scanned.contains(mvDir) && !scanned.exists(_.contains("lineitem.parquet")),
-        s"MV rewrite did not fire — plan still scans the base table:\n$plan")
+        s"MV rewrite did not fire — plan still scans the base table:\n" +
+          q.queryExecution.optimizedPlan)
       q.write.parquet(outDir)
       T.parquet(s, outDir)
     } finally {
@@ -3920,7 +3925,7 @@ object EtlOps {
       require(Versioned.latestVersion(s, tbl) == 2L
           && Versioned.latestVersion(s, idx) == 2L,
         "ledger and sketch index must move in lockstep")
-      // the estimate answers from index rows ONLY — plan-string proof
+      // the estimate answers from index rows ONLY — scanned-path proof
       // on the index read, then a DRIVER-SIDE cumulative fold
       // (QuantileSketch.quantilesGlobal): the summary is ≤ m·(B+2)
       // rows by construction, so the group-less fold is metadata-scale
@@ -3928,9 +3933,12 @@ object EtlOps {
       // partition-less WindowExec (one task anyway, plus the lint's
       // fatal pattern); the fold result is a 3-row local relation
       val sk = Versioned.readAsOf(s, idx).select(col("v"), col("wt"))
-      val phys = sk.queryExecution.executedPlan.toString
-      require(!phys.contains("/orders"),
-        s"quantile estimate must never scan the ledger:\n$phys")
+      val scanned = scannedRoots(sk)
+      val ledger = Seq(tbl, s"$fixRoot/orders") // the clone and its source
+      require(scanned.exists(_.startsWith(s"$idx/")) &&
+          !scanned.exists(p => ledger.exists(l => p.startsWith(s"$l/"))),
+        s"quantile estimate must read the index and never the ledger, " +
+          s"scanned: ${scanned.mkString(", ")}")
       import s.implicits._
       val estsStaged = broadcast(
         QuantileSketch.quantilesGlobal(sk, Seq(0.01, 0.5, 0.99))

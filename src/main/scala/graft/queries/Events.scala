@@ -2933,7 +2933,7 @@ object Events {
        |FROM (SELECT 1 AS batch_seq UNION ALL SELECT 2 UNION ALL SELECT 3) s,
        |  t, ee""".stripMargin) { (s, d) =>
     withStatePartitions(s, 4) { withoutAqe(s) {
-    import graft.operators.{Txn, Versioned, VersionedStats}
+    import graft.operators.{StatsStore, Txn, Versioned, VersionedStats}
     val root = graft.Scratch.dir("e46-livestats")
     val feed = sharedEventFeed(s, d); val ckpt = s"$root/ckpt"
     // stats path sorts BEFORE the ledger: Txn applies in sorted-table
@@ -2962,7 +2962,8 @@ object Events {
             VersionedStats.commitWithStats(s, s"$root/txns/txn-$batchId",
               ledger, stats, batch, "event_type", Seq("event_id"),
               cols = Seq("event_id", "user_id"), stamp = Some(batchId + 1))
-          val st = VersionedStats.read(s, stats)
+          // one fold of the live stats serves every consumer below
+          val live = StatsStore.summary(VersionedStats.read(s, stats), Seq("user_id"))
           // LIVE invariants between transactions, proved at the
           // mid-stream point (batch 1 committed, a batch still to
           // come): the stats the planner would read RIGHT NOW describe
@@ -2974,17 +2975,17 @@ object Events {
           if (batchId == 1L) {
             probeFired.set(true)
             val exactRows = Versioned.readAsOf(s, ledger).count()
-            val statsRows = VersionedStats.totalRows(st)
+            val statsRows = live.rows.getOrElse(0L)
             require(statsRows == exactRows,
               s"mid-ingest stats rows $statsRows != table rows $exactRows")
-            val ndvEst = VersionedStats.ndvGlobalCorrected(st, "user_id")
+            val ndvEst = VersionedStats.ndvGlobalCorrected(live, "user_id")
             val ndvExact = Versioned.readAsOf(s, ledger)
               .select(col("user_id")).distinct().count()
             require(ndvExact > 0 &&
               math.abs(ndvEst - ndvExact) / ndvExact <= 0.15,
               s"mid-ingest NDV estimate $ndvEst drifted from exact $ndvExact")
           }
-          advices(batchId) = VersionedStats.broadcastAdvice(st, budget)
+          advices(batchId) = VersionedStats.broadcastAdvice(live, budget)
           ()
         }
       }
@@ -3003,12 +3004,12 @@ object Events {
     require(hist.size == 3 && hist.head == "broadcast" &&
       hist.drop(1).forall(_ == "shuffle"),
       s"advice must flip broadcast→shuffle over the drain, got $hist")
-    val st = VersionedStats.read(s, stats)
-    val finalRows = VersionedStats.totalRows(st)
+    val fin = StatsStore.summary(VersionedStats.read(s, stats), Seq("event_id"))
+    val finalRows = fin.rows.getOrElse(0L)
     // event_id NDV rides the hash gate RAW: its cardinality (= rows) is
     // far above the small-range switch, where raw HLL is accurate AND
     // bit-identical to the DuckDB register replay
-    val ndvEst = VersionedStats.ndvGlobal(st, "event_id")
+    val ndvEst = fin.ndv("event_id").est
     import s.implicits._
     hist.zipWithIndex.map { case (adv, i) => (i + 1, adv, finalRows, ndvEst) }
       .toDF("batch_seq", "advised", "final_rows", "ndv_events_est")

@@ -112,6 +112,30 @@ class JoinAdvisorSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("planLeftDeep over a three-relation chain starts one job per rel, each inside a SQL execution") {
+    val r = root()
+    // the CBO trio's shape: lineitem(ok) – orders(ok, ck) – customer(ck)
+    def land(df: org.apache.spark.sql.DataFrame, name: String, cols: Seq[String]): Rel = {
+      df.write.partitionBy("p").parquet(s"$r/$name")
+      StatsStore.rebuild(spark, s"$r/$name", s"$r/${name}_stats", "p", cols)
+      Rel(name, s"$r/${name}_stats")
+    }
+    val l = land(spark.range(4000).selectExpr("id % 1000 AS ok", "CAST(id % 3 AS STRING) AS p"),
+      "l", Seq("ok"))
+    val o = land(spark.range(1000).selectExpr("id AS ok", "id % 150 AS ck",
+      "CAST(id % 3 AS STRING) AS p"), "o", Seq("ok", "ck"))
+    val c = land(spark.range(150).selectExpr("id AS ck", "CAST(id % 3 AS STRING) AS p"),
+      "c", Seq("ck"))
+    val edges = Seq(Edge("l", "ok", "o", "ok"), Edge("o", "ck", "c", "ck"))
+    var steps = Seq.empty[JoinAdvisor.Step]
+    val jobs = jobsOf { steps = JoinAdvisor.planLeftDeep(spark, Seq(l, o, c), edges) }
+    assert(jobs.size === 3, "one stats fold per rel")
+    assert(jobs.forall(_.getProperty("spark.sql.execution.id") != null))
+    assert(steps.size === 2, "the plan joins every relation")
+    val bJobs = jobsOf { JoinAdvisor.broadcastSide(spark, o, c, 500L) }
+    assert(bJobs.size === 2, "one row-count fold per side")
+  }
+
   test("empty or rowless stats are refused with the stats path named, never an NPE") {
     val r = root()
     // a stats table with the right schema but ZERO rows — sum(rows)

@@ -9,16 +9,20 @@ class ObservabilitySpec extends SparkSpec {
 
   test("observe counts rows and rejects inline with the action") {
     val collector = Observability.register(spark)
-    val df = Seq(("1", 1), ("x", 2), (null, 3), ("4", 4)).toDF("q", "id")
-    val observed = Observability.observed(df, "cast_stage", expr("try_cast(q AS INT)").isNotNull)
-    observed.filter(expr("try_cast(q AS INT)").isNotNull).count() // the action
-    // listener delivery is synchronous-ish but defensive-poll anyway
-    val deadline = System.currentTimeMillis() + 10000
-    while (!collector.metrics.contains("cast_stage") && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    val m = collector.metrics("cast_stage")
-    assert(m("rows") === 4)
-    assert(m("rejects") === 2)
+    // the session is shared: a collector left registered would capture
+    // every later suite's observations, whatever their types
+    try {
+      val df = Seq(("1", 1), ("x", 2), (null, 3), ("4", 4)).toDF("q", "id")
+      val observed = Observability.observed(df, "cast_stage", expr("try_cast(q AS INT)").isNotNull)
+      observed.filter(expr("try_cast(q AS INT)").isNotNull).count() // the action
+      // listener delivery is synchronous-ish but defensive-poll anyway
+      val deadline = System.currentTimeMillis() + 10000
+      while (!collector.metrics.contains("cast_stage") && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      val m = collector.metrics("cast_stage")
+      assert(m("rows") === 4)
+      assert(m("rejects") === 2)
+    } finally spark.listenerManager.unregister(collector)
   }
 
   test("run ledger: record, skip-if-completed, failure does not mark complete") {

@@ -78,6 +78,25 @@ class StatsStoreSpec extends SparkSpec {
       StatsStore.read(spark, s"$root/stats2").orderBy("part").collect().map(_.toString).toSeq)
   }
 
+  test("changed partitions refreshed together: one goes empty, one changes, one stays") {
+    val root = Files.createTempDirectory("graft-stats-mixed").toString
+    val tbl = s"$root/t"; val st = s"$root/stats"
+    Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0), (4L, "d", 40.0))
+      .toDF("id", "part", "v").write.partitionBy("part").parquet(tbl)
+    StatsStore.rebuild(spark, tbl, st, "part", Seq("v"))
+    // b's data goes away, a gains a row, c is named but unchanged
+    val fs = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(s"$tbl/part=b"), true)
+    Seq((5L, 50.0)).toDF("id", "v").write.mode("append").parquet(s"$tbl/part=a")
+    StatsStore.refreshPartitions(spark, tbl, st, "part", Seq("v"), Seq("a", "b", "c"))
+
+    val parts = StatsStore.read(spark, st).select("part").as[String].collect().toSet
+    assert(parts === Set("a", "c", "d"), s"stale stats row survived: $parts")
+    StatsStore.rebuild(spark, tbl, s"$root/stats2", "part", Seq("v"))
+    assert(StatsStore.read(spark, st).orderBy("part").collect().map(_.toString).toSeq ===
+      StatsStore.read(spark, s"$root/stats2").orderBy("part").collect().map(_.toString).toSeq)
+  }
+
   test("NDV registers: incremental ≡ rebuild, merged estimate tracks truth, join sizes read off stats") {
     val root = Files.createTempDirectory("graft-stats-ndv").toString
     val tbl = s"$root/t"; val st = s"$root/stats"
@@ -90,8 +109,7 @@ class StatsStoreSpec extends SparkSpec {
 
     // per-partition and merged estimates land within HLL's error band
     // (6.5% rse at m=256; assert 4 sigma)
-    val global = StatsStore.ndvGlobal(StatsStore.read(spark, st), "k")
-      .collect()(0).getDouble(1)
+    val global = StatsStore.summary(StatsStore.read(spark, st), Seq("k")).ndv("k").est
     assert(math.abs(global - 500.0) / 500.0 < 0.26, s"global NDV est $global vs 500")
     val per = StatsStore.ndvPerPartition(StatsStore.read(spark, st), "part", "k")
       .orderBy("part").collect()
@@ -111,8 +129,7 @@ class StatsStoreSpec extends SparkSpec {
       StatsStore.read(spark, s"$root/stats2").orderBy("part").collect().map(_.toString).toSeq,
       "incremental refresh must equal rebuild INCLUDING the NDV registers")
     // the merged estimate moved with the new distincts (500 → 600 true)
-    val global2 = StatsStore.ndvGlobal(StatsStore.read(spark, st), "k")
-      .collect()(0).getDouble(1)
+    val global2 = StatsStore.summary(StatsStore.read(spark, st), Seq("k")).ndv("k").est
     assert(global2 > global, "new distinct values must raise the merged NDV")
 
     // CBO consumer: |A ⋈ B| estimate off two stats stores, no table scan

@@ -61,15 +61,14 @@ class VersionedStatsSpec extends SparkSpec {
     // 256 registers) needs the linear-counting correction — the raw
     // estimator reads ~200 here, which is exactly why the corrected
     // consumer exists (raw stays for oracle-replayable surfaces)
-    val s2 = VersionedStats.read(spark, st)
-    assert(VersionedStats.totalRows(s2) ===
-      Versioned.readAsOf(spark, tbl).count())
+    val s2 = StatsStore.summary(VersionedStats.read(spark, st), Seq("k"))
+    assert(s2.rows === Some(Versioned.readAsOf(spark, tbl).count()))
     val exact = Versioned.readAsOf(spark, tbl)
       .select(col("k")).distinct().count()
     val corrected = VersionedStats.ndvGlobalCorrected(s2, "k")
     assert(math.abs(corrected - exact) / exact <= 0.15,
       s"corrected NDV $corrected vs exact $exact")
-    val raw = VersionedStats.ndvGlobal(s2, "k")
+    val raw = s2.ndv("k").est
     assert(raw > 2 * exact,
       s"raw HLL at tiny cardinality should overestimate (that is the " +
         s"point of the correction), got $raw vs $exact")
@@ -82,8 +81,8 @@ class VersionedStatsSpec extends SparkSpec {
       (i.toLong, (i % 997).toLong, if (i % 2 == 0) "a" else "b")))
     VersionedStats.commitWithStats(spark, s"$r/t1", tbl, st, base,
       "p", Seq("id"), Seq("k"))
-    val s1 = VersionedStats.read(spark, st)
-    val raw = VersionedStats.ndvGlobal(s1, "k")
+    val s1 = StatsStore.summary(VersionedStats.read(spark, st), Seq("k"))
+    val raw = s1.ndv("k").est
     assert(math.abs(raw - 997.0) / 997.0 <= 0.15, s"raw NDV $raw vs 997")
     // above the switch the corrected consumer returns the raw estimate
     assert(VersionedStats.ndvGlobalCorrected(s1, "k") === raw)
@@ -111,7 +110,7 @@ class VersionedStatsSpec extends SparkSpec {
     VersionedStats.commitWithStats(spark, s"$r/t1", tbl, st,
       df((0 until 10).map(i => (i.toLong, i.toLong, "a"))),
       "p", Seq("id"), Seq("k"))
-    val s1 = VersionedStats.read(spark, st)
+    val s1 = StatsStore.summary(VersionedStats.read(spark, st), Nil)
     assert(VersionedStats.broadcastAdvice(s1, 100L) === "broadcast")
     assert(VersionedStats.broadcastAdvice(s1, 5L) === "shuffle")
   }
