@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.Tables
 
 /** Mergeable Count-Min sketch — the frequency twin of [[HllSketch]]:
   * per-(row, bucket) counter tables estimate how often any value occurs
@@ -67,28 +66,8 @@ object CountMin {
       path: String,
       value: Column,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fsPath = new org.apache.hadoop.fs.Path(path)
-        val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Upsert.recoverSwap(fs, path)
-        val run = ReplayGuard.runId(fs, checkpoint)
-        // ADDITIVE fold: a reset checkpoint (new run id) over kept state
-        // would make isReplay false for every redelivered batch — the
-        // ownership stamp turns that silent double-count into an error,
-        // same as the Scd2/IncrementalAgg folds.
-        ReplayGuard.assertOwnership(fs, path, run, fs.exists(fsPath))
-        if (!fs.exists(fsPath))
-          ReplayGuard.stamp(sketch(batch, value), run, batchId)
-            .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
-          Upsert.stagedRewrite(s, path)(base =>
-            ReplayGuard.stamp(
-              merge(ReplayGuard.strip(base), sketch(batch, value)),
-              run, batchId))
-        ()
-      }
-      .start()
+    ReplayGuard.foldSink(stream, path, checkpoint) { (state, batch) =>
+      val sk = sketch(batch, value)
+      state.fold(sk)(merge(_, sk))
+    }
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.Tables
 
 /** Mergeable HyperLogLog distinct-count state — the sketch counterpart
   * of IncrementalAgg: per-group register tables that merge by max, so a
@@ -98,33 +97,18 @@ object HllSketch {
        |FROM $regsCte GROUP BY $groupCols""".stripMargin
 
   /** Maintain a distinct-count register table at `path` from a
-    * micro-batched stream under the crash-safe staged swap. The merge is
-    * idempotent, but the [[ReplayGuard]] still skips committed replays —
-    * a skipped batch is cheaper than a re-merge, and the guard keeps the
-    * three streaming folds (agg / SCD2 / HLL) contract-identical. */
+    * micro-batched stream through [[ReplayGuard.foldSink]]. The merge is
+    * idempotent, but the sink still skips committed replays — a skipped
+    * batch is cheaper than a re-merge — and checks ownership, so this
+    * fold keeps the same contract as the other streaming state folds. */
   def streamingHllFold(
       stream: DataFrame,
       path: String,
       group: Seq[String],
       value: Column,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fsPath = new org.apache.hadoop.fs.Path(path)
-        val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Upsert.recoverSwap(fs, path)
-        val run = ReplayGuard.runId(fs, checkpoint)
-        if (!fs.exists(fsPath))
-          ReplayGuard.stamp(registers(batch, group, value), run, batchId)
-            .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
-          Upsert.stagedRewrite(s, path)(base =>
-            ReplayGuard.stamp(
-              merge(ReplayGuard.strip(base), registers(batch, group, value), group),
-              run, batchId))
-        ()
-      }
-      .start()
+    ReplayGuard.foldSink(stream, path, checkpoint) { (state, batch) =>
+      val regs = registers(batch, group, value)
+      state.fold(regs)(merge(_, regs, group))
+    }
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.Tables
 
 /** Incremental materialized-aggregate maintenance: keep per-key
   * mergeable partials (count / exact decimal sum / min / max) as a
@@ -73,25 +72,8 @@ object IncrementalAgg {
       key: Seq[String],
       value: Column,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fsPath = new org.apache.hadoop.fs.Path(path)
-        val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Upsert.recoverSwap(fs, path)
-        val run = ReplayGuard.runId(fs, checkpoint)
-        // fail loudly if a DIFFERENT checkpoint's stream owns this path
-        ReplayGuard.assertOwnership(fs, path, run, fs.exists(fsPath))
-        if (!fs.exists(fsPath))
-          ReplayGuard.stamp(partials(batch, key, value), run, batchId)
-            .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
-          Upsert.stagedRewrite(s, path)(base =>
-            ReplayGuard.stamp(
-              merge(ReplayGuard.strip(base), partials(batch, key, value), key),
-              run, batchId))
-        ()
-      }
-      .start()
+    ReplayGuard.foldSink(stream, path, checkpoint) { (state, batch) =>
+      val p = partials(batch, key, value)
+      state.fold(p)(merge(_, p, key))
+    }
 }

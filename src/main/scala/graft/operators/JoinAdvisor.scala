@@ -57,11 +57,14 @@ object JoinAdvisor {
     * of k stats rows each) per candidate, no data-table I/O. Returns
     * (label, estRows) pairs sorted by (estRows, label) so ties break
     * deterministically. */
-  def rank(spark: SparkSession, cands: Seq[Candidate]): Seq[(String, Double)] =
+  def rank(spark: SparkSession, cands: Seq[Candidate]): Seq[(String, Double)] = {
+    def fold(r: Rel, c: String) = StatsStore.summary(StatsStore.read(spark, r.statsPath), Seq(c))
     cands.map { c =>
       c.label -> StatsStore.estimateJoinRows(
-        spark, c.left.statsPath, c.leftKey, c.right.statsPath, c.rightKey)
+        c.left.statsPath, fold(c.left, c.leftKey), c.leftKey,
+        c.right.statsPath, fold(c.right, c.rightKey), c.rightKey)
     }.sortBy { case (l, e) => (e, l) }
+  }
 
   /** PHYSICAL-strategy advice for one equi-join, off stats row counts
     * alone (exact per-partition counts, not HLL — the one stat that is

@@ -4,6 +4,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Pipeline observability — the engine-grade form of the reference's
@@ -23,14 +24,18 @@ object Observability {
       count(lit(1)).as("rows"),
       count(when(!coalesce(valid, lit(false)), 1)).as("rejects"))
 
-  /** Collects observation results per metric name for a session. */
+  /** Collects observation results per metric name for a session: the
+    * non-NULL `LongType` fields of each observation (the row counters);
+    * fields of any other type, such as a `max(ts)` timestamp or a
+    * `collect_set` array, are skipped. */
   final class MetricsCollector extends QueryExecutionListener {
     val metrics = TrieMap.empty[String, Map[String, Long]]
 
     private def capture(qe: QueryExecution): Unit =
       qe.observedMetrics.foreach { case (name, row) =>
-        metrics.update(name,
-          row.schema.fieldNames.zipWithIndex.map { case (f, i) => f -> row.getLong(i) }.toMap)
+        metrics.update(name, row.schema.fields.zipWithIndex.collect {
+          case (f, i) if f.dataType == LongType && !row.isNullAt(i) => f.name -> row.getLong(i)
+        }.toMap)
       }
 
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.Tables
 
 /** Mergeable DETERMINISTIC quantile summary — the rank-sketch
   * counterpart of [[HllSketch]]: per-group weighted sample tables with
@@ -98,35 +97,18 @@ object QuantileSketch {
       k: Int,
       checkpoint: String,
       maxSamplesPerGroup: Int = Int.MaxValue): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fsPath = new org.apache.hadoop.fs.Path(path)
-        val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Upsert.recoverSwap(fs, path)
-        val run = ReplayGuard.runId(fs, checkpoint)
-        ReplayGuard.assertOwnership(fs, path, run, fs.exists(fsPath))
-        val summ = summarize(batch, group, value, key, buckets, k)
-        // the bounded-state knob: the default appends forever (exact
-        // union algebra, e41's hash-gated shape); a finite bound runs
-        // [[compact]] inline so per-group state stays ≤ the bound over
-        // an UNBOUNDED stream, trading ≤ ⌈W/bound⌉ extra rank error per
-        // batch fold — compact is deterministic, so the folded state
-        // remains bit-reproducible for a given batch cohort sequence
-        def bounded(df: DataFrame): DataFrame =
-          if (maxSamplesPerGroup == Int.MaxValue) df
-          else compact(df, group, maxSamplesPerGroup)
-        if (!fs.exists(fsPath))
-          ReplayGuard.stamp(bounded(summ), run, batchId)
-            .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
-          Upsert.stagedRewrite(s, path)(base =>
-            ReplayGuard.stamp(
-              bounded(merge(ReplayGuard.strip(base), summ)), run, batchId))
-        ()
-      }
-      .start()
+    ReplayGuard.foldSink(stream, path, checkpoint) { (state, batch) =>
+      val summ = summarize(batch, group, value, key, buckets, k)
+      val folded = state.fold(summ)(merge(_, summ))
+      // the bounded-state knob: the default appends forever (exact
+      // union algebra, e41's hash-gated shape); a finite bound runs
+      // [[compact]] inline so per-group state stays ≤ the bound over
+      // an UNBOUNDED stream, trading ≤ ⌈W/bound⌉ extra rank error per
+      // batch fold — compact is deterministic, so the folded state
+      // remains bit-reproducible for a given batch cohort sequence
+      if (maxSamplesPerGroup == Int.MaxValue) folded
+      else compact(folded, group, maxSamplesPerGroup)
+    }
 
   /** COMPACT a (possibly many-batch) summary back to ≤ `maxSamples`
     * weighted rows per group — the maintenance pass that keeps

@@ -3,12 +3,16 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Tables
 
 /** Replay detection for foreachBatch sinks whose fold is NOT idempotent
-  * (incremental aggregate merge, SCD2 delta application): state rows are
-  * stamped with the id of the last folded batch AND the durable identity
-  * of the streaming run that folded it, so a redelivered batch is skipped
-  * exactly once per run.
+  * (incremental aggregate merge, SCD2 delta application, additive
+  * sketches): state rows are stamped with the id of the last folded
+  * batch AND the durable identity of the streaming run that folded it,
+  * so a redelivered batch is skipped exactly once per run. [[foldSink]]
+  * is the one sink that applies the guard, for every streaming state
+  * fold.
   *
   * Why the run identity matters: micro-batch ids are per-checkpoint. A
   * fresh/reset checkpoint restarts ids at 0, so a batch-id-only watermark
@@ -92,6 +96,37 @@ object ReplayGuard {
     fs.delete(new Path(statePath + "__owner"), false)
     ()
   }
+
+  /** Maintain the state table at `path` from a micro-batched stream;
+    * `fold(state, batch)` is the operator's own step, `state` being None
+    * for the first batch. Each batch heals an interrupted swap
+    * ([[Upsert.recoverSwap]]) and checks [[assertOwnership]], then
+    * either creates the table from `fold(None, batch)` through
+    * [[Upsert.create]] (written at `path__new`, renamed in) or, unless
+    * the batch is a committed replay ([[isReplay]]), rewrites it as
+    * `fold(Some(state), batch)` under [[Upsert.stagedRewrite]]'s staged
+    * swap. Both writes carry the run/batch [[stamp]], so the watermark
+    * commits atomically with the folded state. */
+  def foldSink(stream: DataFrame, path: String, checkpoint: String)(
+      fold: (Option[DataFrame], DataFrame) => DataFrame): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val s = batch.sparkSession
+        val fsPath = new Path(path)
+        val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+        Upsert.recoverSwap(fs, path)
+        val run = runId(fs, checkpoint)
+        val exists = fs.exists(fsPath)
+        // fail loudly if a DIFFERENT checkpoint's stream owns this path
+        assertOwnership(fs, path, run, exists)
+        if (!exists) Upsert.create(fs, path, stamp(fold(None, batch), run, batchId))
+        else if (!isReplay(Tables.parquet(s, path), run, batchId))
+          Upsert.stagedRewrite(s, path)(base =>
+            stamp(fold(Some(strip(base)), batch), run, batchId))
+        ()
+      }
+      .start()
 
   /** True iff `(run, batchId)` is already folded into `state`: same run
     * (or legacy run-less state) and batchId at or below the stored

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.Tables
 
 /** Slowly-changing-dimension Type-2 history maintenance — the warehouse
   * counterpart of the reference's keyed upserts (SURVEY §2.2): instead
@@ -108,26 +107,8 @@ object Scd2 {
       attrs: Seq[String],
       validCol: String,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fsPath = new org.apache.hadoop.fs.Path(path)
-        val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Upsert.recoverSwap(fs, path)
-        val run = ReplayGuard.runId(fs, checkpoint)
-        // fail loudly if a DIFFERENT checkpoint's stream owns this path
-        ReplayGuard.assertOwnership(fs, path, run, fs.exists(fsPath))
-        if (!fs.exists(fsPath))
-          ReplayGuard.stamp(
-            fromChangeLog(batch, key, order, attrs, validCol), run, batchId)
-            .write.mode(SaveMode.Overwrite).parquet(path)
-        else if (!ReplayGuard.isReplay(Tables.parquet(s, path), run, batchId))
-          Upsert.stagedRewrite(s, path)(base =>
-            ReplayGuard.stamp(
-              applyDelta(ReplayGuard.strip(base), batch, key, order, attrs, validCol),
-              run, batchId))
-        ()
-      }
-      .start()
+    ReplayGuard.foldSink(stream, path, checkpoint) { (history, batch) =>
+      history.fold(fromChangeLog(batch, key, order, attrs, validCol))(
+        applyDelta(_, batch, key, order, attrs, validCol))
+    }
 }

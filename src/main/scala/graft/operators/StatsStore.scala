@@ -194,21 +194,21 @@ object StatsStore {
 
   /** CBO consumer: equi-join output-size estimate |A ⋈ B| ≈
     * |A|·|B| / max(ndv_A, ndv_B) straight off two stats stores — the
-    * estimate a join planner reads BEFORE touching either table.
-    * Driver-sized: one [[summary]] fold (one collect of k stats rows)
-    * per store. */
+    * estimate a join planner reads BEFORE touching either table. Each
+    * side is a store's path (named when the store is empty) and its
+    * [[summary]] fold over at least the join column, so a caller that
+    * already holds a store's fold reads it once; the estimate itself
+    * starts no job. */
   def estimateJoinRows(
-      spark: SparkSession,
-      statsPathA: String, colA: String,
-      statsPathB: String, colB: String): Double = {
-    def side(path: String, c: String): (Long, Double) = {
-      val s = summary(read(spark, path), Seq(c))
+      statsPathA: String, a: Summary, colA: String,
+      statsPathB: String, b: Summary, colB: String): Double = {
+    def side(path: String, s: Summary, c: String): (Long, Double) = {
       require(s.rows.isDefined,
         s"stats store at $path is empty — rebuild it before estimating")
       (s.rows.get, s.ndv(c).est)
     }
-    val (ra, na) = side(statsPathA, colA)
-    val (rb, nb) = side(statsPathB, colB)
+    val (ra, na) = side(statsPathA, a, colA)
+    val (rb, nb) = side(statsPathB, b, colB)
     val maxNdv = math.max(na, nb)
     if (maxNdv <= 0.0) 0.0 else ra.toDouble * rb.toDouble / maxNdv
   }

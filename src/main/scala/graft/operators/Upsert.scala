@@ -135,21 +135,8 @@ object Upsert {
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverSwap(fs, path)
     if (partitionBy.nonEmpty) recoverPartitionedStage(spark, path, partitionBy)
-    val exists = fs.exists(fsPath)
-
-    if (!exists) {
-      // Created like a swap: staged whole at `__new`, then renamed in. A
-      // write cancelled in place would leave an empty `path` that every
-      // later call takes for a table without a schema.
-      val newP = new org.apache.hadoop.fs.Path(path + "__new")
-      val w = delta.write.mode(SaveMode.Overwrite)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(newP.toString)
-      if (!fs.rename(newP, fsPath))
-        throw new java.io.IOException(s"create failed: $newP -> $fsPath")
-      return
-    }
-
-    graft.Scratch.withStaged(spark, delta, "upsert-delta") { d =>
+    if (!fs.exists(fsPath)) create(fs, path, delta, partitionBy)
+    else graft.Scratch.withStaged(spark, delta, "upsert-delta") { d =>
       if (partitionBy.nonEmpty) {
         // Only touch partitions the delta lands in. The merge is staged
         // to disk first (not localCheckpoint: disk-backed, sized by the
@@ -165,6 +152,25 @@ object Upsert {
         stagedRewrite(spark, path) { base => merge(base, d, keys) }
       }
     }
+  }
+
+  /** Create the missing table at `path` as a swap lands a rewrite:
+    * one write of `df` whole at `path__new`, then one rename in. A
+    * write cancelled in place would leave an empty `path` that every
+    * later call takes for a table without a schema; cancelled here, it
+    * leaves an incomplete `__new` that the next create overwrites. The
+    * one create step of [[upsertParquet]] and
+    * [[ReplayGuard.foldSink]]. */
+  private[operators] def create(
+      fs: org.apache.hadoop.fs.FileSystem,
+      path: String,
+      df: DataFrame,
+      partitionBy: Seq[String] = Nil): Unit = {
+    val newP = new org.apache.hadoop.fs.Path(path + "__new")
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(newP.toString)
+    if (!fs.rename(newP, new org.apache.hadoop.fs.Path(path)))
+      throw new java.io.IOException(s"create failed: $newP -> $path")
   }
 
   /** Apply a durably-staged merged partition set (`path__stage`, complete
@@ -240,7 +246,8 @@ object Upsert {
     *     before the swap started or after it finished — garbage, drop
     *     them (the interrupted upsert simply retries);
     *   - table missing, `__new` complete (`_SUCCESS`): the crash hit
-    *     between the two renames; the merge was durable — roll FORWARD;
+    *     between the two renames, or between a [[create]]'s write and
+    *     its rename; the result was durable — roll FORWARD;
     *   - table missing, `__new` unusable: roll BACK to `__old`.
     */
   private[graft] def recoverSwap(

@@ -1447,9 +1447,11 @@ object EtlOps {
     val per = StatsStore.ndvPerPartition(st, "st", "k")
       .select(col("st").as("part"), col("nz").cast("long").as("nz"), col("ndv_est"))
     // the whole-table and join-size rows are driver folds of the stats
-    // rows, landed as one local frame
-    val glob = StatsStore.summary(st, Seq("k")).ndv("k")
-    val joinEst = StatsStore.estimateJoinRows(s, oSt, "k", cSt, "cck")
+    // rows, landed as one local frame; orders' one fold serves both
+    val oSum = StatsStore.summary(st, Seq("k"))
+    val glob = oSum.ndv("k")
+    val joinEst = StatsStore.estimateJoinRows(
+      oSt, oSum, "k", cSt, StatsStore.summary(StatsStore.read(s, cSt), Seq("cck")), "cck")
     import s.implicits._
     per.unionByName(Seq(("__all__", glob.nz, glob.est), ("__join_est__", 0L, joinEst))
       .toDF("part", "nz", "ndv_est"))

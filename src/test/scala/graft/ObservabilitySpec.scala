@@ -25,6 +25,24 @@ class ObservabilitySpec extends SparkSpec {
     } finally spark.listenerManager.unregister(collector)
   }
 
+  test("the collector captures an observation's Long counters and skips its other fields") {
+    val collector = Observability.register(spark)
+    try {
+      val df = Seq(("2024-01-01 00:00:00", 1), ("2024-01-02 12:00:00", 2)).toDF("t", "id")
+        .select(to_timestamp(col("t")).as("ts"), col("id"))
+        .observe("with_ts", count(lit(1)).as("n"), max(col("ts")).as("last_ts"))
+      df.collect() // the action
+      // a listener that threw would never record the metric
+      val deadline = System.currentTimeMillis() + 10000
+      while (!collector.metrics.contains("with_ts") && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(collector.metrics.get("with_ts") === Some(Map("n" -> 2L)))
+      // and called directly on the same execution, it returns normally
+      collector.onSuccess("collect", df.queryExecution, 0L)
+      assert(collector.metrics("with_ts") === Map("n" -> 2L))
+    } finally spark.listenerManager.unregister(collector)
+  }
+
   test("run ledger: record, skip-if-completed, failure does not mark complete") {
     val path = java.nio.file.Files.createTempDirectory("ledger").toString + "/l"
     val ledger = new RunLedger(spark, path)

@@ -4,7 +4,8 @@ import java.sql.Timestamp
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{IncrementalAgg, Scd2}
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.operators.{HllSketch, IncrementalAgg, Scd2}
 
 /** SCD2 history maintenance + incremental aggregate state: edge
   * semantics beyond the k7/k8 DuckDB hash gates. */
@@ -208,39 +209,43 @@ class Scd2Spec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val root = Files.createTempDirectory("own").toString
-    val path = s"$root/hist"
-    // stream 1 claims the path on first fold
-    val input = MemoryStream[(Long, Timestamp, Long, String)]
-    val q = Scd2.streamingScd2(
-      input.toDF().toDF("id", "ts", "seq", "st"), path, key, order, attrs, "ts",
-      s"$root/ckpt1")
-    input.addData((1L, ts("2024-01-01 00:00:00"), 1L, "A"))
-    q.processAllAvailable(); q.stop()
-    // stream 2, DIFFERENT checkpoint, same state path: must fail loudly
-    val input2 = MemoryStream[(Long, Timestamp, Long, String)]
-    val q2 = Scd2.streamingScd2(
-      input2.toDF().toDF("id", "ts", "seq", "st"), path, key, order, attrs, "ts",
-      s"$root/ckpt2")
-    input2.addData((2L, ts("2024-01-02 00:00:00"), 1L, "B"))
-    val e = intercept[Exception] { q2.processAllAvailable() }
-    q2.stop()
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("owned by streaming run")))
-    // the owned table is untouched by the rejected fold
-    assert(spark.read.parquet(path).count() === 1)
-    // releaseOwnership is the deliberate adoption path: stream 2 retries
-    // with a THIRD checkpoint and now folds
-    graft.operators.ReplayGuard.releaseOwnership(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-    val input3 = MemoryStream[(Long, Timestamp, Long, String)]
-    val q3 = Scd2.streamingScd2(
-      input3.toDF().toDF("id", "ts", "seq", "st"), path, key, order, attrs, "ts",
-      s"$root/ckpt3")
-    input3.addData((2L, ts("2024-01-02 00:00:00"), 1L, "B"))
-    q3.processAllAvailable(); q3.stop()
-    assert(spark.read.parquet(path).count() === 2)
+    // each fold starts a stream on (state path, checkpoint) that folds
+    // entity n in as one state row: an SCD2 version, an HLL register
+    val folds: Seq[(String, (String, String, Long) => StreamingQuery)] = Seq(
+      "scd2" -> { (path, ckpt, n) =>
+        val in = MemoryStream[(Long, Timestamp, Long, String)]
+        in.addData((n, ts("2024-01-01 00:00:00"), 1L, "A"))
+        Scd2.streamingScd2(
+          in.toDF().toDF("id", "ts", "seq", "st"), path, key, order, attrs, "ts", ckpt)
+      },
+      "hll" -> { (path, ckpt, n) =>
+        val in = MemoryStream[(Long, Long)]
+        in.addData((n, n))
+        HllSketch.streamingHllFold(in.toDF().toDF("g", "v"), path, Seq("g"), col("v"), ckpt)
+      })
+    folds.foreach { case (name, fold) =>
+      val path = s"$root/$name"
+      // stream 1 claims the path on first fold
+      val q = fold(path, s"$root/$name-ckpt1", 1L)
+      q.processAllAvailable(); q.stop()
+      // stream 2, DIFFERENT checkpoint, same state path: must fail loudly
+      val q2 = fold(path, s"$root/$name-ckpt2", 2L)
+      val e = intercept[Exception] { q2.processAllAvailable() }
+      q2.stop()
+      assert(messages(e).exists(_.contains("owned by streaming run")), name)
+      // the owned table is untouched by the rejected fold
+      assert(spark.read.parquet(path).count() === 1, name)
+      // releaseOwnership is the deliberate adoption path: stream 2 retries
+      // with a THIRD checkpoint and now folds
+      graft.operators.ReplayGuard.releaseOwnership(
+        new org.apache.hadoop.fs.Path(path)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+      val q3 = fold(path, s"$root/$name-ckpt3", 2L)
+      q3.processAllAvailable(); q3.stop()
+      assert(spark.read.parquet(path).count() === 2, name)
+    }
     // resetting state AND checkpoint together needs no release: the
     // fresh-table claim happens automatically (the documented convention)
     val path2 = s"$root/hist2"

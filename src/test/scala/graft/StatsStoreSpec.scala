@@ -138,7 +138,9 @@ class StatsStoreSpec extends SparkSpec {
       .selectExpr("id", "concat('q', id % 2) AS part", "CAST(id % 100 AS LONG) AS k")
       .write.partitionBy("part").parquet(tblB)
     StatsStore.rebuild(spark, tblB, stB, "part", Seq("k"))
-    val est = StatsStore.estimateJoinRows(spark, st, "k", stB, "k")
+    val est = StatsStore.estimateJoinRows(
+      st, StatsStore.summary(StatsStore.read(spark, st), Seq("k")), "k",
+      stB, StatsStore.summary(StatsStore.read(spark, stB), Seq("k")), "k")
     val actual = spark.read.parquet(tbl).join(spark.read.parquet(tblB), "k").count()
     assert(est > 0 && math.abs(est - actual) / actual < 0.5,
       s"join-size estimate $est vs actual $actual")

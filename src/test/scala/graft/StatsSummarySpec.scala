@@ -96,26 +96,37 @@ class StatsSummarySpec extends SparkSpec {
     assertSameAsSql(StatsStore.read(spark, s"$root/st"))
   }
 
-  test("estimateJoinRows starts two jobs, each inside a SQL execution; an empty store is refused") {
+  test("a join estimate costs one job per store fold and none of its own; an empty store is refused") {
     val root = Files.createTempDirectory("graft-summary-jobs").toString
     Seq("x" -> 400, "y" -> 90).foreach { case (n, m) =>
       spark.range(2000).selectExpr("CAST(id % 4 AS STRING) AS p", s"id % $m AS k")
         .write.partitionBy("p").parquet(s"$root/$n")
       StatsStore.rebuild(spark, s"$root/$n", s"$root/${n}_st", "p", Seq("k"))
     }
+    def fold(n: String) = StatsStore.summary(StatsStore.read(spark, s"$root/$n"), Seq("k"))
     var est = 0.0
     val jobs = jobsOf {
-      est = StatsStore.estimateJoinRows(spark, s"$root/x_st", "k", s"$root/y_st", "k")
+      est = StatsStore.estimateJoinRows(
+        s"$root/x_st", fold("x_st"), "k", s"$root/y_st", fold("y_st"), "k")
     }
     assert(jobs.size === 2, "one fold per stats store")
     assert(jobs.forall(_.getProperty("spark.sql.execution.id") != null))
     assert(est > 0.0)
+    // a caller that holds both folds (k43 holds its orders fold) re-reads
+    // neither store
+    val (x, y) = (fold("x_st"), fold("y_st"))
+    var again = 0.0
+    assert(jobsOf {
+      again = StatsStore.estimateJoinRows(s"$root/x_st", x, "k", s"$root/y_st", y, "k")
+    }.isEmpty, "the estimate itself starts no job")
+    assert(again === est)
 
     // a stats store with the right schema and no row
     StatsStore.statsRows(spark.range(0).selectExpr("'p' AS p", "id AS k"), "p", Seq("k"))
       .write.parquet(s"$root/empty_st")
     val e = intercept[IllegalArgumentException] {
-      StatsStore.estimateJoinRows(spark, s"$root/x_st", "k", s"$root/empty_st", "k")
+      StatsStore.estimateJoinRows(
+        s"$root/x_st", x, "k", s"$root/empty_st", fold("empty_st"), "k")
     }
     assert(e.getMessage.contains(s"stats store at $root/empty_st is empty"), e.getMessage)
   }
