@@ -1,364 +1,122 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
-/** Benchmark main (driver contract): one JSON line with per-query
-  * seconds at SPARK_GRAFT_SF_DIR.
+import graft.RegistryRun.{Cancelled, Failed, Measured, Row}
+
+/** Benchmark main: runs the registry (or the steps given as arguments
+  * or in SPARK_GRAFT_ONLY) through the `noop` write sink for
+  * SPARK_GRAFT_PASSES passes (default 2) and keeps each query's minimum.
+  * A bare count() would let Catalyst prune the projections being
+  * measured, so every query is fully materialized.
   *
-  * Methodology: every query is fully materialized through the `noop`
-  * write sink (a bare count() would let Catalyst prune the projections
-  * being measured). The SQL cache is cleared after each query so
-  * persisted frames can't serve a later one.
+  *   SPARK_GRAFT_SF_DIR=<fixture dir> sbt "runMain graft.Bench k43_ndv_stats"
   *
-  * Protocol shape (rounds 12-13): the DRIVER-facing default is
-  * MEASURE-FIRST — no separate warmup pass; two measured passes with
-  * the per-query MIN. Rounds 10 and 11 both ended rc 124 (timeout, no
-  * record); round 12's driver run emitted a record (rc 0) but covered
-  * only 168/370 because the budget guard's estimates started blind
-  * (1.2x a running median) on a box whose I/O was degraded 10-100x,
-  * and registry-declaration order put the I/O-heaviest family fourth,
-  * starving nine families entirely. Round 13 therefore adds three
-  * protections, all aimed at COVERAGE under a degraded box:
+  * The run loop prints each query's seconds, jobs, stages, tasks and
+  * streams, with its stage wall by call site. After every pass the
+  * record so far is printed as one JSON line and written to
+  * target/bench_full.json.
   *
-  *   1. SEEDED ESTIMATES — tools/bench_estimates.tsv (regenerated at
-  *      close-out from the committed full record) pre-populates every
-  *      query's expected cost, so the wall-budget fit check is never
-  *      blind, not even for pass-1 queries it hasn't sampled yet.
-  *   2. CHEAPEST-FIRST ORDER — each pass runs queries in ascending
-  *      estimated cost instead of registry family order. With the
-  *      round-12 numbers, the 340 queries under 3 s (~280 s total)
-  *      cover before the first 10 s gate starts, so budget exhaustion
-  *      truncates only the expensive tail — never whole families.
-  *   3. PER-QUERY WATCHDOG — each query runs inside a Spark job group
-  *      with a timer that cancels the group (and stops any stream the
-  *      gate left running) at max(5x its estimate, 30 s). One runaway
-  *      on a degraded box (round 12: k23 at 212.9 s vs a 3.37 s
-  *      estimate) can no longer eat 15% of the budget; the query is
-  *      recorded as cancelled+uncovered and NOT retried in later
-  *      passes (on a healthy box the 5x/30 s cap is unreachable — the
-  *      registry ceiling is 12 s — so a cancellation IS the
-  *      degradation signal, and retrying into it just burns budget).
-  *
-  * Attribution: a CPU sentinel (spark.range sum — no disk) and an I/O
-  * sentinel (parquet write+read of incompressible md5 strings) are
-  * timed at every pass head, so a record from a degraded box SHOWS
-  * which resource degraded (round 12's record could not: CPU sentinel
-  * flat 0.42 s while parquet gates ran 60x slow). During a pass the
-  * CPU sentinel is re-timed whenever 45 s have elapsed since the last
-  * one, and each query records the nearest preceding sentinel value
-  * ("sentinel_local" in the full record) — a load proxy taken seconds,
-  * not minutes, from its own measurement, replacing round 12's
-  * per-family sentinel series (which cheapest-first interleaving made
-  * meaningless).
-  *
-  * Wall-budget guard: SPARK_GRAFT_WALL_BUDGET_SECS (default 1,450 —
-  * the driver window minus observed sbt overhead, with margin) bounds
-  * execution from main() entry: every measured pass skips any query
-  * whose estimate no longer fits, emitting the PARTIAL record with
-  * explicit "covered"/"uncovered" fields instead of being killed
-  * mid-write with no record at all. The record is emitted after EVERY
-  * pass (kill-safe: the driver's parser takes the last parseable tail
-  * line) and the full per-query record goes to target/bench_full.json.
-  *
-  * The BUILDER's close-out protocol stays SPARK_GRAFT_WARMUP=full
-  * SPARK_GRAFT_PASSES=3 (committed full records in tools/bench_history
-  * are full-warmup min-of-3); the emitted JSON records "passes" so the
-  * close-out guard can correct the min-of-N bias across protocols.
+  * A CPU sentinel (spark.range sum, no disk) and an I/O sentinel
+  * (parquet write+read of incompressible md5 strings) are timed at the
+  * head of every pass, so a record from a degraded box shows which
+  * resource degraded.
   */
 object Bench {
 
-  /** Seed estimates: tools/bench_estimates.tsv, one "name<TAB>seconds"
-    * line per query, regenerated at every builder close-out from the
-    * committed full record. Missing file or malformed lines degrade to
-    * the blind running-median estimate, never to a crash. */
-  private[graft] def seedEstimates(path: java.nio.file.Path): Map[String, Double] =
-    if (!java.nio.file.Files.isRegularFile(path)) Map.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.readAllLines(path).asScala.iterator
-        .map(_.trim).filter(_.nonEmpty)
-        .flatMap { l =>
-          l.split('\t') match {
-            case Array(n, v) =>
-              scala.util.Try(v.toDouble).toOption.filter(_ > 0).map(n -> _)
-            case _ => None
-          }
-        }.toMap
-    }
-
-  sealed trait Outcome
-  final case class Measured(secs: Double) extends Outcome
-  final case class Cancelled(afterSecs: Double) extends Outcome
-  final case class Failed(afterSecs: Double, msg: String) extends Outcome
-
-  /** Runs `body` inside a Spark job group with a watchdog timer: at
-    * `capSecs` the group is cancelled (interruptOnCancel) and any
-    * active streaming query is stopped — a hung streaming gate's
-    * micro-batch jobs run on the stream-execution thread outside our
-    * group, so job-group cancellation alone can't reach them. The
-    * cancel REPEATS at a 1 s cadence until `body` unwinds:
-    * cancelJobGroup only reaches jobs active at that instant, so a
-    * one-shot cancel can land in a between-jobs gap and the gate's
-    * next job proceeds untouched (cancelJobGroupAndFutureJobs would
-    * pin the group's cancelled state instead, but a repeating cancel
-    * also sweeps streams started after the first firing). The outcome
-    * distinguishes a watchdog cancellation from an ordinary failure
-    * via the `fired` flag (both surface as exceptions from `body`). */
-  private[graft] def withWatchdog(spark: SparkSession, group: String, capSecs: Double)(
-      body: => Unit): Outcome = {
-    val sc = spark.sparkContext
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    sc.setJobGroup(group, s"bench:$group", interruptOnCancel = true)
-    val timer = new java.util.Timer(s"bench-watchdog-$group", true)
-    timer.scheduleAtFixedRate(new java.util.TimerTask {
-      def run(): Unit = {
-        fired.set(true)
-        try sc.cancelJobGroup(group) catch { case _: Throwable => () }
-        try spark.streams.active.foreach(_.stop()) catch { case _: Throwable => () }
-      }
-    }, // clamp: a disabled watchdog passes a huge cap, and Timer
-      // rejects a first-execution time past Long range ("Illegal
-      // execution time") — 1e12 ms (~31 years) is both "never" and safe
-      math.max(1L, math.min(capSecs * 1000, 1e12).toLong), 1000L)
-    val t0 = System.nanoTime()
-    def secs = (System.nanoTime() - t0) / 1e9
-    try { body; Measured(secs) }
-    catch {
-      case e: Throwable =>
-        if (fired.get) Cancelled(secs) else Failed(secs, String.valueOf(e.getMessage))
-    } finally { timer.cancel(); sc.clearJobGroup() }
-  }
-
-  /** Builds the (full-record, compact) JSON lines. Pure — spec-covered
-    * so a malformed record can never reach the driver's parser again.
-    *
-    * The full per-query record goes to a FILE (target/bench_full.json):
-    * the harness keeps only a ~2000-byte log tail, and a full-registry
-    * JSON line (~12 KB) printed before the compact one would leave a
-    * truncated fragment shadowing the parseable line. stdout gets ONE
-    * compact line per pass sized to survive the tail alongside sbt's
-    * trailing [success] line: the slowest queries are kept (they carry
-    * the optimization signal); the omitted fast ones are summarized by
-    * count + total. */
-  private[graft] def buildLines(
-      names: Seq[String],
-      passes: Seq[Map[String, Double]],
-      localSent: Seq[Map[String, Double]],
-      cancelled: Set[String],
-      sentinels: Seq[Double],
-      ioSentinels: Seq[Double],
-      sfDir: String,
-      isStreaming: String => Boolean): (String, String) = {
-    val results = names.flatMap { n =>
-      val vs = passes.flatMap(_.get(n))
-      if (vs.nonEmpty) Some(n -> vs.min) else None
-    }
-    val covered = results.map(_._1).toSet
-    val uncovered = names.filterNot(covered)
-    // which pass (1-based) produced each query's min — paired with that
-    // pass's nearest-preceding local sentinel for normalization
-    val minPass = results.map { case (n, v) =>
-      n -> (passes.indexWhere(_.get(n).contains(v)) + 1)
-    }.toMap
-    val sentLocal = results.flatMap { case (n, _) =>
-      localSent.lift(minPass(n) - 1).flatMap(_.get(n)).map(n -> _)
-    }
-    def series(xs: Seq[Double]) = xs.map(v => f"$v%.3f").mkString("[", ",", "]")
-    def obj(entries: Seq[(String, Double)]) =
-      entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // batch vs streaming subtotals: the true-streaming queries carry
-    // fixed per-microbatch checkpoint/state-store drain cost, so the
-    // round-over-round plan-quality signal is batch_total, not the mix
-    val streamTotal = results.collect { case (n, v) if isStreaming(n) => v }.sum
-    val batchTotal = total - streamTotal
-    val famTotals = results
-      .groupBy { case (n, _) => n.takeWhile(!_.isDigit) }
-      .map { case (f, xs) => f -> xs.map(_._2).sum }
-      .toSeq.sortBy(_._1)
-    // coverage + protocol fields: "passes" lets the guard correct the
-    // min-of-N bias vs a min-of-3 baseline; "covered"/"registered"/
-    // "cancelled" make a truncated record self-describing
-    val coverage = s""","passes":${passes.size},"covered":${results.size},""" +
-      s""""registered":${names.size},"cancelled":${cancelled.size}"""
-    def line(entries: Seq[(String, Double)], extra: String): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","batch_total":$batchTotal%.3f,"stream_total":$streamTotal%.3f$coverage,"sentinel_secs":${series(sentinels)},"io_sentinel_secs":${series(ioSentinels)},"families":${obj(famTotals)}$extra,"queries":${obj(entries)},"sf":"$sfDir"}"""
-    val minPassJson = results.map { case (n, _) => "\"" + n + "\":" + minPass(n) }
-      .mkString("{", ",", "}")
-    def strArr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val full = line(results,
-      s""","min_pass":$minPassJson,"sentinel_local":${obj(sentLocal)}""" +
-        s""","uncovered":${strArr(uncovered)},"cancelled_queries":${strArr(cancelled.toSeq.sorted)}""")
-    val budget = 900 // compact line shares the log tail with sbt noise
-    val bySlowest = results.sortBy(-_._2)
-    val kept = bySlowest
-      .scanLeft(("", 0.0, 60)) { case ((_, _, acc), (k, v)) => (k, v, acc + k.length + 15) }
-      .drop(1).takeWhile(_._3 <= budget).map(t => (t._1, t._2))
-      .sortBy(_._1)
-    (full, line(kept, s""","n_queries":${results.size}"""))
-  }
-
   def main(args: Array[String]): Unit = {
-    val t0Main = System.nanoTime()
-    def elapsed(): Double = (System.nanoTime() - t0Main) / 1e9
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val wallBudget =
-      sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET_SECS", "1450").toDouble
-    val spark = GraftSession.local(cpus)
+    val steps = RegistryRun.steps(args.toSeq)
+    val sfDir = RegistryRun.sfDir
+    val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
+    val spark = RegistryRun.session()
+    val cpus = spark.sparkContext.defaultParallelism
 
-    // Noise sentinels, timed at the head of every measured pass.
-    // Round-over-round per-query deltas are only interpretable if box
-    // noise is deconvolvable from plan regressions; the sentinel series
-    // IS that record. Two resources, two sentinels: spark.range is pure
-    // CPU+scheduler; the I/O sentinel writes+reads ~64 MB of
-    // incompressible parquet (md5 strings — RLE can't flatten it), so a
-    // degraded disk shows up in it at roughly the multiple the data
-    // gates will feel (round 12: CPU flat, parquet gates 60x slow, and
-    // the record couldn't say why).
-    def sentinel(): Double = {
+    def timed(body: => Unit): Double = {
       val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
+    def sentinel(): Double = timed {
       spark.range(0L, 400000000L, 1L, cpus)
         .selectExpr("sum(id * 3 + 1) as s")
         .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
     }
     val ioSentDir = new java.io.File(
       sys.props("java.io.tmpdir"), "graft-bench-iosentinel").getAbsolutePath
-    def ioSentinel(): Double = {
-      val t0 = System.nanoTime()
+    def ioSentinel(): Double = timed {
       spark.range(0L, 1000000L, 1L, 8)
         .selectExpr("id", "md5(cast(id as string)) as pad")
         .write.mode("overwrite").parquet(ioSentDir)
       Tables.parquet(spark, ioSentDir).selectExpr("sum(length(pad)) as s")
         .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
     }
 
-    // SPARK_GRAFT_ONLY=a1,d3 benches a comma-separated subset (dev loop;
-    // the driver never sets it, so official runs still cover the registry)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.registry.map(_.name).filter(n => only.forall(_.contains(n)))
-
-    // Estimate base for a query: its own min sample from THIS run, else
-    // the checked-in seed, else 1.2x the running median of known bases.
-    // Seeds never override local samples (a 2x-slower box must budget
-    // with its own reality, not the builder's), and local minima never
-    // mix with seeds (recordEst is local-only).
-    val seeds = seedEstimates(java.nio.file.Paths.get("tools", "bench_estimates.tsv"))
-    if (seeds.nonEmpty)
-      System.err.println(s"[bench] seeded ${seeds.size} estimates from tools/bench_estimates.tsv")
-    val localEst = scala.collection.mutable.Map.empty[String, Double]
-    def recordEst(n: String, v: Double): Unit =
-      localEst(n) = math.min(v, localEst.getOrElse(n, Double.MaxValue))
-    def estBase(n: String): Double =
-      localEst.get(n).orElse(seeds.get(n)).getOrElse {
-        val known = (localEst.values ++ seeds.values).toSeq.sorted
-        if (known.isEmpty) 2.0 else known(known.size / 2) * 1.2
-      }
-    def estimate(n: String): Double = estBase(n) * 1.2
-
-    def materialize(n: String): Unit = {
-      SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
-
-    // Optional FULL unmeasured warmup (builder close-out protocol:
-    // SPARK_GRAFT_WARMUP=full) — budget-guarded at 55% so a degraded
-    // box still leaves room for the measured passes.
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "none") == "full") {
-      var coldQueries = 0
-      names.foreach { n =>
-        if (elapsed() < wallBudget * 0.55) {
-          val t0 = System.nanoTime()
-          try materialize(n)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] warmup $n failed: ${e.getMessage}")
-          }
-          Scratch.releaseRunState(spark)
-          recordEst(n, (System.nanoTime() - t0) / 1e9)
-        } else coldQueries += 1
-      }
-      if (coldQueries > 0)
-        System.err.println(f"[bench] wall budget: warmup stopped with " +
-          f"$coldQueries queries unwarmed (${elapsed()}%.0f s elapsed)")
-    }
-
-    val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val ceiling = sys.env.getOrElse("SPARK_GRAFT_CEILING_SECS", "12").toDouble
-    // watchdog dial: 0 disables (builder A/B runs measure runaways
-    // honestly; the driver default keeps the guard)
-    val watchdogMult = sys.env.getOrElse("SPARK_GRAFT_WATCHDOG_MULT", "5").toDouble
-    sentinel() // sentinel warmup (JIT the range/sum codegen)
+    sentinel() // JIT the range/sum codegen
     val sentinels = scala.collection.mutable.ArrayBuffer.empty[Double]
     val ioSentinels = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val done = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-    val localSent = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-    val cancelledQ = scala.collection.mutable.Set.empty[String]
-
-    def emit(isFinal: Boolean): Unit = {
-      val (full, compact) = buildLines(names, done.toSeq, localSent.toSeq,
-        cancelledQ.toSet, sentinels.toSeq, ioSentinels.toSeq, sfDir,
-        queries.Events.streamingNames)
-      val covered = names.filter(n => done.exists(_.contains(n)))
-      if (isFinal && covered.size < names.size)
-        System.err.println(s"[bench] ${names.size - covered.size} queries " +
-          s"UNCOVERED (partial record): ${names.filterNot(covered.toSet).mkString(",")}")
-      // per-query ceiling readout (stderr, final emission only): a new
-      // gate that lands heavy needs its committed waiver at birth —
-      // closeout.py enforces the same ceiling against explained.json
-      if (isFinal) {
-        val mins = names.flatMap(n => done.flatMap(_.get(n)).minOption.map(n -> _))
-        mins.filter(_._2 > ceiling).sortBy(-_._2).foreach { case (n, v) =>
-          System.err.println(f"[bench] CEILING $n: $v%.2f s exceeds the " +
-            f"$ceiling%.0f s per-query ceiling — waive in explained.json or reclaim")
-        }
-      }
-      val fullPath = java.nio.file.Paths.get("target", "bench_full.json")
-      java.nio.file.Files.createDirectories(fullPath.getParent)
-      java.nio.file.Files.write(fullPath,
-        (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(compact)
-      System.out.flush()
-    }
-
-    (1 to nPasses).foreach { p =>
+    val passes = scala.collection.mutable.ArrayBuffer.empty[Seq[Row]]
+    val fullPath = java.nio.file.Paths.get("target", "bench_full.json")
+    java.nio.file.Files.createDirectories(fullPath.getParent)
+    (1 to nPasses).foreach { _ =>
       sentinels += sentinel()
       ioSentinels += ioSentinel()
-      var lastLocal = sentinels.last
-      var lastLocalAt = elapsed()
-      val got = scala.collection.mutable.Map.empty[String, Double]
-      val loc = scala.collection.mutable.Map.empty[String, Double]
-      // cheapest-first: coverage survives a degraded box — exhaustion
-      // truncates the expensive tail, not whole families. Cancelled
-      // queries are not retried (see protocol note above).
-      val order = names.filterNot(cancelledQ).sortBy(estimate)
-      order.foreach { n =>
-        if (elapsed() + estimate(n) <= wallBudget) {
-          if (elapsed() - lastLocalAt >= 45.0) {
-            lastLocal = sentinel(); lastLocalAt = elapsed()
-          }
-          val cap =
-            if (watchdogMult <= 0) Double.MaxValue / 2000
-            else math.max(30.0, watchdogMult * estBase(n))
-          withWatchdog(spark, n, cap)(materialize(n)) match {
-            case Measured(s) =>
-              recordEst(n, s); got(n) = s; loc(n) = lastLocal
-            case Cancelled(dt) =>
-              cancelledQ += n
-              System.err.println(f"[bench] WATCHDOG cancelled $n after $dt%.1f s " +
-                f"(cap ${cap}%.1f s = max(30, ${watchdogMult}%.0fx ${estBase(n)}%.2f s est)) — " +
-                "recorded uncovered, not retried")
-            case Failed(dt, m) =>
-              System.err.println(f"[bench] $n failed after $dt%.1f s: $m")
-          }
-          Scratch.releaseRunState(spark)
-        }
+      passes += RegistryRun.run(spark, sfDir, steps) { (_, df) =>
+        df.write.format("noop").mode("overwrite").save()
       }
-      done += got.toMap
-      localSent += loc.toMap
-      emit(isFinal = p == nPasses)
+      val line = record(passes.toSeq, sentinels.toSeq, ioSentinels.toSeq, sfDir)
+      java.nio.file.Files.writeString(fullPath, line + "\n")
+      println(line)
+      System.out.flush()
     }
     spark.stop()
+  }
+
+  /** The record line: per query, the minimum over its measured passes
+    * (`queries`) and that pass's row (`rows`), with totals by family and
+    * by batch vs streaming. A query is streaming when its row shows a
+    * started stream: those carry fixed per-micro-batch checkpoint and
+    * state-store cost, so the batch plan-quality signal is
+    * `batch_total`. A name run more than once in one pass (an in-run
+    * `set:` A/B) keeps its overall minimum here; the printed rows show
+    * each run. */
+  private[graft] def record(
+      passes: Seq[Seq[Row]],
+      sentinels: Seq[Double],
+      ioSentinels: Seq[Double],
+      sfDir: String): String = {
+    val all = passes.zipWithIndex.flatMap { case (rows, p) => rows.map(_ -> (p + 1)) }
+    val names = all.map(_._1.name).distinct
+    val measured = all.collect { case (r @ Row(_, Measured(s), _, _, _, _, _), p) => (r, s, p) }
+    val best = names.flatMap(n => measured.filter(_._1.name == n).minByOption(_._2))
+    def withOutcome(pred: RegistryRun.Outcome => Boolean) =
+      names.filter(n => all.exists { case (r, _) => r.name == n && pred(r.outcome) })
+    def secs(v: Double) = JDouble(math.rint(v * 1000) / 1000)
+    def strs(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+    val total = best.map(_._2).sum
+    val streamTotal = best.collect { case (r, s, _) if r.streams > 0 => s }.sum
+    val families = best.groupBy(_._1.query.family).toSeq.sortBy(_._1)
+      .map { case (f, xs) => f -> secs(xs.map(_._2).sum) }
+    val rows = best.map { case (r, _, p) =>
+      r.name -> JObject(
+        "pass" -> JInt(p), "jobs" -> JInt(r.jobs), "stages" -> JInt(r.stages),
+        "tasks" -> JInt(r.tasks), "streams" -> JInt(r.streams),
+        "sites" -> JArray(r.sites.map(s => JObject(
+          "site" -> JString(s.site), "stages" -> JInt(s.stages), "secs" -> secs(s.secs))).toList))
+    }
+    compact(render(JObject(
+      "metric" -> JString("total"), "value" -> secs(total), "unit" -> JString("sec"),
+      "batch_total" -> secs(total - streamTotal), "stream_total" -> secs(streamTotal),
+      "passes" -> JInt(passes.size), "covered" -> JInt(best.size),
+      "registered" -> JInt(names.size),
+      "sentinel_secs" -> JArray(sentinels.map(secs).toList),
+      "io_sentinel_secs" -> JArray(ioSentinels.map(secs).toList),
+      "families" -> JObject(families: _*),
+      "queries" -> JObject(best.map { case (r, s, _) => r.name -> secs(s) }: _*),
+      "rows" -> JObject(rows: _*),
+      "uncovered" -> strs(names.filterNot(best.map(_._1.name).toSet)),
+      "cancelled_queries" -> strs(withOutcome(_.isInstanceOf[Cancelled])),
+      "failed_queries" -> strs(withOutcome(_.isInstanceOf[Failed])),
+      "sf" -> JString(sfDir))))
   }
 }

@@ -5,34 +5,24 @@ package graft
   * optimization rounds can commit before/after plan evidence without
   * hand-copying console output.
   *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+  *   SPARK_GRAFT_SF_DIR=<fixture dir> \
   *     sbt "runMain graft.Explain plans/r13 after v22_hnsw g20_hyperball"
   *
-  * Like Profile, accepts inline conf pokes ("set:key=value") at any
-  * position. Not part of the driver contract (Verify/Bench are).
+  * Steps after the tag are run-loop steps: query names and inline conf
+  * pokes ("set:key=value") at any position.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Explain <outDir> <tag> [set:k=v|query]...")
-    val outDir = args(0)
-    val tag = args(1)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus)
+    val Array(outDir, tag) = args.take(2)
+    val steps = RegistryRun.steps(args.toSeq.drop(2))
+    val sfDir = RegistryRun.sfDir
+    val spark = RegistryRun.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    args.drop(2).foreach {
-      case s if s.startsWith("set:") =>
-        val Array(k, v) = s.stripPrefix("set:").split("=", 2)
-        spark.conf.set(k, v)
-        println(s"[explain] set $k=$v")
-      case n =>
-        val plan = SparkEntry.queries(n)(spark, sfDir)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(outDir, s"${n}_$tag.txt"),
-          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"[explain] wrote $outDir/${n}_$tag.txt (${plan.length} chars)")
+    RegistryRun.run(spark, sfDir, steps) { (q, df) =>
+      val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outDir, s"${q.name}_$tag.txt"), plan)
+      println(s"[explain] wrote $outDir/${q.name}_$tag.txt (${plan.length} chars)")
     }
     spark.stop()
   }

@@ -11,8 +11,7 @@ package graft
   */
 object Fee {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = RegistryRun.session()
     import org.apache.spark.sql.functions._
     val dir = Scratch.dir(spark, "fee")
     def time(tag: String)(body: => Unit): Unit = {

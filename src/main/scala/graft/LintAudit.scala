@@ -3,48 +3,30 @@ package graft
 import graft.plans.PlanLint
 
 /** Registry-wide plan audit: runs [[PlanLint]] (logical + physical
-  * rules) over every registered query and prints the findings — the
-  * standing answer to "would this plan survive a 100× scale-up?".
+  * rules) over every registered query (or the steps given as arguments
+  * or in SPARK_GRAFT_ONLY) and prints the findings — the standing answer
+  * to "would this plan survive a 100× scale-up?". Queries whose
+  * construction runs jobs, commits or streams run them in the run's
+  * scratch, as Bench does. Exits 1 on any fatal finding or any query
+  * that could not be built and linted.
   *
-  * Streaming/side-effecting queries build temp dirs and run jobs when
-  * invoked, so this main lints only the queries whose construction is
-  * pure planning (it skips names the run would mutate state for —
-  * the e1x/e2x streaming family and k-family table-state queries
-  * execute work inside the query function itself; their plan hygiene
-  * is covered by their own PlanSpec guards).
-  *
-  *   sbt "runMain graft.LintAudit /root/testdata/sf0.01"
+  *   SPARK_GRAFT_SF_DIR=<fixture dir> sbt "runMain graft.LintAudit"
   */
 object LintAudit {
-  // query families whose builder fn executes jobs / writes tables as a
-  // side effect of *constructing* the frame — linting means running them
-  private val effectful = Set("e11", "e12", "e15", "e18", "e19", "e20", "e21",
-    "e22", "e23", "e24", "e25", "e26", "e29")
-
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.local(cpus)
+    val steps = RegistryRun.steps(args.toSeq)
+    val sfDir = RegistryRun.sfDir
+    val spark = RegistryRun.session()
     var fatals = 0
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val prefix = name.takeWhile(_ != '_')
-      if (effectful.contains(prefix) || name.startsWith("k1") ||
-          name.startsWith("k2") || name.startsWith("k3")) {
-        println(s"$name: skipped (effectful construction; guarded in PlanSpec)")
-      } else {
-        try {
-          val fs = PlanLint.lint(SparkEntry.queries(name)(spark, sfDir))
-            .filterNot(_.severity == "info")
-          fatals += fs.count(_.severity == "fatal")
-          if (fs.nonEmpty) println(s"$name:\n  ${fs.mkString("\n  ")}")
-          else println(s"$name: clean")
-        } catch {
-          case e: Throwable => println(s"$name: lint error ${e.getMessage}")
-        }
-      }
+    val rows = RegistryRun.run(spark, sfDir, steps) { (q, df) =>
+      val fs = PlanLint.lint(df).filterNot(_.severity == "info")
+      fatals += fs.count(_.severity == "fatal")
+      if (fs.nonEmpty) println(s"${q.name}:\n  ${fs.mkString("\n  ")}")
+      else println(s"${q.name}: clean")
     }
-    println(s"[lint] fatal findings: $fatals")
+    val unlinted = rows.filterNot(_.outcome.isInstanceOf[RegistryRun.Measured]).map(_.name)
+    println(s"[lint] fatal findings: $fatals; queries not linted: ${unlinted.size} ${unlinted.mkString(",")}")
     spark.stop()
-    if (fatals > 0) sys.exit(1)
+    if (fatals > 0 || unlinted.nonEmpty) sys.exit(1)
   }
 }

@@ -78,7 +78,10 @@ object Tables {
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String]) {
+  /** The name's letter prefix: `a` for a3_nation_revenue, `dq` for dq2_…. */
+  def family: String = name.takeWhile(!_.isDigit)
+}
 
 object QueryDef {
   def sql(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): QueryDef =

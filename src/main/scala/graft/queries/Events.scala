@@ -1856,26 +1856,6 @@ object Events {
     }
   }
 
-  /** Registered queries that drive a REAL Structured Streaming run
-    * (readStream → writeStream with checkpoint/state-store commits).
-    * Bench reports these under a separate `stream_total`: their cost is
-    * dominated by fixed per-microbatch state-store/checkpoint overhead
-    * (see the drain notes at the top of this file), which would
-    * otherwise pollute round-over-round comparison of batch plan
-    * quality. */
-  val streamingNames: Set[String] = Set(
-    "e11_stream_windows", "e12_stream_stream_join", "e15_stream_dedup",
-    "e18_stream_ivm", "e19_stream_sessions", "e20_late_data",
-    "e21_stream_outer_join", "e29_stream_full_outer",
-    "e22_transform_with_state", "e23_state_map", "e24_state_list",
-    "e25_chained_agg", "e26_session_window", "e31_stream_static_join",
-    "e32_stream_semi_join", "e33_stream_versioned_sink",
-    "e34_table_follow", "e36_stream_media_fingerprint", "e37_stream_hll",
-    "e38_stream_knn", "e39_stream_cms", "e40_stream_stats_follow",
-    "e41_stream_quantile", "e42_stream_txn_sink", "e43_stream_indexed_sink",
-    "e44_stream_forget", "e45_stream_range_index", "e46_stream_live_stats",
-    "e47_stream_compact", "e48_stream_text_index", "e49_stream_triple_index")
-
   // --- e40_stream_stats_follow: STATS THAT FOLLOW THE TABLE — e33
   // lands a stream into the store; e40 keeps the OPTIMIZER FEED current
   // while it lands: every micro-batch upserts its rows, then refreshes

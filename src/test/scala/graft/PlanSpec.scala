@@ -86,19 +86,6 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), "query side of the bucket join must broadcast")
   }
 
-  test("registry-wide: no query plans a logical scale-killer (PlanLint fatal)") {
-    // Dogfoods the user-facing linter: the same rules a library user
-    // runs via PlanLint.assertScales sweep every registered query's
-    // optimized logical plan (partition-less windows and friends).
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
-      val fatals = graft.plans.PlanLint.lintLogical(plan).filter(_.severity == "fatal")
-      if (fatals.nonEmpty) Some(s"$name -> ${fatals.mkString("; ")}") else None
-    }
-    assert(offenders.isEmpty,
-      s"logical scale-killers in: ${offenders.mkString(", ")}")
-  }
-
   test("q15: global max is a scalar aggregate broadcast back, not a window") {
     val p = planOf("q15_top_supplier")
     assert(!p.contains("Window"), s"q15 must not use a window for the global max:\n$p")

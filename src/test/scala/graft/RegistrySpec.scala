@@ -24,13 +24,19 @@ class RegistrySpec extends SparkSpec {
       // Column names must be lowercase + distinct for oracle hash parity.
       val cols = df.columns.toSeq
       assert(cols.distinct.size === cols.size, s"duplicate columns in ${q.name}: $cols")
+      // Dogfoods the user-facing linter: the rules a library user runs
+      // via PlanLint.assertScales check the optimized logical plan for
+      // scale-killers (partition-less windows and friends).
+      val fatals = graft.plans.PlanLint.lintLogical(df.queryExecution.optimizedPlan)
+        .filter(_.severity == "fatal")
+      assert(fatals.isEmpty, s"logical scale-killers in ${q.name}: ${fatals.mkString("; ")}")
       // Cache hygiene: no query may leak persisted frames into a
       // long-lived session (round 1 leaked d3/v2/v3's buckets; the bench
       // only survived by calling clearCache after every query). Staged
       // checkpoint leaves (Scratch.stageFrame local mode) ARE parked in
       // the block manager by design; the contract is that the harness's
-      // between-queries sweep — Scratch.releaseRunState, what Bench/
-      // Verify/Profile all call — returns the session to empty.
+      // between-queries sweep — Scratch.releaseRunState, which the
+      // run loop of Bench and Verify calls — returns the session to empty.
       graft.Scratch.releaseRunState(spark)
       assert(spark.sharedState.cacheManager.isEmpty,
         s"${q.name} left frames in the session cache")

@@ -1,195 +1,44 @@
 #!/usr/bin/env python3
-"""Registry latency-budget guard (dev tooling, driver-side python).
+"""Per-query latency compare of a bench record against a baseline record.
 
-Usage: python3 tools/latency_guard.py <prev_bench.json> <curr_bench.json>
-       [--factor 1.4] [--min-secs 0.5]
+Usage: python3 tools/latency_guard.py <baseline.json> <current.json>
 
-Compares two bench JSONs (the one-line format Bench.scala emits — either
-the stdout line or target/bench_full.json) and loudly reports every query
-whose current min-of-N exceeds the previous round's min by more than
-`factor`, after normalizing for measured box drift via the noise
-sentinel series (`sentinel_secs`: a fixed CPU-only computation timed at
-the head of every measured pass — if the sentinel's min moved 1.3x
-between rounds, the box did, and per-query budgets scale with it).
-
-Exit code 1 when any query breaches its budget — wire into the round
-close-out so a silent plan regression can't ride a green gate again.
-Queries absent from either file are reported informationally (new /
-removed) but never fail the guard.
+Both files are Bench records: target/bench_full.json, or the latest
+committed full record under tools/bench_history/. A query breaches its
+budget when its current minimum exceeds 1.4x its baseline minimum and
+the baseline minimum is at least 0.5 s. Queries in only one record are
+listed, never failed. Exit 1 on any breach.
 """
 import json
 import sys
 
-# ceiling on the PRODUCT of all budget loosenings (factor x sentinel
-# drift x min-of-N bias) — see compute()'s docstring
-ALLOWANCE_CAP = 1.7
+FACTOR = 1.4
+MIN_SECS = 0.5
 
 
-def load(path):
-    with open(path) as f:
-        txt = f.read()
-    # driver BENCH_rN.json files wrap the bench stdout in a {"tail": …}
-    # envelope — unwrap it so the metric line inside becomes scannable
-    try:
-        env = json.loads(txt)
-        if isinstance(env, dict) and "queries" in env:
-            return env
-        if isinstance(env, dict) and "tail" in env:
-            txt = env["tail"]
-    except json.JSONDecodeError:
-        pass
-    # the text may hold logs around the JSON line; take the last line
-    # that parses and contains "queries"
-    doc = None
-    for line in txt.splitlines():
-        line = line.strip()
-        i = line.find('{"metric"')
-        if i < 0:
-            continue
-        try:
-            cand = json.loads(line[i:])
-        except json.JSONDecodeError:
-            continue
-        if "queries" in cand:
-            doc = cand
-    if doc is None:
-        raise SystemExit(f"no parseable bench JSON line in {path}")
-    return doc
-
-
-def parse_args(argv, doc):
-    """Split argv into (positionals, {--opt: value}); accepts both
-    --factor=1.4 and --factor 1.4 (shared with closeout.py)."""
-    args, opts, i = [], {}, 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--"):
-            if "=" in a:
-                k, v = a.split("=", 1)
-                opts[k] = v
-            elif i + 1 < len(argv):
-                opts[a] = argv[i + 1]
-                i += 1
-            else:
-                raise SystemExit(f"option {a} needs a value\n\n{doc}")
-        else:
-            args.append(a)
-        i += 1
-    return args, opts
+def compare(base, curr):
+    """(breaches, new, absent): each breach is (name, base_s, curr_s)."""
+    bq, cq = base["queries"], curr["queries"]
+    breaches = [(n, bq[n], cq[n]) for n in sorted(set(bq) & set(cq))
+                if bq[n] >= MIN_SECS and cq[n] > FACTOR * bq[n]]
+    return breaches, sorted(set(cq) - set(bq)), sorted(set(bq) - set(cq))
 
 
 def main(argv):
-    args, opts = parse_args(argv, __doc__)
-    if len(args) != 2:
+    if len(argv) != 2:
         raise SystemExit(__doc__)
-    factor = float(opts.get("--factor", "1.4"))
-    min_secs = float(opts.get("--min-secs", "0.5"))
-    prev, curr = load(args[0]), load(args[1])
-    return report(prev, curr, factor, min_secs)
-
-
-def _local_sentinel(doc, name):
-    """The most LOCAL load proxy available for `name`'s measurement:
-    the per-query nearest-preceding sentinel (round 13+: the
-    "sentinel_local" map — re-timed every 45 s within a pass, so it is
-    seconds from the measurement), else the sentinel timed right before
-    its family in the pass that produced its min (rounds <13:
-    min_pass x sentinel_by_family), else the family's sentinel minimum,
-    else the global pass-head sentinel minimum, else None."""
-    sl = (doc.get("sentinel_local") or {}).get(name)
-    if sl:
-        return sl
-    fam = name[:next((i for i, ch in enumerate(name) if ch.isdigit()),
-                     len(name))]
-    series = (doc.get("sentinel_by_family") or {}).get(fam)
-    if series:
-        mp = (doc.get("min_pass") or {}).get(name)
-        if isinstance(mp, int) and 1 <= mp <= len(series):
-            return series[mp - 1]
-        return min(series)
-    ss = doc.get("sentinel_secs")
-    return min(ss) if ss else None
-
-
-def n_passes(doc):
-    """Measured-pass count of a bench record: the explicit "passes"
-    field (round 12+), else the sentinel series length (one pass-head
-    sentinel is appended per measured pass, so older records are
-    inferable), else None."""
-    p = doc.get("passes")
-    if isinstance(p, int) and p > 0:
-        return p
-    ss = doc.get("sentinel_secs")
-    return len(ss) if ss else None
-
-
-def compute(prev, curr, factor=1.4, min_secs=0.5, drift_cap=1.2):
-    """Returns (breaches, improved, new, absent). Each breach is
-    (name, prev_s, curr_s, ratio, drift_used). Budgets are normalized
-    per query by the LOCAL sentinel ratio (see _local_sentinel), capped
-    at [1, drift_cap] — round 10 showed a 2.0 cap lets a hot sentinel
-    sample forgive a 1.6x query drift, so the cap defaults to 1.2: box
-    noise may excuse at most 20%, the rest must be reclaimed or A/B'd.
-
-    Min-of-N bias: a record's per-query value is the MIN over its
-    measured passes, so fewer passes read systematically slower —
-    min-of-1 is stochastically >= min-of-3 on the same box. When the
-    current record ran fewer passes than the baseline (the round-12
-    driver protocol is warmup + ONE pass while committed baselines are
-    min-of-3), the budget widens 10% per missing pass: on this box's
-    observed ~±40% wall noise, each additional sample lowers the
-    expected min by roughly that order. The correction applies only in
-    the fewer-passes direction — a 3-pass run gets no extra headroom
-    against a 1-pass baseline.
-
-    Combined-allowance cap: the three loosenings MULTIPLY (factor 1.4 x
-    drift 1.2 x bias 1.1^2 = 2.03), so stacked they could mask a real
-    ~2x regression. The total allowance is capped at
-    max(factor, ALLOWANCE_CAP): drift and pass-count bias together may
-    excuse at most cap/factor beyond the factor itself."""
-    pq, cq = prev["queries"], curr["queries"]
-    pn, cn = n_passes(prev), n_passes(curr)
-    bias = 1.0
-    if pn and cn and cn < pn:
-        bias = 1.1 ** (pn - cn)
-    breaches, improved = [], []
-    for name in sorted(set(pq) & set(cq)):
-        p, c = pq[name], cq[name]
-        if p < min_secs and c < min_secs:
-            continue  # noise floor: sub-half-second queries never gate
-        sp, sc = _local_sentinel(prev, name), _local_sentinel(curr, name)
-        drift = 1.0
-        if sp and sc:
-            drift = min(drift_cap, max(1.0, sc / sp))
-        allowance = min(factor * drift * bias, max(factor, ALLOWANCE_CAP))
-        if c > p * allowance:
-            breaches.append((name, p, c, c / p, drift))
-        elif c < p / factor:
-            improved.append((name, p, c))
-    return (breaches, improved,
-            sorted(set(cq) - set(pq)), sorted(set(pq) - set(cq)))
-
-
-def report(prev, curr, factor=1.4, min_secs=0.5):
-    breaches, improved, new, absent = compute(prev, curr, factor, min_secs)
-    for name in new:
-        print(f"INFO new query {name}: {curr['queries'][name]:.2f}s (no budget yet)")
-    for name in absent:
-        print(f"INFO query {name} absent from current run")
-    for name, p, c in improved:
-        print(f"OK   {name} improved {p:.2f}s -> {c:.2f}s")
-    common = len(set(prev["queries"]) & set(curr["queries"]))
-    if breaches:
-        print(f"\n== {len(breaches)} queries breached their latency budget "
-              f"(factor {factor}, per-query local-sentinel normalization):")
-        for name, p, c, r, drift in sorted(breaches, key=lambda b: -b[3]):
-            print(f"FAIL {name}: {p:.2f}s -> {c:.2f}s ({r:.2f}x, "
-                  f"local sentinel drift {drift:.2f}x)")
-        print("Explain each (committed A/B note) or reclaim before close-out.")
-        return 1
-    print(f"== latency budgets held for {common} common "
-          f"queries (factor {factor}, per-query local-sentinel normalization)")
-    return 0
+    base, curr = (json.load(open(p)) for p in argv)
+    breaches, new, absent = compare(base, curr)
+    for n in new:
+        print(f"INFO new query {n}: {curr['queries'][n]:.2f}s (no baseline)")
+    for n in absent:
+        print(f"INFO query {n} absent from the current record")
+    for n, b, c in breaches:
+        print(f"FAIL {n}: {b:.2f}s -> {c:.2f}s ({c / b:.2f}x)")
+    common = len(set(base["queries"]) & set(curr["queries"]))
+    print(f"== {len(breaches)} of {common} common queries over {FACTOR}x "
+          f"their baseline (baselines >= {MIN_SECS}s)")
+    return 1 if breaches else 0
 
 
 if __name__ == "__main__":
