@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's session entrypoint: one place that encodes every config
-  * the library depends on. Users (and Verify/Bench) build sessions here
-  * so behavior never depends on ambient defaults.
+  * and extension the library depends on. Users, the dev mains and the
+  * test suites build sessions here so behavior never depends on ambient
+  * defaults.
   *
   * Sizing guidance (local[N] → cluster): `shufflePartitions` should be
   * cores×2-3 on a real cluster (AQE coalesces small post-shuffle
@@ -46,6 +47,9 @@ object GraftSession {
       // way; the engine's own crash protocol sits above _SUCCESS
       // markers, which v2 still writes)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      // what graft adds to Spark: the as-of strategy, the optimizer
+      // rules, the SQL functions; newSession() children inherit it
+      .withExtensions(new graft.plans.GraftExtensions)
     // deployment dial: SPARK_GRAFT_SCRATCH points every staging site
     // (graft.Scratch) at a cluster-visible root without code changes;
     // unset = conf default (local tmp in local mode, loud fail on a
@@ -60,51 +64,17 @@ object GraftSession {
   def local(cpus: Int): SparkSession = {
     val s = builder(s"local[$cpus]", shufflePartitions = cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    registerFunctions(s)
     s
   }
 
-  /** Expose the engine's custom codegen'd expressions to SQL users:
-    *   - `graft_dot(a, b)` — float-array dot product;
-    *   - `graft_dot_q(a, b)` — exact long-array dot product;
-    *   - `graft_l2_q(a, b)` — exact long-array squared-L2 distance;
-    *   - `graft_simhash32(tokens)` — 32-bit SimHash signature string;
-    *   - `graft_minhash16(shingles)` — 16 MinHash chunk-minima;
-    *   - `graft_nfc(text)` — Unicode NFC normalization.
-    */
-  def registerFunctions(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
-    import graft.functions.{ArrayDotProduct, ArrayLongDot, ArrayLongL2, MinHash16, SimHash32}
-    val registry = spark.sessionState.functionRegistry
-    // Casting to array<float> up front makes graft_dot usable on
-    // array<double> SQL literals (a float→float cast is simplified away);
-    // non-castable inputs still fail analysis with a cast error.
-    def toFloatArray(e: Expression): Expression = Cast(e, ArrayType(FloatType))
-    def toLongArray(e: Expression): Expression = Cast(e, ArrayType(LongType))
-    registry.createOrReplaceTempFunction(
-      "graft_dot",
-      (exprs: Seq[Expression]) => ArrayDotProduct(toFloatArray(exprs(0)), toFloatArray(exprs(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_dot_q",
-      (exprs: Seq[Expression]) => ArrayLongDot(toLongArray(exprs(0)), toLongArray(exprs(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_l2_q",
-      (exprs: Seq[Expression]) => ArrayLongL2(toLongArray(exprs(0)), toLongArray(exprs(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_simhash32",
-      (exprs: Seq[Expression]) => SimHash32(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_minhash16",
-      (exprs: Seq[Expression]) => MinHash16(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_nfc",
-      (exprs: Seq[Expression]) => graft.functions.NfcNormalizeExpr(exprs.head),
-      "built-in")
+  /** Runs `body` with each `key -> value` set on `spark`'s conf, then
+    * restores each key's previous value, or unsets a key that had none.
+    * The one way graft scopes a per-query switch (a rule's conf key, AQE
+    * off, a shuffle width) to the code that needs it. */
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.reverse.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

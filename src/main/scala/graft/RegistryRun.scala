@@ -8,19 +8,21 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.graftbridge.drainListenerBus
+import org.apache.spark.sql.graftbridge.{drainListenerBus, withActive}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** The one registry run loop of the dev mains: Bench, Verify, Explain
   * and LintAudit are each one action over it.
   *
-  * A run is a list of steps: query names and `set:key=value` confs. A
-  * conf applies to the queries after it, and the run restores every key
-  * it set when it ends. Each query is built and handed to the action
-  * inside [[withWatchdog]], then `Scratch.releaseRunState` sweeps the
-  * session. The run prints and returns one [[Row]] per query: its
-  * outcome, the jobs, stages, tasks and streaming queries it started,
-  * and its stage wall by call site.
+  * A run is a list of steps: query names and `set:key=value` confs.
+  * Each query is built on its own `newSession()` child of the run's
+  * session ([[querySession]]), so the conf, temp views and streams it
+  * leaves behind never reach the next query; a conf applies to the
+  * children of the queries after it. Each query is built and handed to
+  * the action inside [[withWatchdog]], then `Scratch.releaseRunState`
+  * sweeps the shared cache and persisted RDDs. The run prints and
+  * returns one [[Row]] per query: its outcome, the jobs, stages, tasks
+  * and streaming queries it started, and its stage wall by call site.
   *
   * The mains read four environment variables: SPARK_GRAFT_SF_DIR (the
   * fixture directory), SPARK_GRAFT_CPUS (local cores, default all the
@@ -97,10 +99,10 @@ object RegistryRun {
   }
 
   /** Runs `body` inside a Spark job group with a watchdog timer: at
-    * `capSecs` the group is cancelled (interruptOnCancel) and any
-    * active streaming query is stopped — a hung streaming gate's
-    * micro-batch jobs run on the stream-execution thread outside our
-    * group, so job-group cancellation alone can't reach them. The
+    * `capSecs` the group is cancelled (interruptOnCancel) and every
+    * active streaming query of `spark` is stopped — a hung streaming
+    * gate's micro-batch jobs run on the stream-execution thread outside
+    * our group, so job-group cancellation alone can't reach them. The
     * cancel REPEATS at a 1 s cadence until `body` unwinds:
     * cancelJobGroup only reaches jobs active at that instant, so a
     * one-shot cancel can land in a between-jobs gap and the gate's
@@ -133,25 +135,36 @@ object RegistryRun {
     } finally { timer.cancel(); sc.clearJobGroup() }
   }
 
-  /** Runs `steps` on `spark` over the fixtures at `sfDir`, handing each
-    * query's frame to `action`. */
+  /** A fresh child of `spark` for one query, with `confs` set on it. It
+    * shares the SparkContext, cache and catalog, and gets its own conf,
+    * temp views, functions, streams and the graft extensions. */
+  def querySession(spark: SparkSession, confs: Iterable[(String, String)]): SparkSession = {
+    val child = spark.newSession()
+    confs.foreach { case (k, v) => child.conf.set(k, v) }
+    child
+  }
+
+  /** Runs `steps` on children of `spark` over the fixtures at `sfDir`,
+    * handing each query's frame to `action`. The query is built and
+    * acted on with its child as the thread's active session. */
   def run(spark: SparkSession, sfDir: String, steps: Seq[Step])(
       action: (QueryDef, DataFrame) => Unit): Seq[Row] = {
     val sc = spark.sparkContext
     val counter = new Counter
-    val prior = scala.collection.mutable.LinkedHashMap.empty[String, Option[String]]
+    val confs = scala.collection.mutable.LinkedHashMap.empty[String, String]
     drainListenerBus(spark)
     sc.addSparkListener(counter)
     println(f"${"query"}%-28s ${"secs"}%8s ${"jobs"}%6s ${"stages"}%7s ${"tasks"}%7s ${"streams"}%7s")
     try steps.flatMap {
       case SetConf(k, v) =>
-        prior.getOrElseUpdate(k, spark.conf.getOption(k))
-        spark.conf.set(k, v)
+        confs(k) = v
         println(s"[run] set $k=$v")
         None
       case Run(q) =>
         counter.reset()
-        val outcome = withWatchdog(spark, q.name, CapSecs)(action(q, q.run(spark, sfDir)))
+        val child = querySession(spark, confs)
+        val outcome = withWatchdog(child, q.name, CapSecs)(
+          withActive(child)(action(q, q.run(child, sfDir))))
         drainListenerBus(spark)
         val row = counter.row(q, outcome)
         Scratch.releaseRunState(spark)
@@ -159,10 +172,7 @@ object RegistryRun {
         row.sites.foreach(s => println(f"  [site] ${s.stages}%4dx ${s.secs}%8.3f s  ${s.site}"))
         System.out.flush()
         Some(row)
-    } finally {
-      sc.removeSparkListener(counter)
-      prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
+    } finally sc.removeSparkListener(counter)
   }
 
   /** Counts what one query starts, from its reset to its row. A

@@ -101,19 +101,13 @@ object StatsStore {
     // value, so the set holds at most |changed| values); the stale stats
     // subdirectories are then dropped explicitly.
     val obs = org.apache.spark.sql.Observation()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val slice = Tables.parquet(spark, tablePath)
-        .filter(col(partCol).isin(changed: _*)) // partition-pruned scan
-      statsRows(slice, partCol, cols)
-        .observe(obs, collect_set(col(partCol).cast("string")).as("present"))
-        .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-        .parquet(statsPath)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    val slice = Tables.parquet(spark, tablePath)
+      .filter(col(partCol).isin(changed: _*)) // partition-pruned scan
+    statsRows(slice, partCol, cols)
+      .observe(obs, collect_set(col(partCol).cast("string")).as("present"))
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol)
+      .parquet(statsPath)
     val present = obs.get("present").asInstanceOf[scala.collection.Seq[String]].toSet
     val gone = changed.map(String.valueOf).filterNot(present.contains)
     if (gone.nonEmpty) {

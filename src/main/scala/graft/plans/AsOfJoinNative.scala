@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -190,15 +190,10 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** User-facing API + extension registration. */
+/** User-facing API. The session plans [[AsOfJoinPlan]] through
+  * [[AsOfJoinStrategy]], which [[GraftExtensions]] adds: on a session
+  * without it, an as-of join fails at planning. */
 object AsOfJoinNative {
-
-  /** Install the planner strategy (idempotent). Alternatively register
-    * [[GraftExtensions]] via `spark.sql.extensions` at session build. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
 
   /** As-of join: for every left row, the latest right row with the same
     * key and rightTs <= leftTs (inclusive ties, left-preserving). With
@@ -214,7 +209,6 @@ object AsOfJoinNative {
       rightTs: String,
       forward: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def resolve(plan: LogicalPlan, name: String): Expression =
@@ -245,17 +239,5 @@ object AsOfJoinNative {
       unix_micros(col(leftTs)) - unix_micros(col(rightTs)) <= toleranceSeconds * 1000000L
     asofJoin(left, right, leftKey, rightKey, leftTs, rightTs)
       .select(left.columns.map(col) ++ right.columns.map(c => when(fresh, col(c)).as(c)): _*)
-  }
-}
-
-/** `spark.sql.extensions`-compatible registration. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    e.injectOptimizerRule(session => RangeJoinRule(session))
-    e.injectOptimizerRule(session => JoinReorderRule(session))
-    e.injectOptimizerRule(session => MvRewriteRule(session))
-    e.injectOptimizerRule(session => AsOfJoinRule(session))
-    AsOfSqlSurface.functions.foreach(e.injectFunction)
   }
 }

@@ -1,12 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BinaryExpression, EqualTo, Expression, ExpressionInfo, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BinaryExpression, EqualTo, Expression, Unevaluable}
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.JOIN
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
 /** SQL-TEXT surface for the native as-of join — the missing reach from
@@ -32,9 +32,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * The marker is [[Unevaluable]] on purpose: if the rule does not fire
   * (not registered, unsupported shape — reversed marker arguments,
   * extra conjuncts), execution fails loudly rather than silently
-  * computing something else. Registered via [[GraftExtensions]]
-  * (`spark.sql.extensions`) or [[AsOfSqlSurface.enable]] on a live
-  * session.
+  * computing something else. The markers and the rule are part of
+  * [[GraftExtensions]], so every graft session has them.
   */
 case class AsOfMark(left: Expression, right: Expression, forward: Boolean)
     extends BinaryExpression with Unevaluable {
@@ -47,12 +46,13 @@ case class AsOfMark(left: Expression, right: Expression, forward: Boolean)
 }
 
 /** Lower `LEFT JOIN ... ON lk = rk AND asof_match(lts, rts)` onto
-  * [[AsOfJoinPlan]]. Runs among `experimental.extraOptimizations` /
-  * injected optimizer rules — after the standard batches, where the
-  * join shape is final — and requires strict orientation (marker's
-  * first arg and one equality side on the left child): anything else is
-  * left untouched, and the Unevaluable marker then fails execution
-  * loudly. */
+  * [[AsOfJoinPlan]]. Injected by [[GraftExtensions]], so it runs inside
+  * Spark's operator-optimization batches, beside predicate pushdown and
+  * column pruning: the marker and the equality reference both sides, so
+  * they stay in the join condition while those rules reshape the
+  * children. Requires strict orientation (marker's first arg and one
+  * equality side on the left child): anything else is left untouched,
+  * and the Unevaluable marker then fails execution loudly. */
 case class AsOfJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def split(e: Expression): Seq[Expression] = e match {
@@ -60,56 +60,37 @@ case class AsOfJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(l, r, LeftOuter, Some(cond), _) =>
-      val conjuncts = split(cond)
-      val (markers, rest) = conjuncts.partition(_.isInstanceOf[AsOfMark])
-      (markers, rest) match {
-        case (Seq(m: AsOfMark), Seq(EqualTo(a, b)))
-            if m.left.references.subsetOf(l.outputSet) &&
-              m.right.references.subsetOf(r.outputSet) =>
-          val oriented: Option[(Expression, Expression)] =
-            if (a.references.subsetOf(l.outputSet) &&
-              b.references.subsetOf(r.outputSet)) Some((a, b))
-            else if (b.references.subsetOf(l.outputSet) &&
-              a.references.subsetOf(r.outputSet)) Some((b, a))
-            else None
-          oriented
-            .map { case (lk, rk) =>
-              AsOfJoinPlan(l, r, lk, rk, m.left, m.right, m.forward): LogicalPlan
-            }
-            .getOrElse(j)
-        case _ => j
-      }
-  }
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithPruning(_.containsPattern(JOIN)) {
+      case j @ Join(l, r, LeftOuter, Some(cond), _) =>
+        val conjuncts = split(cond)
+        val (markers, rest) = conjuncts.partition(_.isInstanceOf[AsOfMark])
+        (markers, rest) match {
+          case (Seq(m: AsOfMark), Seq(EqualTo(a, b)))
+              if m.left.references.subsetOf(l.outputSet) &&
+                m.right.references.subsetOf(r.outputSet) =>
+            val oriented: Option[(Expression, Expression)] =
+              if (a.references.subsetOf(l.outputSet) &&
+                b.references.subsetOf(r.outputSet)) Some((a, b))
+              else if (b.references.subsetOf(l.outputSet) &&
+                a.references.subsetOf(r.outputSet)) Some((b, a))
+              else None
+            oriented
+              .map { case (lk, rk) =>
+                AsOfJoinPlan(l, r, lk, rk, m.left, m.right, m.forward): LogicalPlan
+              }
+              .getOrElse(j)
+          case _ => j
+        }
+    }
 }
 
 object AsOfSqlSurface {
 
-  private def mkInfo(name: String) =
-    new ExpressionInfo(classOf[AsOfMark].getName, name)
-
-  private def builder(forward: Boolean): FunctionBuilder = { exprs =>
+  /** The builder of `asof_match` (`forward = false`) and `asof_next`. */
+  private[plans] def marker(forward: Boolean): FunctionBuilder = { exprs =>
     require(exprs.length == 2,
       s"asof_${if (forward) "next" else "match"}(leftTs, rightTs) takes 2 arguments")
     AsOfMark(exprs.head, exprs(1), forward)
-  }
-
-  /** (identifier, info, builder) triples for extension injection. */
-  private[plans] val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
-    Seq(
-      (FunctionIdentifier("asof_match"), mkInfo("asof_match"), builder(forward = false)),
-      (FunctionIdentifier("asof_next"), mkInfo("asof_next"), builder(forward = true)))
-
-  /** Enable the SQL surface on a live session: marker functions, the
-    * lowering rule, and the physical strategy (idempotent). */
-  def enable(spark: SparkSession): Unit = {
-    AsOfJoinNative.install(spark)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[AsOfJoinRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsOfJoinRule(spark)
-    functions.foreach { case (ident, info, b) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, b)
-    }
   }
 }

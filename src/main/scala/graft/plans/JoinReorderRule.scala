@@ -47,15 +47,16 @@ import graft.operators.StatsStore
   * rewritten first-join ACTUAL rows side by side from executed-plan
   * metrics.
   *
-  * Config: `spark.graft.joinReorder.rels` =
-  * `"name=statsPath;name2=statsPath2;…"`; unset disables the rule.
+  * The switches are conf keys: `spark.graft.joinReorder.rels` =
+  * `"name=statsPath;name2=statsPath2;…"` (rendered by
+  * [[JoinReorderRule.relsValue]]); unset disables the rule. The rule is
+  * in every graft session ([[GraftExtensions]]).
   * `spark.graft.joinReorder.maxBroadcastRows` additionally BROADCAST-
   * hints base rels whose exact stats row count fits the budget (never
   * an intermediate — those have only estimates).
   * Stats are read through a per-path memo (the optimizer may visit a
-  * plan many times per query): changing a stats store mid-session
-  * needs [[JoinReorderRule.enable]] re-called after
-  * [[JoinReorderRule.refresh]].
+  * plan many times per query): changing a plain stats store
+  * mid-session needs [[JoinReorderRule.refresh]].
   */
 case class JoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import JoinReorderRule._
@@ -81,7 +82,7 @@ case class JoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * [[graft.operators.VersionedStats]] table — the versioned form is
     * what makes the rule's stats LIVE: a transactional stats commit
     * bumps the table version, which changes the memo key, so the very
-    * next query plans against the new cardinalities with no re-enable
+    * next query plans against the new cardinalities with no refresh
     * (the k59 gate's flip). Each fold is ONE collect of the k stats
     * rows ([[StatsStore.summary]], driver-sized by design). The loads
     * themselves compile queries — the ThreadLocal re-entrancy latch
@@ -302,15 +303,9 @@ object JoinReorderRule {
       (kv.substring(0, i).trim, kv.substring(i + 1).trim)
     }
 
-  /** Turn the reorder on for a live session: rels as (name → statsPath). */
-  def enable(spark: SparkSession, rels: Seq[(String, String)]): Unit = {
-    spark.conf.set(relsKey, rels.map { case (n, p) => s"$n=$p" }.mkString(";"))
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[JoinReorderRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ JoinReorderRule(spark)
-  }
-
-  def disable(spark: SparkSession): Unit = spark.conf.unset(relsKey)
+  /** The [[relsKey]] value for rels as (name → statsPath). */
+  def relsValue(rels: Seq[(String, String)]): String =
+    rels.map { case (n, p) => s"$n=$p" }.mkString(";")
 
   /** Drop memoized stats (e.g. after a StatsStore rebuild mid-session). */
   def refresh(): Unit = statsCache.synchronized(statsCache.clear())

@@ -49,6 +49,11 @@ import graft.Tables
   * Output attribute ids, names, and types are preserved (re-summing a
   * decimal widens precision, so the result re-casts to the original
   * type), making the rewrite invisible to the parent plan.
+  *
+  * The switch is a conf key: the rule acts only while
+  * `spark.graft.mv.enabled` is `true` on the session. The rule is in
+  * every graft session ([[GraftExtensions]]); [[MvRewriteRule.register]]
+  * is the MV catalog, not a switch.
   */
 case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -173,14 +178,4 @@ object MvRewriteRule {
   def unregister(basePath: String): Unit =
     catalog.remove(new Path(basePath).toUri.getPath)
 
-  /** Turn the rewrite on for a live session (extraOptimizations path —
-    * [[GraftExtensions]] covers `spark.sql.extensions` injection). */
-  def enable(spark: SparkSession): Unit = {
-    spark.conf.set(enabledKey, "true")
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewriteRule(spark)
-  }
-
-  def disable(spark: SparkSession): Unit = spark.conf.unset(enabledKey)
 }

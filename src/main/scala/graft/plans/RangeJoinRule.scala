@@ -28,10 +28,11 @@ import org.apache.spark.sql.types.LongType
   * bounds on opposite sides, and NO cross-side equality conjunct
   * (if one exists Spark already plans a hash join — and the guard also
   * makes the rule a fixpoint: its own output contains an equality).
-  * Bin width comes from `spark.graft.rangeJoin.binWidth`; unset
-  * disables the rule. Registered via [[GraftExtensions]]
-  * (`injectOptimizerRule`) or [[RangeJoinRule.enable]] on a live
-  * session (`experimental.extraOptimizations`).
+  * The switch is a conf key: bin width comes from
+  * `spark.graft.rangeJoin.binWidth`, and unset disables the rule. The
+  * rule itself is in every graft session ([[GraftExtensions]]), so a
+  * query turns it on by setting the key on its session, e.g. through
+  * `graft.GraftSession.withConf`.
   */
 case class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -127,15 +128,4 @@ case class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
 object RangeJoinRule {
   val widthKey = "spark.graft.rangeJoin.binWidth"
-
-  /** Turn the rewrite on for a live session with the given bin width. */
-  def enable(spark: SparkSession, binWidth: Long): Unit = {
-    spark.conf.set(widthKey, binWidth.toString)
-    val rule = RangeJoinRule(spark)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[RangeJoinRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
-  }
-
-  def disable(spark: SparkSession): Unit = spark.conf.unset(widthKey)
 }

@@ -23,25 +23,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Tuning {
 
-  def withoutAqe[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prev)
-  }
+  def withoutAqe[A](s: SparkSession)(body: => A): A =
+    graft.GraftSession.withConf(s, "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Tiny-frame shuffle sizing: kilobyte-scale staged rounds get
     * nothing from cores x shuffle tasks — each extra task is pure
     * scheduler fee (AQE-off measurement, v22: 32-partition shuffles =
     * 2,102 tasks for the same 103 stages). The dial is the partition
-    * count a DEPLOYMENT would set for the operator's state size, same
+    * count a DEPLOYMENT would set for the operator's state size (2), same
     * contract as the streaming gates' withStatePartitions; results are
-    * partitioning-independent (windows are per-key, aggregates exact).
-    * GRAFT_TINY_PARTITIONS overrides for A/B on a given box. */
-  def withTinyShuffles[A](s: SparkSession, n: Int = 2)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("GRAFT_TINY_PARTITIONS", n.toString))
-    try withoutAqe(s)(body) finally s.conf.set(key, prev)
-  }
+    * partitioning-independent (windows are per-key, aggregates exact). */
+  def withTinyShuffles[A](s: SparkSession)(body: => A): A =
+    graft.GraftSession.withConf(s,
+      "spark.sql.shuffle.partitions" -> "2", "spark.sql.adaptive.enabled" -> "false")(body)
 }

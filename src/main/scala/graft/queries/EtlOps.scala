@@ -355,10 +355,10 @@ object EtlOps {
   // windows of users 0-9 (same construction j5 uses). Bin width 3600
   // puts each point in one hour bucket; intervals explode onto covered
   // hours. The oracle runs the naive BETWEEN join — the hash match
-  // proves the rule is physical-only. The rule stays enabled on the
-  // session afterwards: it is conf-gated and fires ONLY on non-equi
-  // long BETWEEN inner joins, and the full registry gate doubles as the
-  // no-leakage regression proof. ---
+  // proves the rule is physical-only. The width is set on the session
+  // the query is built on and stays there, since the returned frame is
+  // planned later; the registry run loop builds each query on its own
+  // `newSession()` child, so the switch never reaches the next query. ---
   val j8AutoRangeJoin = QueryDef.sql(
     "j8_auto_range_join",
     """WITH w AS (SELECT user_id AS wu, CAST(CAST(ts AS DATE) AS VARCHAR) AS wday,
@@ -370,7 +370,7 @@ object EtlOps {
       |      FROM events WHERE event_type = 'click') e
       |JOIN w ON e.p >= w.wlo AND e.p <= w.whi
       |GROUP BY wu, wday""".stripMargin) { (s, d) =>
-    graft.plans.RangeJoinRule.enable(s, 3600L)
+    s.conf.set(graft.plans.RangeJoinRule.widthKey, "3600")
     val ev = T.events(s, d)
     val pts = ev.filter(col("event_type") === "click")
       .select(unix_timestamp(col("ts")).as("p"))
@@ -1711,9 +1711,9 @@ object EtlOps {
         joins.minBy(_.depth).outputRows.getOrElse(-1L))
     }
     val (naiveFirst, naiveTotal) = firstJoinRows(chain)
-    JoinReorderRule.enable(s, Seq("L" -> lSt, "O" -> oSt, "C" -> cSt))
-    val (ruledFirst, ruledTotal) =
-      try firstJoinRows(chain) finally JoinReorderRule.disable(s)
+    val (ruledFirst, ruledTotal) = graft.GraftSession.withConf(s,
+      JoinReorderRule.relsKey -> JoinReorderRule.relsValue(Seq("L" -> lSt, "O" -> oSt, "C" -> cSt)))(
+      firstJoinRows(chain))
     // the rewrite must be result-identical AND actually cheaper — a
     // rule that "fired" without shrinking the first intermediate is a
     // regression this gate refuses to bless
@@ -1756,23 +1756,17 @@ object EtlOps {
       .join(T.parquet(s, oTbl), col("lok") === col("ok"))
       .join(T.parquet(s, cTbl), col("ck") === col("cck"))
       .select(col("lok"), col("ck"), col("cck"))
-    val prevThresh = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    JoinReorderRule.enable(s, Seq("L" -> lSt, "O" -> oSt, "C" -> cSt))
-    s.conf.set(JoinReorderRule.broadcastKey, custCount.toString)
-    val (ruledFirst, ruledTotal, nBhj) =
-      try {
-        val m = PlanMetrics.actualRows(chain)
-        val joins = m.filter(_.node.toLowerCase.contains("join"))
-        require(joins.size >= 2, s"expected a 2-join chain, got $m")
-        (joins.maxBy(_.depth).outputRows.getOrElse(-1L),
-          joins.minBy(_.depth).outputRows.getOrElse(-1L),
-          m.count(_.node.contains("BroadcastHashJoin")))
-      } finally {
-        s.conf.unset(JoinReorderRule.broadcastKey)
-        JoinReorderRule.disable(s)
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      }
+    val (ruledFirst, ruledTotal, nBhj) = graft.GraftSession.withConf(s,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        JoinReorderRule.relsKey -> JoinReorderRule.relsValue(Seq("L" -> lSt, "O" -> oSt, "C" -> cSt)),
+        JoinReorderRule.broadcastKey -> custCount.toString) {
+      val m = PlanMetrics.actualRows(chain)
+      val joins = m.filter(_.node.toLowerCase.contains("join"))
+      require(joins.size >= 2, s"expected a 2-join chain, got $m")
+      (joins.maxBy(_.depth).outputRows.getOrElse(-1L),
+        joins.minBy(_.depth).outputRows.getOrElse(-1L),
+        m.count(_.node.contains("BroadcastHashJoin")))
+    }
     // plan-shape gate: the dim fits the budget and is broadcast; the
     // fact tables exceed it and the fact join must NOT be broadcast
     require(nBhj == 1,
@@ -1853,22 +1847,21 @@ object EtlOps {
       (joins.maxBy(_.depth).outputRows.getOrElse(-1L),
         joins.minBy(_.depth).outputRows.getOrElse(-1L))
     }
-    JoinReorderRule.enable(s, Seq("F" -> fS, "A" -> aS, "B" -> bS))
-    val ((preFirst, preTot), (postFirst, postTot)) =
-      try {
-        val pre = firstAndTotal()
-        // ONE transactional commit: B grows by 2·|orders| rows of
-        // heavily-duplicated keys OUTSIDE F's domain — stats move, the
-        // actual match set does not
-        val delta = T.orders(s, d).select(col("o_orderkey"))
-          .withColumn("c", explode(array(lit(0L), lit(1L))))
-          .select((lit(10000) + col("o_orderkey") % 500).as("bk2"),
-            (lit(1000000L) + col("o_orderkey") * 2 + col("c")).as("bid"))
-          .withColumn("p", (col("bk2") % 4).cast("string"))
-        VersionedStats.commitWithStats(s, s"$root/t4", bT, bS, delta,
-          "p", Seq("bid"), Seq("bk2"))
-        (pre, firstAndTotal())
-      } finally JoinReorderRule.disable(s)
+    val ((preFirst, preTot), (postFirst, postTot)) = graft.GraftSession.withConf(s,
+        JoinReorderRule.relsKey -> JoinReorderRule.relsValue(Seq("F" -> fS, "A" -> aS, "B" -> bS))) {
+      val pre = firstAndTotal()
+      // ONE transactional commit: B grows by 2·|orders| rows of
+      // heavily-duplicated keys OUTSIDE F's domain — stats move, the
+      // actual match set does not
+      val delta = T.orders(s, d).select(col("o_orderkey"))
+        .withColumn("c", explode(array(lit(0L), lit(1L))))
+        .select((lit(10000) + col("o_orderkey") % 500).as("bk2"),
+          (lit(1000000L) + col("o_orderkey") * 2 + col("c")).as("bid"))
+        .withColumn("p", (col("bk2") % 4).cast("string"))
+      VersionedStats.commitWithStats(s, s"$root/t4", bT, bS, delta,
+        "p", Seq("bid"), Seq("bk2"))
+      (pre, firstAndTotal())
+    }
     // phase identities with ONE verification count instead of two
     // (round-11 autopsy: three full executed-plan/count jobs were this
     // gate's wall): post is proved F⋈A by count against the COMMITTED
@@ -2975,8 +2968,7 @@ object EtlOps {
         MvAgg("sum", "l_extendedprice", Some(dec), "sum_price"),
         MvAgg("min", "l_shipdate", None, "min_ship"),
         MvAgg("max", "l_shipdate", None, "max_ship"))))
-    MvRewriteRule.enable(s)
-    try {
+    try graft.GraftSession.withConf(s, MvRewriteRule.enabledKey -> "true") {
       val q = T.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
@@ -2990,10 +2982,7 @@ object EtlOps {
           q.queryExecution.optimizedPlan)
       q.write.parquet(outDir)
       T.parquet(s, outDir)
-    } finally {
-      MvRewriteRule.disable(s)
-      MvRewriteRule.unregister(base)
-    }
+    } finally MvRewriteRule.unregister(base)
   }
 
   // --- k24_full_merge: scoped FULL merge — `MERGE … WHEN NOT MATCHED

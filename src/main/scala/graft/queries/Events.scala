@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables => T}
+import graft.{GraftSession, QueryDef, Tables => T}
 import graft.plans.AsOfJoinNative
+import graft.plans.Tuning.withoutAqe
 
 /** Event-stream analytics in their batch form — the same logical
   * transforms graft.streaming.EventStreams runs incrementally with
@@ -14,18 +15,6 @@ import graft.plans.AsOfJoinNative
   */
 object Events {
 
-  /** Run a streaming drain with state-volume-sized shuffle parallelism.
-    *
-    * Every stateful streaming operator allocates one state store PER
-    * shuffle partition PER operator PER micro-batch, and each store
-    * commits delta files to the checkpoint — so a stream-stream join at
-    * 32 partitions pays ~128 file-commit round-trips per batch even when
-    * the state is kilobytes. State partitioning is a deployment config
-    * (fixed for a checkpoint's lifetime), not a topology property: at
-    * 100 TB you size it to state volume before first start, exactly as
-    * done here for the fixture's volume. The operator graph — watermarks,
-    * join conditions, sink semantics — is unchanged by this setting.
-    */
   /** Shared 3-slice event feed for the transactional-sink gates
     * (e42/e43/e45/e46/e47): each used to land its own projection of
     * the same filtered events as a private 3-file feed — one full
@@ -71,27 +60,26 @@ object Events {
     (feed, obs.get("mx").asInstanceOf[java.sql.Timestamp])
   }
 
-  private def withStatePartitions[A](s: org.apache.spark.sql.SparkSession, n: Int)(
-      body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    // deployment dial (state partitioning is per-checkpoint config, not
-    // topology): GRAFT_STATE_PARTITIONS overrides every drain's default
-    // for A/B-ing state-store commit overhead on a given box
-    s.conf.set(key, sys.env.getOrElse("GRAFT_STATE_PARTITIONS", n.toString))
-    try body finally s.conf.set(key, prev)
-  }
+  /** Run a streaming drain with state-volume-sized shuffle parallelism.
+    *
+    * Every stateful streaming operator allocates one state store PER
+    * shuffle partition PER operator PER micro-batch, and each store
+    * commits delta files to the checkpoint — so a stream-stream join at
+    * 32 partitions pays ~128 file-commit round-trips per batch even when
+    * the state is kilobytes. State partitioning is a deployment config
+    * (fixed for a checkpoint's lifetime), not a topology property: at
+    * 100 TB you size it to state volume before first start, exactly as
+    * done here for the fixture's volume (4). The operator graph —
+    * watermarks, join conditions, sink semantics — is unchanged by this
+    * setting.
+    */
+  private def withStatePartitions[A](s: org.apache.spark.sql.SparkSession)(body: => A): A =
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "4")(body)
 
-  /** Run a transactional-sink drain with AQE off. The txn-sink gates'
-    * micro-batches are dozens of TINY jobs (staging writes, k-row index
-    * folds, manifest probes); AQE contributes nothing to such plans —
-    * every shuffle is already one wave — but it MATERIALIZES each
-    * shuffle stage as its own job, and on these gates the wall is
-    * job-count x scheduler gap, not data. Deployment-shaped dial, like
-    * state partitioning: a real pipeline sets it per-stream, the
-    * operator graph and committed state are unchanged. */
-  private def withoutAqe[A](s: org.apache.spark.sql.SparkSession)(body: => A): A =
-    graft.plans.Tuning.withoutAqe(s)(body)
+  /** The RocksDB state-store provider, for the transformWithState gates. */
+  private def withRocksDb[A](s: org.apache.spark.sql.SparkSession)(body: => A): A =
+    GraftSession.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   // --- e1_windowed_agg: tumbling-window (hourly) aggregation — the batch
   // equivalent of the streaming windowed count (SURVEY §2.7) ---
@@ -282,7 +270,6 @@ object Events {
       |SELECT p.purchase_id, p.user_id, s.signup_id
       |FROM p ASOF LEFT JOIN s ON p.user_id = s.user_id AND p.pts >= s.sts""".stripMargin) {
     (sp, d) =>
-      graft.plans.AsOfSqlSurface.enable(sp)
       T.events(sp, d).createOrReplaceTempView("events")
       sp.sql(e4dSparkSql)
   }
@@ -522,7 +509,7 @@ object Events {
     """SELECT date_trunc('day', ts) AS window_start, event_type, count(*) AS n
       |FROM events
       |GROUP BY date_trunc('day', ts), event_type""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e11-stream")
     val feed = s"$root/feed"; val state = s"$root/state"; val ckpt = s"$root/ckpt"
     T.events(s, d).select(col("ts"), col("event_type")).write.parquet(feed)
@@ -572,7 +559,7 @@ object Events {
       |FROM v JOIN p ON v.user_id = p.user_id
       |  AND epoch_ns(p.ts) // 1000 >= epoch_ns(v.ts) // 1000
       |  AND epoch_ns(p.ts) // 1000 < epoch_ns(v.ts) // 1000 + 21600000000""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e12-stream")
     val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     T.events(s, d)
@@ -709,7 +696,7 @@ object Events {
     "e15_stream_dedup",
     """SELECT event_id, user_id, event_type, date_trunc('second', ts) AS tss
       |FROM events""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e15-stream")
     val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val ev = T.events(s, d)
@@ -841,7 +828,7 @@ object Events {
       |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS total
       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e18-ivm")
     val feed = s"$root/feed"; val baseSeg = s"$root/view_base"
     val incSeg = s"$root/view_inc"; val ckpt = s"$root/ckpt"
@@ -908,7 +895,7 @@ object Events {
       |FROM s GROUP BY user_id, sess_no""".stripMargin) { (s, d) =>
     import s.implicits._
     import graft.streaming.EventStreams
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e19-sess")
     val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val ev = T.events(s, d).select(col("event_id"),
@@ -967,7 +954,7 @@ object Events {
       |    AND epoch_ns(date_trunc('day', e.ts) + INTERVAL 1 DAY) // 1000 > wm.w)
       |SELECT date_trunc('day', ts) AS window_start, event_type, count(*) AS n
       |FROM keep GROUP BY window_start, event_type""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e20-late")
     val feed = s"$root/feed"; val state = s"$root/state"; val ckpt = s"$root/ckpt"
     val ev = T.events(s, d).select(col("event_id"), col("ts"), col("event_type"))
@@ -1023,7 +1010,7 @@ object Events {
       |FROM v LEFT JOIN p ON v.user_id = p.user_id
       |  AND epoch_ns(p.ts) // 1000 >= epoch_ns(v.ts) // 1000
       |  AND epoch_ns(p.ts) // 1000 < epoch_ns(v.ts) // 1000 + 21600000000""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e21-outer")
     val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val (feed, maxTs) = clickPurchaseFeed(s, d, root)
@@ -1103,7 +1090,7 @@ object Events {
       |FROM v FULL JOIN p ON v.user_id = p.user_id
       |  AND epoch_ns(p.ts) // 1000 >= epoch_ns(v.ts) // 1000
       |  AND epoch_ns(p.ts) // 1000 < epoch_ns(v.ts) // 1000 + 21600000000""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e29-full")
     val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val (feed, maxTs) = clickPurchaseFeed(s, d, root)
@@ -1190,12 +1177,7 @@ object Events {
       |FROM c WHERE cum // 10000 > (cum - cents) // 10000""".stripMargin) { (s, d) =>
     import s.implicits._
     import graft.streaming.Milestones
-    withStatePartitions(s, 4) {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.get(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStatePartitions(s) { withRocksDb(s) {
       val root = graft.Scratch.dir("e22-twstate")
       val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
       T.events(s, d).filter(col("event_type") === "purchase")
@@ -1221,8 +1203,7 @@ object Events {
       q.awaitTermination()
       T.parquet(s, out)
         .select(col("user_id"), col("event_id"), col("cum_cents"), col("milestone"))
-    } finally s.conf.set(providerKey, prevProvider)
-    }
+    } }
   }
 
   // --- e23_state_map: MapState on the arbitrary-state v2 API — per
@@ -1244,12 +1225,7 @@ object Events {
       |FROM n WHERE (n & (n - 1)) = 0""".stripMargin) { (s, d) =>
     import s.implicits._
     import graft.streaming.Milestones
-    withStatePartitions(s, 4) {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.get(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStatePartitions(s) { withRocksDb(s) {
       val root = graft.Scratch.dir("e23-twstate")
       val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
       T.events(s, d)
@@ -1274,8 +1250,7 @@ object Events {
       q.awaitTermination()
       T.parquet(s, out)
         .select(col("user_id"), col("event_id"), col("event_type"), col("n"))
-    } finally s.conf.set(providerKey, prevProvider)
-    }
+    } }
   }
 
   // --- e24_state_list: ListState on the same API — per user the last
@@ -1299,12 +1274,7 @@ object Events {
       |FROM p""".stripMargin) { (s, d) =>
     import s.implicits._
     import graft.streaming.Milestones
-    withStatePartitions(s, 4) {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.get(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStatePartitions(s) { withRocksDb(s) {
       val root = graft.Scratch.dir("e24-twstate")
       val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
       T.events(s, d).filter(col("event_type") === "purchase")
@@ -1331,8 +1301,7 @@ object Events {
       T.parquet(s, out)
         .select(col("user_id"), col("event_id"), col("cents"),
           col("sum3"), col("n3"))
-    } finally s.conf.set(providerKey, prevProvider)
-    }
+    } }
   }
 
   // --- e25_chained_agg: MULTIPLE STATEFUL OPERATORS in one streaming
@@ -1367,7 +1336,7 @@ object Events {
       |SELECT (day_us // 604800000000) * 604800000000 AS week_us,
       |  CAST(sum(n) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS cents
       |FROM d GROUP BY 1""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e25-chained")
     val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val ev = T.events(s, d)
@@ -1462,7 +1431,7 @@ object Events {
       |SELECT user_id, min(us) AS start_us, max(us) + 1800000000 AS end_us,
       |  CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS cents
       |FROM i GROUP BY user_id, island""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e26-session")
     val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val ev = T.events(s, d).filter(col("event_type") === "purchase")
@@ -1647,7 +1616,7 @@ object Events {
       |  CAST(CAST(e.value AS DECIMAL(10,2)) AS DOUBLE) AS amount
       |FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id
       |WHERE e.event_type = 'purchase'""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e31-static")
     val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     T.events(s, d).filter(col("event_type") === "purchase")
@@ -1697,7 +1666,7 @@ object Events {
       |    AND epoch_ns(p.ts) // 1000 >= epoch_ns(v.ts) // 1000
       |    AND epoch_ns(p.ts) // 1000 < epoch_ns(v.ts) // 1000 + 21600000000)""".stripMargin) {
     (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     val root = graft.Scratch.dir("e32-semi")
     val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     T.events(s, d)
@@ -1753,7 +1722,7 @@ object Events {
     """SELECT event_id, user_id,
       |  CAST(CAST(value AS DECIMAL(10,2)) AS DOUBLE) AS amount
       |FROM events WHERE event_type = 'purchase'""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     import graft.operators.Versioned
     val root = graft.Scratch.dir("e33-vsink")
     val feed = s"$root/feed"; val tbl = s"$root/table"; val ckpt = s"$root/ckpt"
@@ -1812,7 +1781,7 @@ object Events {
       |SELECT st AS o_orderstatus, CAST(count(*) AS BIGINT) AS n,
       |  CAST(sum(p) AS DOUBLE) AS total
       |FROM s3 GROUP BY st""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     import graft.operators.Versioned
     val root = graft.Scratch.dir("e34-follow")
     val tbl = s"$root/orders_v"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
@@ -1884,7 +1853,7 @@ object Events {
        |SELECT base.part, base."rows", base.min_v, base.max_v, base.nulls_v,
        |  CAST(per.nz AS BIGINT) AS nz, per.est AS ndv_est
        |FROM base JOIN per ON per.part = base.part""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{StatsStore, Upsert}
     val root = graft.Scratch.dir("e40-stats")
     val feed = s"$root/feed"; val tbl = s"$root/table"
@@ -1962,7 +1931,7 @@ object Events {
       |  CAST(count(DISTINCT hash) AS BIGINT) AS n_distinct,
       |  min(CASE WHEN f = 0 THEN hash END) AS hash0
       |FROM h GROUP BY id""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     import graft.multimodal.Multimodal
     val root = graft.Scratch.dir("e36-media")
     val feed = s"$root/feed"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
@@ -2023,7 +1992,7 @@ object Events {
        |      FROM events GROUP BY event_type)
        |SELECT e.event_type, e.nz, e.est, x.exact_n
        |FROM e JOIN x USING (event_type)""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     import graft.operators.{HllSketch, ReplayGuard}
     val root = graft.Scratch.dir("e37-hll")
     val feed = s"$root/feed"; val regs = s"$root/regs"; val ckpt = s"$root/ckpt"
@@ -2075,7 +2044,7 @@ object Events {
        |top AS (SELECT user_id, exact_n FROM cnt ORDER BY exact_n DESC, user_id LIMIT 20)
        |SELECT top.user_id, top.exact_n, est.est_n
        |FROM top JOIN est ON est.user_id = top.user_id""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     import graft.operators.{CountMin, ReplayGuard}
     val root = graft.Scratch.dir("e39-cms")
     val feed = s"$root/feed"; val cms = s"$root/cms"; val ckpt = s"$root/ckpt"
@@ -2156,7 +2125,7 @@ object Events {
          |  abs(exact_rank - t) <= ((4 * n) // $e41K + ${2 * e41B + 2}) AS within_bound
          |FROM rk""".stripMargin
     }) { (s, d) =>
-    withStatePartitions(s, 4) {
+    withStatePartitions(s) {
     import graft.operators.{QuantileSketch, ReplayGuard}
     val root = graft.Scratch.dir("e41-qsk")
     val feed = s"$root/feed"; val summ = s"$root/summ"; val ckpt = s"$root/ckpt"
@@ -2222,7 +2191,7 @@ object Events {
       |SELECT 'ledger' AS src, event_type, n, total, TRUE AS versions_in_step FROM s
       |UNION ALL
       |SELECT 'summary', event_type, n, total, TRUE FROM s""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{Txn, Versioned}
     val root = graft.Scratch.dir("e42-txnsink")
     val ckpt = s"$root/ckpt"
@@ -2328,7 +2297,7 @@ object Events {
       |  CAST(sum(amt) AS DOUBLE) AS total, TRUE AS versions_lockstep
       |FROM base b JOIN lo ON lo.user_id = b.user_id
       |GROUP BY b.user_id""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{Versioned, VersionedBloom}
     val root = graft.Scratch.dir("e43-idxsink")
     val ckpt = s"$root/ckpt"
@@ -2410,7 +2379,7 @@ object Events {
       |SELECT strftime(d, '%Y-%m-%d') AS day, CAST(count(*) AS BIGINT) AS n,
       |  CAST(sum(amt) AS DOUBLE) AS total, TRUE AS pruned
       |FROM r GROUP BY day""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{Txn, Versioned, VersionedZone}
     val root = graft.Scratch.dir("e45-zonesink")
     val ckpt = s"$root/ckpt"
@@ -2516,7 +2485,7 @@ object Events {
       |SELECT strftime(d, '%Y-%m-%d') AS day, CAST(count(*) AS BIGINT) AS n,
       |  CAST(sum(amt) AS DOUBLE) AS total, TRUE AS compacted
       |FROM r GROUP BY day""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{Txn, Versioned, VersionedZone}
     val root = graft.Scratch.dir("e47-streamcompact")
     val ckpt = s"$root/ckpt"
@@ -2644,7 +2613,7 @@ object Events {
        |  min(tk.doc_id) AS min_doc, TRUE AS indexed
        |FROM probes p LEFT JOIN toks tk ON list_contains(tk.t, p.probe)
        |GROUP BY p.probe""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{Txn, Versioned, VersionedText}
     val root = graft.Scratch.dir("e48-textsink")
     val feed = s"$root/feed"; val ckpt = s"$root/ckpt"
@@ -2754,7 +2723,7 @@ object Events {
       |SELECT r.event_id, r.user_id, CAST(r.amt AS DOUBLE) AS amt,
       |  TRUE AS pruned
       |FROM r0 r JOIN probes p ON r.event_id = p.event_id""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{Txn, Versioned, VersionedBitmap, VersionedBloom, VersionedZone}
     val root = graft.Scratch.dir("e49-tripleidx")
     val ckpt = s"$root/ckpt"
@@ -2912,7 +2881,7 @@ object Events {
        |  t.n AS final_rows, ee.est AS ndv_events_est
        |FROM (SELECT 1 AS batch_seq UNION ALL SELECT 2 UNION ALL SELECT 3) s,
        |  t, ee""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{StatsStore, Txn, Versioned, VersionedStats}
     val root = graft.Scratch.dir("e46-livestats")
     val feed = sharedEventFeed(s, d); val ckpt = s"$root/ckpt"
@@ -3027,7 +2996,7 @@ object Events {
       |  coalesce(agg.total, CAST(0 AS DOUBLE)) AS total,
       |  p.user_id % 7 = 0 AS forgotten, TRUE AS versions_lockstep
       |FROM probes p LEFT JOIN agg ON agg.user_id = p.user_id""".stripMargin) { (s, d) =>
-    withStatePartitions(s, 4) { withoutAqe(s) {
+    withStatePartitions(s) { withoutAqe(s) {
     import graft.operators.{Versioned, VersionedBloom}
     val root = graft.Scratch.dir("e44-forget")
     val feed = s"$root/feed"; val ckpt = s"$root/ckpt"

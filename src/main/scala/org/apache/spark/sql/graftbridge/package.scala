@@ -84,6 +84,12 @@ package object graftbridge {
       case _ =>
     }
 
+  /** Runs `body` with `spark` as the thread's active session, so
+    * `SparkSession.active` and `SQLConf.get` see it, then restores the
+    * previous one (`withActive` is `private[sql]`). */
+  def withActive[A](spark: SparkSession)(body: => A): A =
+    spark.asInstanceOf[classic.SparkSession].withActive(body)
+
   /** Block until every listener (the status store included) has seen
     * every event posted so far — `listenerBus` is `private[spark]`.
     * Listener counters read after this are settled, with no sleep. */

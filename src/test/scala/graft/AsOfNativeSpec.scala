@@ -184,7 +184,7 @@ class AsOfNativeSpec extends SparkSpec {
     val left = Seq((1L, ts(1), "x")).toDF("k", "lts", "v")
     val right = Seq((1L, ts(0), "y")).toDF("rk", "rts", "w")
     val df = AsOfJoinNative.asofJoin(left, right, "k", "rk", "lts", "rts")
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = uncut(df.queryExecution.executedPlan.toString)
     assert(plan.contains("AsOfJoin"), s"custom exec missing:\n$plan")
     assert("Exchange hashpartitioning".r.findAllIn(plan).size === 2)
     assert(plan.contains("Sort "), "children must be sorted by (key, ts)")

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
-import graft.plans.AsOfSqlSurface
 
 /** SQL-text surface for the native as-of join: the asof_match/asof_next
   * markers + lowering rule must plan onto AsOfJoinExec, agree with the
@@ -14,7 +13,6 @@ class AsOfSqlSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def setup(): Unit = {
-    AsOfSqlSurface.enable(spark)
     Seq(
       (1L, ts("2024-01-01 10:00:00"), "p1"),
       (1L, ts("2024-01-01 12:00:00"), "p2"),
@@ -35,7 +33,7 @@ class AsOfSqlSpec extends SparkSpec {
         |  ON p.uid = s.suid AND asof_match(p.pts, s.sts)""".stripMargin)
     // the physical plan must BE the native operator, not a generic join
     // (string check: AQE wraps the plan, hiding the exec from collect)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = uncut(df.queryExecution.executedPlan.toString)
     assert(plan.contains("AsOfJoin"), s"SQL text did not lower onto AsOfJoinExec:\n$plan")
     val got = df.as[(String, Long, Option[String])].collect().toSet
     assert(got === Set(

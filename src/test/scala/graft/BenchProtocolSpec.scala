@@ -73,7 +73,7 @@ class BenchProtocolSpec extends SparkSpec {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
     RegistryRun.run(spark, sfDir,
       Seq(query("a3_nation_revenue"), SetConf(key, "on"), query("a1_pricing_summary"))) {
-      (_, _) => seen += spark.conf.getOption(key)
+      (_, df) => seen += df.sparkSession.conf.getOption(key)
     }
     assert(seen == Seq(None, Some("on")))
     assert(spark.conf.getOption(key).isEmpty)

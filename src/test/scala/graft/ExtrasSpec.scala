@@ -118,7 +118,6 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("graft_dot is callable from SQL text") {
-    GraftSession.registerFunctions(spark)
     graft.Tables.embeddings(spark, sfDir).createOrReplaceTempView("emb_sql")
     val row = spark.sql(
       "SELECT vec_id, graft_dot(embedding, embedding) AS n2 FROM emb_sql ORDER BY vec_id LIMIT 1")
@@ -127,7 +126,6 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("graft_dot implicit-casts array<double> and skips null elements") {
-    GraftSession.registerFunctions(spark)
     // array<double> input: ImplicitCastInputTypes inserts array<float>
     // cast — previously doubles were silently read as floats (garbage)
     val d = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
@@ -141,7 +139,6 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("kernel functions are callable from SQL text") {
-    GraftSession.registerFunctions(spark)
     val r = spark.sql(
       """SELECT graft_dot_q(array(2L, 3L), array(10L, 100L)) AS dq,
         |  graft_l2_q(array(2L, 3L), array(10L, 100L)) AS l2,

@@ -55,10 +55,8 @@ class JoinReorderRuleSpec extends SparkSpec {
     joins.maxBy(_.depth).outputRows.getOrElse(-1L)
   }
 
-  private def withRule[T](rels: Seq[(String, String)])(body: => T): T = {
-    JoinReorderRule.enable(spark, rels)
-    try body finally JoinReorderRule.disable(spark)
-  }
+  private def withRule[T](rels: Seq[(String, String)])(body: => T): T =
+    GraftSession.withConf(spark, JoinReorderRule.relsKey -> JoinReorderRule.relsValue(rels))(body)
 
   test("reorders the chain: selective join first, results identical") {
     val (r, rels) = fixture()
@@ -142,29 +140,25 @@ class JoinReorderRuleSpec extends SparkSpec {
 
   test("maxBroadcastRows hints exactly the fitting base rels") {
     val (r, rels) = fixture()
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // the 100 TB posture: size-estimate broadcasting disabled — only
     // the rule's exact-stats hints may plan a broadcast
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try withRule(rels) {
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { withRule(rels) {
       val expected = naiveChain(r).collect().map(_.toSeq).toSet
       // A (2000 rows) and B (50) fit a 2500-row budget; F (20000) refused
-      spark.conf.set(JoinReorderRule.broadcastKey, "2500")
-      try {
+      GraftSession.withConf(spark, JoinReorderRule.broadcastKey -> "2500") {
         val m = PlanMetrics.actualRows(naiveChain(r))
         assert(m.count(_.node.contains("BroadcastHashJoin")) === 2,
           s"both fitting dims must broadcast, got ${m.map(_.node)}")
-      } finally spark.conf.unset(JoinReorderRule.broadcastKey)
+      }
       // a budget below every rel: no hints, no broadcast — the refusal
       // (k50's discipline) must win over "it would be faster"
-      spark.conf.set(JoinReorderRule.broadcastKey, "10")
-      try {
+      GraftSession.withConf(spark, JoinReorderRule.broadcastKey -> "10") {
         val m = PlanMetrics.actualRows(naiveChain(r))
         assert(m.count(_.node.contains("BroadcastHashJoin")) === 0,
           s"nothing fits a 10-row budget, got ${m.map(_.node)}")
         assert(naiveChain(r).collect().map(_.toSeq).toSet === expected)
-      } finally spark.conf.unset(JoinReorderRule.broadcastKey)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      }
+    } }
   }
 
   test("5-relation star: greedy order holds at depth, all conjuncts kept") {
@@ -208,39 +202,6 @@ class JoinReorderRuleSpec extends SparkSpec {
       assert(joins.forall(_ <= 1000L),
         s"intermediates must never re-explode, got $joins")
       assert(chain.count() === expected, "reorder is result-identical")
-    }
-  }
-
-  test("GraftExtensions registration injects the rule end-to-end") {
-    import org.apache.spark.sql.SparkSession
-    val (r, rels) = fixture()
-    // withExtensions invokes the same GraftExtensions.apply the
-    // spark.sql.extensions config path loads reflectively; getOrCreate
-    // builds a NEW session (reusing the context) only when no default
-    // session is registered — clear, build, then restore the spec one.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-      s2.conf.set(JoinReorderRule.relsKey,
-        rels.map { case (n, p) => s"$n=$p" }.mkString(";"))
-      try {
-        val f = s2.read.parquet(s"$r/f")
-        val a = s2.read.parquet(s"$r/a")
-        val b = s2.read.parquet(s"$r/b")
-        val j = f.join(a, col("k1") === col("ak1"))
-          .join(b, col("k2") === col("bk2"))
-          .select(col("k1"), col("atag"), col("btag"))
-        assert(firstJoinRows(j) === 1000L,
-          "config-injected rule must reorder the chain")
-      } finally s2.conf.unset(JoinReorderRule.relsKey)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 }

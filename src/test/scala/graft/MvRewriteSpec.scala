@@ -34,9 +34,8 @@ class MvRewriteSpec extends SparkSpec {
       Seq(MvAgg("sum", "v", Some(dec), "sum_v"),
         MvAgg("min", "k", None, "min_k"),
         MvAgg("max", "k", None, "max_k"))))
-    MvRewriteRule.enable(spark)
-    try body(base, mv)
-    finally { MvRewriteRule.disable(spark); MvRewriteRule.unregister(base) }
+    try GraftSession.withConf(spark, MvRewriteRule.enabledKey -> "true")(body(base, mv))
+    finally MvRewriteRule.unregister(base)
   }
 
   private def q(base: String): DataFrame =
@@ -46,8 +45,13 @@ class MvRewriteSpec extends SparkSpec {
         sum(col("v").cast(dec)).cast("double").as("total"),
         min(col("k")).as("mn"), max(col("k")).as("mx"))
 
+  /** Rule off for the plans `body` renders: the switch is read when a
+    * frame is planned. */
+  private def ruleOff[A](body: => A): A =
+    GraftSession.withConf(spark, MvRewriteRule.enabledKey -> "false")(body)
+
   private def scansMv(df: DataFrame, mv: String): Boolean = {
-    val p = df.queryExecution.executedPlan.toString
+    val p = uncut(df.queryExecution.executedPlan.toString)
     p.contains(mv) && !p.contains("/base")
   }
 
@@ -55,10 +59,8 @@ class MvRewriteSpec extends SparkSpec {
     withMv { (base, mv) =>
       val withRule = q(base)
       assert(scansMv(withRule, mv), "rewrite must fire on the answerable shape")
-      MvRewriteRule.disable(spark)
       val without = q(base)
-      assert(!scansMv(without, mv))
-      MvRewriteRule.enable(spark)
+      assert(ruleOff(!scansMv(without, mv)))
       assert(withRule.schema === without.schema,
         "the swap must preserve names, types, and nullability-relevant structure")
       assert(withRule.collect().toSet === without.collect().toSet)
@@ -94,7 +96,7 @@ class MvRewriteSpec extends SparkSpec {
         // grouping by a column outside the MV key set
         r.groupBy(col("k")).agg(count(lit(1)).as("n")))
       cases.foreach { df =>
-        assert(!df.queryExecution.executedPlan.toString.contains(mv),
+        assert(!uncut(df.queryExecution.executedPlan.toString).contains(mv),
           s"rule must not fire on:\n${df.queryExecution.logical}")
         df.collect() // and the un-rewritten query still runs
       }
@@ -103,48 +105,9 @@ class MvRewriteSpec extends SparkSpec {
 
   test("disabled conf or unregistered base leaves the plan untouched") {
     withMv { (base, mv) =>
-      MvRewriteRule.disable(spark)
-      assert(!scansMv(q(base), mv))
-      MvRewriteRule.enable(spark)
+      assert(ruleOff(!scansMv(q(base), mv)))
       MvRewriteRule.unregister(base)
       assert(!scansMv(q(base), mv))
-    }
-  }
-
-  test("GraftExtensions registration injects the rule end-to-end") {
-    import org.apache.spark.sql.SparkSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-      val root = java.nio.file.Files.createTempDirectory("mv-ext").toString
-      val base = s"$root/base"; val mv = s"$root/mv"
-      import s2.implicits._
-      Seq(("a", 1L), ("a", 2L), ("b", 3L)).toDF("g", "k").write.parquet(base)
-      s2.read.parquet(base).groupBy(col("g"))
-        .agg(count(lit(1)).as("cnt"), max(col("k")).as("max_k"))
-        .write.parquet(mv)
-      MvRewriteRule.register(base, MvDef(mv, Seq("g"), Some("cnt"),
-        Seq(MvAgg("max", "k", None, "max_k"))))
-      s2.conf.set(MvRewriteRule.enabledKey, "true")
-      try {
-        val df = s2.read.parquet(base).groupBy(col("g"))
-          .agg(count(lit(1)).as("n"), max(col("k")).as("mx"))
-        assert(df.queryExecution.executedPlan.toString.contains(mv),
-          "config-injected rule must fire")
-        assert(df.as[(String, Long, Long)].collect().toSet ===
-          Set(("a", 2L, 2L), ("b", 1L, 3L)))
-      } finally {
-        s2.conf.unset(MvRewriteRule.enabledKey)
-        MvRewriteRule.unregister(base)
-      }
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 }

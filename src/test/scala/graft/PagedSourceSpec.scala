@@ -51,7 +51,7 @@ class PagedSourceSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions === 1)
     assert(df.select("id").orderBy("id").collect().map(_.getString(0)).toSeq === Seq("p3", "p4"))
     // and the pushed bounds are visible in the scan description
-    val scanDesc = df.queryExecution.executedPlan.toString
+    val scanDesc = uncut(df.queryExecution.executedPlan.toString)
     assert(scanDesc.contains("PagedJsonScan") || scanDesc.contains("BatchScan"))
   }
 
@@ -64,7 +64,7 @@ class PagedSourceSpec extends SparkSpec {
 
   test("column pruning reaches the reader schema") {
     val df = read().select("id")
-    val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
+    val scan = uncut(df.queryExecution.executedPlan.collectLeaves().head.toString)
     assert(df.columns.toSeq === Seq("id"))
     assert(df.count() === 5)
   }

@@ -13,9 +13,15 @@ import graft.plans.AsOfJoinExec
   */
 class PlanSpec extends SparkSpec {
 
+  /** `name` built as the registry run loop builds it: on its own child
+    * session, active while it builds. */
+  private def frameOf(name: String): DataFrame = {
+    val child = RegistryRun.querySession(spark, Nil)
+    org.apache.spark.sql.graftbridge.withActive(child)(SparkEntry.queries(name)(child, sfDir))
+  }
+
   private def planOf(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution
-      .explainString(FormattedMode)
+    uncut(frameOf(name).queryExecution.explainString(FormattedMode))
 
   test("a12: filters and projection reach the parquet scan") {
     val p = planOf("a12_scan_filter_project")
@@ -95,7 +101,7 @@ class PlanSpec extends SparkSpec {
 
   test("q18: lineitem pre-aggregates below the joins (no aggregate above a join)") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    val plan = SparkEntry.queries("q18_large_volume")(spark, sfDir)
+    val plan = frameOf("q18_large_volume")
       .queryExecution.optimizedPlan
     val aggAboveJoin = plan.collect {
       case a: Aggregate if a.find(_.isInstanceOf[Join]).isDefined => a
@@ -154,7 +160,7 @@ class PlanSpec extends SparkSpec {
 
   test("q10: revenue pre-aggregates by key below the customer join (no strings in the agg)") {
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    val plan = SparkEntry.queries("q10_returned_items")(spark, sfDir)
+    val plan = frameOf("q10_returned_items")
       .queryExecution.optimizedPlan
     val aggsWithCustomerAttrs = plan.collect {
       case a: Aggregate if a.references.exists(r =>
@@ -220,7 +226,7 @@ class PlanSpec extends SparkSpec {
 
   test("k9: the snapshot diff is exactly one co-partitioned join, nothing else moves") {
     import org.apache.spark.sql.catalyst.plans.logical.Join
-    val plan = SparkEntry.queries("k9_snapshot_diff")(spark, sfDir)
+    val plan = frameOf("k9_snapshot_diff")
       .queryExecution.optimizedPlan
     assert(plan.collect { case j: Join => j }.size === 1,
       s"k9 must be one keyed full-outer join:\n$plan")
@@ -394,7 +400,7 @@ class PlanSpec extends SparkSpec {
     }
     Seq("e4_asof_join" -> 1, "e4e_asof_tolerance" -> 1, "j11_pit_features" -> 2).foreach {
       case (q, joins) =>
-        val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
+        val plan = frameOf(q).queryExecution.executedPlan
         val nodes = spine(plan)
         assert(nodes.count(_.isInstanceOf[AsOfJoinExec]) === joins, s"$q:\n$plan")
         assert(!nodes.exists(n => n.isInstanceOf[UnionExec] || n.isInstanceOf[WindowExec]),

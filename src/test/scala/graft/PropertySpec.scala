@@ -214,11 +214,10 @@ class PropertySpec extends SparkSpec {
       val width = Seq(7L, 100L, 1024L)(seed.toInt % 3)
       val want = pts.join(ivs, col("v") >= col("lo") && col("v") <= col("hi"))
         .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      RangeJoinRule.enable(spark, width)
-      val got = try {
+      val got = GraftSession.withConf(spark, RangeJoinRule.widthKey -> width.toString) {
         pts.join(ivs, col("v") >= col("lo") && col("v") <= col("hi"))
           .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      } finally RangeJoinRule.disable(spark)
+      }
       assert(got.toSeq === want.toSeq,
         s"seed=$seed width=$width: rule-rewritten join diverges from naive join")
     }

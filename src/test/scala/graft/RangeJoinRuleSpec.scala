@@ -22,15 +22,13 @@ class RangeJoinRuleSpec extends SparkSpec {
     ("a", "lowneg"), ("b", "zero"), ("c", "zero"),
     ("d", "mid"), ("e", "mid"))
 
-  private def withRule[A](width: Long)(f: => A): A = {
-    RangeJoinRule.enable(spark, width)
-    try f finally RangeJoinRule.disable(spark)
-  }
+  private def withRule[A](width: Long)(f: => A): A =
+    GraftSession.withConf(spark, RangeJoinRule.widthKey -> width.toString)(f)
 
   test("BETWEEN join rewrites to a hash equi-join with identical results") {
     withRule(10L) {
       val j = points.join(intervals, $"p" >= $"lo" && $"p" <= $"hi")
-      val plan = j.queryExecution.executedPlan.toString
+      val plan = uncut(j.queryExecution.executedPlan.toString)
       assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
         s"rule must kill the nested loop:\n$plan")
       assert(plan.contains("HashJoin"), s"expected a hash join:\n$plan")
@@ -54,7 +52,7 @@ class RangeJoinRuleSpec extends SparkSpec {
   test("flipped comparisons and extra conjuncts still rewrite; residuals kept") {
     withRule(10L) {
       val j = points.join(intervals, $"lo" <= $"p" && $"hi" >= $"p" && $"nm" =!= "mid")
-      val plan = j.queryExecution.executedPlan.toString
+      val plan = uncut(j.queryExecution.executedPlan.toString)
       assert(!plan.contains("NestedLoop"), s"flipped form must rewrite:\n$plan")
       assert(j.select($"tag", $"nm").as[(String, String)].collect().toSet ===
         expected.filterNot(_._2 == "mid"))
@@ -68,39 +66,8 @@ class RangeJoinRuleSpec extends SparkSpec {
       val j = l.join(r, $"k" === $"rk" && $"p" >= $"lo" && $"p" <= $"hi")
       // the equi key already makes this a hash join; rule must not explode
       // the intervals a second time (exactly one join, no Generate)
-      assert(!j.queryExecution.optimizedPlan.toString.contains("__graft_bin"))
+      assert(!uncut(j.queryExecution.optimizedPlan.toString).contains("__graft_bin"))
       assert(j.count() === 1)
-    }
-  }
-
-  test("GraftExtensions registration injects the rule end-to-end") {
-    import org.apache.spark.sql.SparkSession
-    // withExtensions invokes the same GraftExtensions.apply the
-    // spark.sql.extensions config path loads reflectively (the config
-    // itself is static — readable only at context creation, so not
-    // testable against the shared spec context). getOrCreate builds a
-    // NEW session (reusing the context) only when no default session is
-    // registered — clear, build, then restore the spec session.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-      s2.conf.set(RangeJoinRule.widthKey, "10")
-      import s2.implicits._
-      val pts = Seq((-25L, "a"), (7L, "d")).toDF("p", "tag")
-      val iv = Seq((-30L, -20L, "lowneg"), (5L, 19L, "mid")).toDF("lo", "hi", "nm")
-      val j = pts.join(iv, $"p" >= $"lo" && $"p" <= $"hi")
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("NestedLoop"), s"config-injected rule must fire:\n$plan")
-      assert(j.select($"tag", $"nm").as[(String, String)].collect().toSet ===
-        Set(("a", "lowneg"), ("d", "mid")))
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 
@@ -109,7 +76,7 @@ class RangeJoinRuleSpec extends SparkSpec {
       val l = Seq((5, "x")).toDF("p", "tag")
       val r = Seq((0, 10, "i")).toDF("lo", "hi", "nm")
       val j = l.join(r, $"p" >= $"lo" && $"p" <= $"hi")
-      assert(!j.queryExecution.optimizedPlan.toString.contains("__graft_bin"))
+      assert(!uncut(j.queryExecution.optimizedPlan.toString).contains("__graft_bin"))
       assert(j.count() === 1)
     }
   }

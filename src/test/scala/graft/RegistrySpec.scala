@@ -17,7 +17,12 @@ class RegistrySpec extends SparkSpec {
 
   SparkEntry.registry.foreach { q =>
     test(s"${q.name} runs on sf0.001") {
-      val df = q.run(spark, sfDir)
+      // Built on its own child session, as the registry run loop builds
+      // it: the switches, temp views and streams it leaves go with the
+      // child, and the shared session's conf is left as it was.
+      val confBefore = spark.conf.getAll
+      val child = RegistryRun.querySession(spark, Nil)
+      val df = org.apache.spark.sql.graftbridge.withActive(child)(q.run(child, sfDir))
       // Materialize fully (same action Verify performs, minus the write).
       val n = df.count()
       assert(n >= 0)
@@ -42,6 +47,7 @@ class RegistrySpec extends SparkSpec {
         s"${q.name} left frames in the session cache")
       assert(spark.sparkContext.getPersistentRDDs.isEmpty,
         s"${q.name} left persistent RDDs behind after releaseRunState")
+      assert(spark.conf.getAll === confBefore, s"${q.name} changed the shared session's conf")
     }
   }
 }

@@ -89,7 +89,7 @@ class SkewEvidenceSpec extends SparkSpec {
       }
 
       // (1) plan-level evidence: the executed AQE plan handled the skew
-      val plan = joined.queryExecution.executedPlan.toString
+      val plan = uncut(joined.queryExecution.executedPlan.toString)
       assert(plan.contains("skew=true"), s"AQE skew split did not fire:\n$plan")
 
       // (2) metrics-level evidence: in the join's shuffle-read stage, no
@@ -149,7 +149,7 @@ class SkewEvidenceSpec extends SparkSpec {
         // else leaves df.queryExecution.executedPlan unfinalized
         df.collect()
       } finally spark.sparkContext.removeSparkListener(listener)
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = uncut(df.queryExecution.executedPlan.toString)
       assert(plan.contains("isFinalPlan=true"), s"$q: AQE plan not finalized:\n$plan")
       assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2,
         s"$q: final adaptive plan lost its broadcast joins:\n$plan")
@@ -195,7 +195,7 @@ class SkewEvidenceSpec extends SparkSpec {
       val joined = li.join(part,
         org.apache.spark.sql.functions.col("l_partkey") ===
           org.apache.spark.sql.functions.col("p_partkey"))
-      val optimized = joined.queryExecution.optimizedPlan.toString
+      val optimized = uncut(joined.queryExecution.optimizedPlan.toString)
       assert(optimized.contains("might_contain") || optimized.contains("bloom_filter_agg"),
         s"runtime bloom filter not injected:\n$optimized")
       // and the reduced join still returns the exact result
@@ -215,7 +215,7 @@ class SkewEvidenceSpec extends SparkSpec {
     // cartesian would be the classic k-means scale killer
     val df = SparkEntry.queries("c1_kmeans")(spark, sfDir)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = uncut(df.queryExecution.executedPlan.toString)
     assert(plan.contains("isFinalPlan=true"), s"c1: AQE plan not finalized:\n$plan")
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
       s"c1: final adaptive plan lost the centroid broadcast:\n$plan")
@@ -253,7 +253,7 @@ class SkewEvidenceSpec extends SparkSpec {
     // fact's `day` comes back as an inferred DATE partition column
     assert(rows.map(_.get(0).toString).sorted.toSeq
       === Seq("2024-01-03", "2024-01-04"))
-    val plan = joined.queryExecution.executedPlan.toString
+    val plan = uncut(joined.queryExecution.executedPlan.toString)
     assert(plan.contains("dynamicpruning"),
       s"no dynamic partition pruning subquery in the fact scan:\n$plan")
     // the scan must report pruning: selected partitions < total days

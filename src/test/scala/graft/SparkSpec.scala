@@ -8,26 +8,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.drainListenerBus
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt):
+  * the production session from `GraftSession.builder`, with a fresh
+  * warehouse per JVM so managed-table locations never outlive the
+  * in-memory catalog that knows about them. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fresh warehouse per JVM: managed-table locations must not outlive
-      // the in-memory catalog that knows about them
+    val s = GraftSession.builder("local[4]", shufflePartitions = 4, "graft-test")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-    // the staging-mode dial, read from the environment as
-    // GraftSession.builder does: SPARK_GRAFT_STAGE_MODE=parquet runs the
-    // suites against the durable staging mode meant for clusters
-    val s = sys.env.get("SPARK_GRAFT_STAGE_MODE")
-      .foldLeft(b)((acc, m) => acc.config(Scratch.StageModeKey, m))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -41,15 +30,17 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** Run `body` with `spark.graft.stage.mode` set to `mode`, then restore
     * the session's previous setting. */
-  protected def withStageMode[A](mode: String)(body: => A): A = {
-    val prev = spark.conf.getOption(Scratch.StageModeKey)
-    spark.conf.set(Scratch.StageModeKey, mode)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(Scratch.StageModeKey, v)
-      case None => spark.conf.unset(Scratch.StageModeKey)
-    }
-  }
+  protected def withStageMode[A](mode: String)(body: => A): A =
+    GraftSession.withConf(spark, Scratch.StageModeKey -> mode)(body)
+
+  /** A plan rendered in full. The session caps plan strings at
+    * `spark.sql.maxPlanStringLength`, and a `!contains` check on a cut
+    * string passes whatever the cut-off part holds. Renders with the
+    * test thread's active session (the shared one) at Spark's own
+    * default, the largest length the key accepts. */
+  protected def uncut(render: => String): String =
+    GraftSession.withConf(spark, "spark.sql.maxPlanStringLength" ->
+      org.apache.spark.unsafe.array.ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toString)(render)
 
   /** The properties of every Spark job `body` starts, read after a
     * listener-bus drain on both sides, so no earlier job is counted and

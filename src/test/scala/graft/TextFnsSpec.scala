@@ -92,8 +92,8 @@ class TextFnsSpec extends SparkSpec {
     val live = spark.range(4)
       .select(NfcNormalize.of(concat(col("id").cast("string"), lit("e\u0301"))).as("n"))
     assert(live.as[String].collect().toSeq === (0 until 4).map(i => s"$i\u00e9"))
-    val plan = live.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
+    val plan = uncut(live.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
     assert(plan.contains("nfc_normalize") && plan.contains("[codegen id :"),
       s"nfc_normalize must be codegen'd:\n$plan")
   }
