@@ -12,6 +12,22 @@ package graft
   * pokes ("set:key=value") at any position.
   */
 object Explain {
+
+  /** `df`'s formatted plan in full. The session caps plan strings at
+    * `spark.sql.maxPlanStringLength`, read from the thread's active
+    * session; the render lifts that cap on `df`'s own session, made
+    * active, to Spark's largest accepted length, so a plan file never
+    * loses the part past the cut. */
+  def render(df: org.apache.spark.sql.DataFrame): String = {
+    val s = df.sparkSession
+    org.apache.spark.sql.graftbridge.withActive(s) {
+      GraftSession.withConf(s, "spark.sql.maxPlanStringLength" ->
+        org.apache.spark.unsafe.array.ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toString) {
+        df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Explain <outDir> <tag> [set:k=v|query]...")
     val Array(outDir, tag) = args.take(2)
@@ -20,7 +36,7 @@ object Explain {
     val spark = RegistryRun.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     RegistryRun.run(spark, sfDir, steps) { (q, df) =>
-      val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      val plan = render(df)
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outDir, s"${q.name}_$tag.txt"), plan)
       println(s"[explain] wrote $outDir/${q.name}_$tag.txt (${plan.length} chars)")
     }

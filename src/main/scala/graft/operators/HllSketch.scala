@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -38,17 +40,32 @@ object HllSketch {
   private[operators] val alphaNum: String =
     s"CAST('${alphaNumValue.toString}' AS DOUBLE)"
 
+  /** Hex-char value of `hx` at 1-based `pos`, by the same instr
+    * arithmetic as [[hexOf]]. */
+  private def hexAt(hx: Column, pos: Column): Column =
+    call_function("instr", lit("0123456789abcdef"), hx.substr(pos, lit(1))) - 1
+
+  /** One value's packed register update, `bkt * 64 + rho` (bkt in
+    * 0..255, rho in 1..40; NULL for a NULL value): the md5 arithmetic
+    * every register computation shares, so the register table and the
+    * stats stores' dense arrays cannot drift apart. */
+  private[operators] def slot(value: Column): Column = {
+    val hx = md5(value.cast("string"))
+    val z = length(regexp_extract(hx.substr(3, 30), "^(0*)", 1))
+    val dd = hexAt(hx, z + 3)
+    val bkt = hexAt(hx, lit(1)) * 16 + hexAt(hx, lit(2))
+    val rho = least(z * 4 + when(dd >= 8, 0).when(dd >= 4, 1).when(dd >= 2, 2).otherwise(3) + 1,
+      lit(40))
+    bkt * 64 + rho
+  }
+
   /** Per-(group, bucket) max-rho register table for one batch of rows.
     * One partial-aggregated shuffle on (group, bkt); everything before
     * the aggregate is a narrow codegen'd projection. */
   def registers(df: DataFrame, group: Seq[String], value: Column): DataFrame =
-    df.select(group.map(col) :+ md5(value.cast("string")).as("hx"): _*)
-      .withColumn("bkt", expr(
-        s"(${hexOf.format("substr(hx,1,1)")}) * 16 + ${hexOf.format("substr(hx,2,1)")}"))
-      .withColumn("z", expr("length(regexp_extract(substr(hx,3,30), '^(0*)', 1))"))
-      .withColumn("dd", expr(hexOf.format("substr(hx, 3 + z, 1)")))
-      .withColumn("rho", expr(
-        "least(4*z + (CASE WHEN dd>=8 THEN 0 WHEN dd>=4 THEN 1 WHEN dd>=2 THEN 2 ELSE 3 END) + 1, 40)"))
+    df.select(group.map(col) :+ slot(value).as("s"): _*)
+      .withColumn("bkt", shiftright(col("s"), 6))
+      .withColumn("rho", col("s").bitwiseAND(63))
       .groupBy((group :+ "bkt").map(col): _*)
       .agg(max(col("rho")).as("mr"))
 
@@ -111,4 +128,34 @@ object HllSketch {
       val regs = registers(batch, group, value)
       state.fold(regs)(merge(_, regs, group))
     }
+}
+
+/** The dense form of one group's registers: a typed max over packed
+  * [[HllSketch.slot]]s into a 256-long buffer (slot b holds register
+  * b's max rho, absent = 0), updated in place. A NULL slot (a NULL
+  * value) is skipped; a group with no non-NULL value finishes as NULL,
+  * not as 256 zeros. */
+private[operators] final class DenseRegisters
+    extends Aggregator[java.lang.Integer, Array[Long], Array[Long]] {
+  override def zero: Array[Long] = new Array[Long](256)
+
+  override def reduce(b: Array[Long], s: java.lang.Integer): Array[Long] = {
+    if (s != null) {
+      val bkt = s >> 6
+      val rho = (s & 63).toLong
+      if (rho > b(bkt)) b(bkt) = rho
+    }
+    b
+  }
+
+  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < 256) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
+    a
+  }
+
+  override def finish(b: Array[Long]): Array[Long] = if (b.exists(_ > 0L)) b else null
+
+  override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
 }

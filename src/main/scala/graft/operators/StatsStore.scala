@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -31,6 +32,9 @@ import graft.Tables
   * stats stores. */
 object StatsStore {
 
+  /** The directory value Spark writes a NULL partition value under. */
+  private val DefaultPartition = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+
   private def aggs(cols: Seq[String]): Seq[Column] =
     (count(lit(1)).as("rows") +:
       cols.flatMap { c =>
@@ -38,34 +42,29 @@ object StatsStore {
           count(when(col(c).isNull, 1)).as(s"nulls_$c"))
       })
 
-  /** One row per partition: a dense 256-slot register array per tracked
-    * column (absent bucket = 0). Dense arrays make row equality
-    * deterministic (a map's iteration order is not) and let the
-    * estimate's harmonic sum run without an absent-register correction
-    * (slot 0 contributes exactly the 2^40 an empty register should). */
-  private def ndvRegCols(df: DataFrame, partCol: String, cols: Seq[String]): DataFrame =
-    cols.map { c =>
-      HllSketch.registers(
-          df.select(col(partCol), col(c)).filter(col(c).isNotNull),
-          Seq(partCol), col(c))
-        .groupBy(col(partCol))
-        .agg(map_from_entries(collect_list(struct(col("bkt"), col("mr")))).as("m"))
-        .select(col(partCol), expr(
-          "transform(sequence(0, 255), i -> coalesce(element_at(m, i), CAST(0 AS BIGINT)))")
-          .as(s"ndv_regs_$c"))
-    }.reduce(_.join(_, Seq(partCol), "full_outer"))
+  private val denseRegisters = udaf(new DenseRegisters, Encoders.INT)
 
   /** The stats rows for `df`: one row per `partCol` value carrying the
-    * exact row/min/max/null counts plus a 256-slot NDV register array
-    * per tracked column. This is the single computation every stats
-    * surface shares — [[rebuild]]/[[refreshPartitions]] land it as a
-    * plain parquet store; [[VersionedStats]] commits it transactionally
-    * WITH its table. */
+    * exact row/min/max/null counts plus a dense 256-slot NDV register
+    * array per tracked column (absent bucket = 0; NULL when the column
+    * has no non-NULL value in that partition). Dense arrays make row
+    * equality deterministic (a map's iteration order is not) and let
+    * the estimate's harmonic sum run without an absent-register
+    * correction (slot 0 contributes exactly the 2^40 an empty register
+    * should). One aggregate computes the whole row: each value's packed
+    * register update ([[HllSketch.slot]]) is projected before it, so the
+    * write costs one partial-aggregated shuffle on `partCol`.
+    *
+    * This is the single computation every stats surface shares —
+    * [[rebuild]]/[[refreshPartitions]] land it as a plain parquet store;
+    * [[VersionedStats]] commits it transactionally WITH its table. */
   def statsRows(df: DataFrame, partCol: String, cols: Seq[String]): DataFrame = {
-    val a = aggs(cols)
-    df.groupBy(col(partCol))
+    val slots = cols.map(c => HllSketch.slot(col(c)).as(s"__slot_$c"))
+    val a = aggs(cols) ++
+      cols.map(c => denseRegisters(col(s"__slot_$c")).as(s"ndv_regs_$c"))
+    df.select((partCol +: cols).distinct.map(col) ++ slots: _*)
+      .groupBy(col(partCol))
       .agg(a.head, a.tail: _*)
-      .join(ndvRegCols(df, partCol, cols), Seq(partCol), "left_outer")
   }
 
   /** Full rebuild: one column-pruned scan, one partition-grained
@@ -81,10 +80,10 @@ object StatsStore {
       .parquet(statsPath)
 
   /** Incremental refresh: recompute stats ONLY for `changed` partition
-    * values (the upsert's affected set) and dynamically overwrite just
-    * those stats rows — every other partition's stats ride untouched.
-    * Cost: a partition-pruned scan of the changed slice + a k-row
-    * write. */
+    * values (the upsert's affected set, NULL included) and dynamically
+    * overwrite just those stats rows — every other partition's stats
+    * ride untouched. Cost: a partition-pruned scan of the changed slice
+    * + a k-row write, two jobs (the aggregate's shuffle and the write). */
   def refreshPartitions(
       spark: SparkSession,
       tablePath: String,
@@ -96,23 +95,26 @@ object StatsStore {
     // Dynamic overwrite cannot express "now empty": a changed partition
     // whose recomputed slice has ZERO rows emits no file, so its stale
     // stats row would ride along and break the incremental-equals-
-    // rebuild contract after deletes/scrubs. The values actually present
-    // ride the stats write as an Observation (one stats row per present
-    // value, so the set holds at most |changed| values); the stale stats
-    // subdirectories are then dropped explicitly.
+    // rebuild contract after deletes/scrubs. The partition directories
+    // actually written ride the stats write as an Observation (one stats
+    // row per present value, so the set holds at most |changed| values);
+    // the stale stats subdirectories are then dropped explicitly. A NULL
+    // value is matched null-safely and lives in Spark's default-partition
+    // directory.
     val obs = org.apache.spark.sql.Observation()
+    val dirName = coalesce(col(partCol).cast("string"), lit(DefaultPartition))
     val slice = Tables.parquet(spark, tablePath)
-      .filter(col(partCol).isin(changed: _*)) // partition-pruned scan
+      .filter(Upsert.inPartitions(Seq(partCol), changed.map(Seq(_)))) // partition-pruned scan
     statsRows(slice, partCol, cols)
-      .observe(obs, collect_set(col(partCol).cast("string")).as("present"))
+      .observe(obs, collect_set(dirName).as("present"))
       .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
       .parquet(statsPath)
     val present = obs.get("present").asInstanceOf[scala.collection.Seq[String]].toSet
-    val gone = changed.map(String.valueOf).filterNot(present.contains)
+    val gone = changed.map(v => if (v == null) DefaultPartition else String.valueOf(v))
+      .filterNot(present.contains)
     if (gone.nonEmpty) {
       import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       val root = new Path(statsPath)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       gone.foreach { v =>

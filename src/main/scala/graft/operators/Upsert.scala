@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -100,8 +100,12 @@ object Upsert {
 
   /** Upsert `delta` into the parquet table at `path` (creating it if
     * absent). When `partitionBy` is set, only partitions present in the
-    * delta are read+rewritten (dynamic overwrite); unpartitioned tables
-    * are rewritten whole via a staged write + atomic-swap protocol
+    * delta are read+rewritten (dynamic overwrite): the action that stages
+    * the delta also collects its partition values (an `Observation`), and
+    * the base is read through a null-safe partition predicate
+    * ([[inPartitions]]), so finding the affected set costs no job of its
+    * own and a NULL partition value keeps its other rows. Unpartitioned
+    * tables are rewritten whole via a staged write + atomic-swap protocol
     * (SURVEY.md §7.4 hard part #1).
     *
     * Crash safety without a transaction log: every merge result is fully
@@ -136,22 +140,47 @@ object Upsert {
     recoverSwap(fs, path)
     if (partitionBy.nonEmpty) recoverPartitionedStage(spark, path, partitionBy)
     if (!fs.exists(fsPath)) create(fs, path, delta, partitionBy)
-    else graft.Scratch.withStaged(spark, delta, "upsert-delta") { d =>
-      if (partitionBy.nonEmpty) {
-        // Only touch partitions the delta lands in. The merge is staged
-        // to disk first (not localCheckpoint: disk-backed, sized by the
-        // affected partitions only), then read back for the dynamic
-        // overwrite so the table is never read and rewritten in one job.
-        val affected = d.select(partitionBy.map(col).toIndexedSeq: _*).distinct()
-        val base = Tables.parquet(spark, path).join(broadcast(affected), partitionBy, "left_semi")
+    else if (partitionBy.nonEmpty) {
+      // Only touch partitions the delta lands in. The staging action
+      // collects them (one entry per partition value) as it stages the
+      // delta, so no extra job finds them, and the base is read through
+      // a static, null-safe partition predicate the file listing prunes
+      // with. The merge is staged to disk (not localCheckpoint:
+      // disk-backed, sized by the affected partitions only), then read
+      // back for the dynamic overwrite so the table is never read and
+      // rewritten in one job.
+      val touched = org.apache.spark.sql.Observation()
+      val observed = delta.observe(touched,
+        collect_set(struct(partitionBy.map(col): _*)).as("parts"))
+      graft.Scratch.withStaged(spark, observed, "upsert-delta") { d =>
+        val parts = touched.get("parts").asInstanceOf[scala.collection.Seq[Row]]
+          .map(_.toSeq).toSeq
+        val base = Tables.parquet(spark, path).filter(inPartitions(partitionBy, parts))
         val stage = new org.apache.hadoop.fs.Path(path + "__stage")
         fs.delete(stage, true)
         merge(base, d, keys).write.mode(SaveMode.Overwrite).parquet(stage.toString)
         applyPartitionedStage(spark, path, partitionBy)
-      } else {
-        stagedRewrite(spark, path) { base => merge(base, d, keys) }
       }
+    } else graft.Scratch.withStaged(spark, delta, "upsert-delta") { d =>
+      stagedRewrite(spark, path) { base => merge(base, d, keys) }
     }
+  }
+
+  /** Rows whose `partitionBy` values equal one of `values`' tuples,
+    * compared with `<=>` so a NULL partition value matches its own
+    * (`__HIVE_DEFAULT_PARTITION__`) partition; `lit(false)` when there is
+    * no tuple. A static predicate over partition columns only, so a scan
+    * prunes its file listing with it. The disjunction is built as a
+    * balanced tree: its depth grows with log(|values|), not |values|. */
+  private[operators] def inPartitions(partitionBy: Seq[String], values: Seq[Seq[Any]]): Column = {
+    def any(ps: Seq[Column]): Column = ps match {
+      case Seq() => lit(false)
+      case Seq(p) => p
+      case _ =>
+        val (l, r) = ps.splitAt(ps.size / 2)
+        any(l) || any(r)
+    }
+    any(values.map(v => partitionBy.zip(v).map { case (c, x) => col(c) <=> lit(x) }.reduce(_ && _)))
   }
 
   /** Create the missing table at `path` as a swap lands a rewrite:

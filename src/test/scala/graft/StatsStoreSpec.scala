@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import graft.operators.{StatsStore, Versioned}
+import graft.operators.{HllSketch, StatsStore, Versioned}
 
 /** Incremental stats: refresh touches only the changed partitions'
   * stats rows; incremental ≡ rebuild; checked commits refuse loudly. */
@@ -144,6 +146,92 @@ class StatsStoreSpec extends SparkSpec {
     val actual = spark.read.parquet(tbl).join(spark.read.parquet(tblB), "k").count()
     assert(est > 0 && math.abs(est - actual) / actual < 0.5,
       s"join-size estimate $est vs actual $actual")
+  }
+
+  /** The stats rows as a row/min/max groupBy joined to one register
+    * groupBy per tracked column: the formulation `statsRows` computes in
+    * one aggregate, kept here as the reference it must equal. */
+  private def joinedStatsRows(df: DataFrame, partCol: String, cols: Seq[String]): DataFrame = {
+    val a = count(lit(1)).as("rows") +: cols.flatMap { c =>
+      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
+        count(when(col(c).isNull, 1)).as(s"nulls_$c"))
+    }
+    val regs = cols.map { c =>
+      HllSketch.registers(df.select(col(partCol), col(c)).filter(col(c).isNotNull),
+          Seq(partCol), col(c))
+        .groupBy(col(partCol))
+        .agg(map_from_entries(collect_list(struct(col("bkt"), col("mr")))).as("m"))
+        .select(col(partCol), expr(
+          "transform(sequence(0, 255), i -> coalesce(element_at(m, i), CAST(0 AS BIGINT)))")
+          .as(s"ndv_regs_$c"))
+    }.reduce(_.join(_, Seq(partCol), "full_outer"))
+    df.groupBy(col(partCol)).agg(a.head, a.tail: _*).join(regs, Seq(partCol), "left_outer")
+  }
+
+  private def sortedRows(df: DataFrame) = df.orderBy("part").collect().map(_.toString).toSeq
+
+  test("statsRows equals the joined per-column formulation: rows, schema, NULLs") {
+    // two tracked columns; NULL values in both; partition c's s is all NULL
+    val df = spark.range(600).selectExpr(
+      "element_at(array('a', 'b', 'c'), CAST(id % 3 AS INT) + 1) AS part",
+      "CASE WHEN id % 7 = 0 THEN NULL ELSE id % 250 END AS k",
+      "CASE WHEN id % 3 = 2 OR id % 5 = 0 THEN NULL ELSE concat('s', id % 90) END AS s")
+    val fused = StatsStore.statsRows(df, "part", Seq("k", "s"))
+    val ref = joinedStatsRows(df, "part", Seq("k", "s"))
+    assert(fused.schema === ref.schema)
+    assert(sortedRows(fused) === sortedRows(ref))
+    val c = fused.filter(col("part") === "c").select("ndv_regs_s", "ndv_regs_k").collect().head
+    assert(c.isNullAt(0), "an all-NULL column's registers are NULL, not 256 zeros")
+    assert(c.getSeq[Long](1).count(_ > 0L) > 0)
+  }
+
+  test("statsRows keeps the registers of the NULL partition value") {
+    // the joined formulation drops them: its join on a NULL key never
+    // matches, so that partition's registers read NULL there
+    val df = spark.range(300).selectExpr(
+      "CASE WHEN id % 2 = 0 THEN NULL ELSE 'a' END AS part", "id % 120 AS k")
+    val row = StatsStore.statsRows(df, "part", Seq("k")).filter(col("part").isNull)
+      .select("rows", "ndv_regs_k").collect().head
+    assert(row.getLong(0) === 150L)
+    val expected = new Array[Long](256)
+    HllSketch.registers(df.filter(col("part").isNull), Nil, col("k")).collect()
+      .foreach(r => expected(r.getInt(0)) = r.getInt(1).toLong)
+    assert(row.getSeq[Long](1) === expected.toSeq)
+  }
+
+  test("refreshPartitions refreshes the NULL partition: incremental ≡ rebuild") {
+    val root = Files.createTempDirectory("graft-stats-null").toString
+    val tbl = s"$root/t"; val st = s"$root/stats"
+    Seq((1L, Some("a"), 10.0), (2L, None, 20.0), (3L, None, 30.0))
+      .toDF("id", "part", "v").write.partitionBy("part").parquet(tbl)
+    StatsStore.rebuild(spark, tbl, st, "part", Seq("v"))
+    Seq((4L, 40.0)).toDF("id", "v").write.mode("append")
+      .parquet(s"$tbl/part=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}")
+    StatsStore.refreshPartitions(spark, tbl, st, "part", Seq("v"), Seq(null))
+    val n = StatsStore.read(spark, st).filter(col("part").isNull)
+      .select(col("rows"), col("max_v")).as[(Long, Double)].collect().head
+    assert(n === ((3L, 40.0)))
+    StatsStore.rebuild(spark, tbl, s"$root/stats2", "part", Seq("v"))
+    assert(sortedRows(StatsStore.read(spark, st)) === sortedRows(StatsStore.read(spark, s"$root/stats2")))
+
+    // the NULL partition's data goes away: its stats row goes with it
+    val fs = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(s"$tbl/part=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"), true)
+    StatsStore.refreshPartitions(spark, tbl, st, "part", Seq("v"), Seq(null, "a"))
+    assert(StatsStore.read(spark, st).select("part").as[String].collect().toSeq === Seq("a"))
+  }
+
+  test("one refreshPartitions runs 2 jobs: the aggregate's shuffle and the write") {
+    val root = Files.createTempDirectory("graft-stats-refresh-jobs").toString
+    val tbl = s"$root/t"; val st = s"$root/stats"
+    Seq((1L, "a", 10L, "x"), (2L, "a", 20L, "y"), (3L, "b", 30L, "z"))
+      .toDF("id", "part", "v", "w").write.partitionBy("part").parquet(tbl)
+    StatsStore.rebuild(spark, tbl, st, "part", Seq("v", "w"))
+    Seq((4L, 40L, "q")).toDF("id", "v", "w").write.mode("append").parquet(s"$tbl/part=a")
+    val jobs = jobsOf(StatsStore.refreshPartitions(spark, tbl, st, "part", Seq("v", "w"), Seq("a")))
+    assert(jobs.size === 2, "one aggregate per stats write, whatever the tracked columns")
+    assert(StatsStore.read(spark, st).filter(col("part") === "a")
+      .select(col("rows"), col("max_v")).as[(Long, Long)].collect().head === ((3L, 40L)))
   }
 
   test("commitChecked refuses violating deltas and leaves the table untouched") {

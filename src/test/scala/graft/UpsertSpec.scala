@@ -76,6 +76,44 @@ class UpsertSpec extends SparkSpec {
     assert(out === Seq((1, "p1", 9), (2, "p1", 1), (3, "p2", 1)))
   }
 
+  test("partitioned upsert into the NULL partition keeps that partition's other rows") {
+    // an equi-match on the affected partitions never matches NULL, so the
+    // dynamic overwrite would replace the NULL partition with the delta alone
+    val path = tempDir()
+    Upsert.upsertParquet(spark, path,
+      Seq((1, Some("p1"), 1), (2, None, 1), (3, None, 1)).toDF("k", "part", "v"),
+      Seq("k"), partitionBy = Seq("part"))
+    Upsert.upsertParquet(spark, path, Seq((2, None: Option[String], 9)).toDF("k", "part", "v"),
+      Seq("k"), partitionBy = Seq("part"))
+    assert(readPartitioned(path) === Seq((1, "p1", 1), (2, null, 9), (3, null, 1)))
+  }
+
+  test("a partitioned merge into an existing table runs 4 jobs: stage, broadcast, merge, apply") {
+    val path = tempDir()
+    Upsert.upsertParquet(spark, path,
+      Seq((1, "p1", 1), (2, "p1", 1), (3, "p2", 1)).toDF("k", "part", "v"),
+      Seq("k"), partitionBy = Seq("part"))
+    val delta = Seq((1, "p1", 9), (4, "p3", 9)).toDF("k", "part", "v")
+    val jobs = jobsOf(Upsert.upsertParquet(spark, path, delta, Seq("k"), partitionBy = Seq("part")))
+    assert(jobs.size === 4, "the affected partitions ride the staging: no job of their own")
+    assert(readPartitioned(path) === Seq((1, "p1", 9), (2, "p1", 1), (3, "p2", 1), (4, "p3", 9)))
+  }
+
+  test("a partitioned upsert of an empty delta returns and changes nothing, in both stage modes") {
+    for (mode <- Seq("local", "parquet")) withStageMode(mode) {
+      val path = tempDir()
+      Upsert.upsertParquet(spark, path,
+        Seq((1, "p1", 1), (2, "p2", 1)).toDF("k", "part", "v"), Seq("k"), partitionBy = Seq("part"))
+      Upsert.upsertParquet(spark, path, Seq.empty[(Int, String, Int)].toDF("k", "part", "v"),
+        Seq("k"), partitionBy = Seq("part"))
+      Upsert.upsertParquet(spark, path,
+        spark.range(5).selectExpr("CAST(id AS INT) AS k", "'p1' AS part", "9 AS v").filter("k < 0"),
+        Seq("k"), partitionBy = Seq("part"))
+      assert(readPartitioned(path) === Seq((1, "p1", 1), (2, "p2", 1)), s"$mode: an empty delta changed the table")
+      assert(stagedDeltaDirs().isEmpty, s"$mode: a staged delta directory was left behind")
+    }
+  }
+
   // ---- crash injection, partitioned path: stage write → dynamic
   // overwrite → drop stage. A complete stage must roll FORWARD (it can
   // hold the only copy of partially-deleted partitions); an incomplete
